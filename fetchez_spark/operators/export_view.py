@@ -403,9 +403,13 @@ class ParquetExportView(IncrementalView):
         exporter per dir (serialized by a lock file); crash leftovers of
         an unpublished version are cleaned on the next attempt."""
         lock_path = os.path.join(self.export_dir, _META, "LOCK")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        # O_RDWR without O_TRUNC: a refresh must not rewrite the lock file
+        fd = os.open(lock_path, os.O_CREAT | os.O_RDWR)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
             return self._refresh_locked(spark)
+        finally:
+            os.close(fd)
 
     def _refresh_locked(self, spark: SparkSession) -> dict[str, Any]:
         src = self.source

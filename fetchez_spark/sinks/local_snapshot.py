@@ -5,15 +5,17 @@ Layout (one directory per table)::
     <table_dir>/
       VERSION                      # name of current manifest (atomic os.replace)
       manifests/snap-0000000001.json
-      manifests/lists/list-<sha1>.json   # content-addressed per-bucket file lists
+      manifests/lists/list-<sha1>.json   # content-addressed file lists, one per commit
       data/snap-0000000001/_bucket=<b>/part-*.parquet
 
-Manifests reference per-bucket file lists as immutable content-addressed
-blobs ("ref:list-<sha1>.json"): a commit writes blobs only for buckets it
-touched and copies ~50-byte ref strings for the rest, so per-commit
-metadata work is O(touched buckets) and total metadata writes over a
-stream's life are O(n), not O(n^2) (the Iceberg manifest-list shape).
-Committed batch tokens are a bounded sliding window for the same reason.
+Manifests reference per-bucket file lists in immutable content-addressed
+blobs: a commit packs every list it changed into ONE blob and stores
+"ref:list-<sha1>.json#<bucket>" for each, copying the ~50-byte ref strings
+of untouched buckets, so a commit writes its data files, one manifest and
+at most one list blob, and total metadata writes over a stream's life are
+O(n), not O(n^2) (the Iceberg manifest-list shape).  Committed batch
+tokens are a bounded sliding window for the same reason.  Data dirs hold
+no ``_SUCCESS`` markers: the commit point is the VERSION swap.
 
 Manifest (the "snapshot"): schema, parent pointer, per-bucket base-file and
 delta-file lists, committed batch tokens, row stats.  A commit is:
@@ -261,6 +263,62 @@ def _filter_records(
         if ok:
             out.append(rec)
     return out
+
+
+def _blob_name(ref: str) -> str:
+    """``'ref:<blob>'`` or ``'ref:<blob>#<entry>'`` -> ``'<blob>'``: the
+    one parser every reader of a blob ref goes through (resolve, fsck,
+    expire GC, clone)."""
+    return ref[len("ref:"):].partition("#")[0]
+
+
+def _blob_entry(body, ref: str):
+    """What ``ref`` names inside its parsed blob: one entry of a commit's
+    list pack, or the whole body for an entry-less ref."""
+    _, sep, entry = ref.partition("#")
+    return body[entry] if sep else body
+
+
+def _data_writer(rows: DataFrame):
+    """The writer every table data write starts from: overwrite into a
+    snapshot-unique dir, and no ``_SUCCESS`` marker -- the commit point
+    is the VERSION swap, and nothing reads the marker."""
+    return rows.write.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    )
+
+
+_BYTE_UNITS = {"": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
+               "t": 4, "tb": 4, "p": 5, "pb": 5}
+
+
+def _conf_bytes(text: str) -> int:
+    """A Spark byte-size conf value ('4194304b', '4m', '1g') in bytes."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", text.lower())
+    return int(m.group(1)) * 1024 ** _BYTE_UNITS[m.group(2)]
+
+
+def _open_cost_partitions(df: DataFrame) -> int | None:
+    """Partitions that keep each output file of ``df`` at least Spark's
+    per-file open cost (``spark.sql.files.openCostInBytes``) of input:
+    ``ceil(input bytes / open cost)``, at least 1.  None when ``df``
+    scans no files, or files that are not local."""
+    from urllib.parse import unquote, urlparse
+
+    uris = df.inputFiles()
+    if not uris:
+        return None
+    total = 0
+    for uri in uris:
+        u = urlparse(uri)
+        if u.scheme not in ("", "file"):
+            return None
+        try:
+            total += os.path.getsize(unquote(u.path))
+        except OSError:
+            return None
+    cost = _conf_bytes(df.sparkSession.conf.get("spark.sql.files.openCostInBytes"))
+    return max(1, -(-total // max(cost, 1)))
 
 
 _AQE_EMPTY_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
@@ -535,7 +593,7 @@ class LocalSnapshotSink(SnapshotSink):
         # records at that moment
         self._session_expectations = list(self.expectations)
         # immutable content-addressed file-list blobs -> safe to cache
-        self._list_cache: dict[str, list[str]] = {}
+        self._list_cache: dict[str, Any] = {}
         os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
         os.makedirs(os.path.join(table_dir, "data"), exist_ok=True)
         # policy knobs THIS constructor explicitly set (non-default):
@@ -702,16 +760,22 @@ class LocalSnapshotSink(SnapshotSink):
         raise last_err
 
     # ------------------------------------------------- file-list blob refs
-    # Per-bucket file lists are content-addressed blobs under
-    # manifests/lists/, and manifests store "ref:<blob>" strings instead of
-    # inline lists (the Iceberg manifest-list shape).  Consequences:
-    # * a commit writes blobs ONLY for the buckets it touched; untouched
+    # Per-bucket file lists live in content-addressed blobs under
+    # manifests/lists/, and manifests store ref strings instead of inline
+    # lists (the Iceberg manifest-list shape).  A commit packs EVERY list
+    # it changed into ONE blob ``list-<sha1>.json`` ({entry: sorted list})
+    # and refers to each as "ref:list-<sha1>.json#<bucket>".
+    # Consequences:
+    # * a commit writes at most one list blob, whatever the number of
+    #   buckets it touched (one write inside the commit lock); untouched
     #   buckets' refs are copied as ~50-byte strings, so per-commit
     #   metadata work is O(touched), not O(all files) -- the difference
     #   between O(n) and O(n^2) total metadata writes over a stream's life;
     # * bucket-pruned reads resolve ONLY the requested buckets' refs;
-    # * content addressing (sha1 of the list) dedups identical lists
-    #   across snapshots for free; blobs are immutable -> cached.
+    # * content addressing dedups identical packs; blobs are immutable ->
+    #   cached.
+    # Older tables hold per-bucket blobs ("ref:list-<sha1>.json", a bare
+    # list) or inline lists; both keep resolving.
     def _lists_dir(self) -> str:
         return os.path.join(self.table_dir, "manifests", "lists")
 
@@ -731,8 +795,13 @@ class LocalSnapshotSink(SnapshotSink):
             os.replace(tmp, path)
         return blob
 
+    def _load_blob(self, blob: str):
+        with open(os.path.join(self._lists_dir(), blob)) as f:
+            return json.loads(f.read())
+
     def _pack_list(self, files: list[str]):
-        """list -> 'ref:<blob>' (written once, content-addressed)."""
+        """list -> 'ref:<blob>' (written once, content-addressed): one
+        bare-list blob, the per-bucket encoding of older tables."""
         if not files:
             return []
         blob = self._write_blob_body(json.dumps(sorted(files)), "list")
@@ -743,25 +812,56 @@ class LocalSnapshotSink(SnapshotSink):
         return f"ref:{blob}"
 
     def _resolve_list(self, val) -> list[str]:
-        """'ref:<blob>' | inline list -> list (inline = pre-ref manifests)."""
+        """'ref:<pack>#<entry>' | 'ref:<list blob>' | inline list -> list."""
         if isinstance(val, list):
             return val
-        blob = val[len("ref:"):]
+        blob = _blob_name(val)
         cached = self._list_cache.get(blob)
         if cached is None:
-            with open(os.path.join(self._lists_dir(), blob)) as f:
-                cached = json.loads(f.read())
-            self._list_cache[blob] = cached
-        return list(cached)
+            cached = self._list_cache[blob] = self._load_blob(blob)
+        return list(_blob_entry(cached, val))
 
     def _resolve_map(self, m: dict, buckets: list[str] | None = None) -> dict[str, list[str]]:
         keys = m.keys() if buckets is None else [b for b in buckets if b in m]
         return {b: self._resolve_list(m[b]) for b in keys}
 
-    def _pack_map(self, m: dict) -> dict:
-        return {
-            b: (self._pack_list(v) if isinstance(v, list) else v) for b, v in m.items()
-        }
+    def _pack_maps(self, *maps: dict) -> list[dict]:
+        """Pack every non-empty inline list of ``maps`` (one commit's
+        'files', 'deltas', ...) into ONE list blob; each becomes
+        'ref:<blob>#<bucket>' (the bucket suffixed with the map's index
+        when an earlier map holds a different list for it).  Refs and
+        empty lists pass through, so untouched buckets keep their refs."""
+        body: dict[str, list[str]] = {}
+        entries: list[dict[str, str]] = []
+        for i, m in enumerate(maps):
+            entry = {}
+            for b, v in m.items():
+                if isinstance(v, list) and v:
+                    files = sorted(v)
+                    key = str(b)
+                    if body.setdefault(key, files) != files:
+                        key = f"{b}.{i}"
+                        body[key] = files
+                    entry[b] = key
+            entries.append(entry)
+        if not body:
+            return [dict(m) for m in maps]
+        blob = self._write_blob_body(json.dumps(body, sort_keys=True), "list")
+        self._list_cache[blob] = body
+        return [
+            {b: (f"ref:{blob}#{entry[b]}" if b in entry else v) for b, v in m.items()}
+            for m, entry in zip(maps, entries)
+        ]
+
+    def _unconsumed(self, m: dict, consumed: set[str]) -> dict:
+        """``m`` minus the ``consumed`` files; buckets that lose none keep
+        their ref (so the next pack leaves them out)."""
+        out = {}
+        for b, v in m.items():
+            files = self._resolve_list(v)
+            kept = [f for f in files if f not in consumed]
+            out[b] = v if len(kept) == len(files) else kept
+        return out
 
     def _count_files(self, m: dict) -> int:
         return sum(len(self._resolve_list(v)) for v in m.values())
@@ -1071,11 +1171,12 @@ class LocalSnapshotSink(SnapshotSink):
             shuffle_keys.append(F.pmod(F.xxhash64(F.col(INTERNAL_SEQ)), F.lit(fanout)))
         with _observed_write_conf(df.sparkSession):
             writer = (
-                self._align(df, schema)
-                .select(*out_cols)
-                .repartition(max(n_partitions, 1) * max(fanout, 1), *shuffle_keys)
-                .write.partitionBy(_BUCKET)
-                .mode("overwrite")
+                _data_writer(
+                    self._align(df, schema)
+                    .select(*out_cols)
+                    .repartition(max(n_partitions, 1) * max(fanout, 1), *shuffle_keys)
+                )
+                .partitionBy(_BUCKET)
                 # transient files (folded away at the next compaction):
                 # skip dictionary encoding -- the near-unique text payload
                 # defeats it anyway, and the attempt costs ~15% of encode
@@ -1299,7 +1400,7 @@ class LocalSnapshotSink(SnapshotSink):
             ).sortWithinPartitions(F.col(_BUCKET), cluster_expr)
         snap_dir = self._snap_payload_dir(sid)
         with _observed_write_conf(df.sparkSession):
-            rows.write.partitionBy(_BUCKET).mode("overwrite").parquet(snap_dir)
+            _data_writer(rows).partitionBy(_BUCKET).parquet(snap_dir)
         return self._scan_partitioned_output(snap_dir)
 
     # Fold-shape gate (see _dedup_write_bucketed's combine_first): above
@@ -1521,9 +1622,9 @@ class LocalSnapshotSink(SnapshotSink):
         if purge_before is not None:
             rows = rows.filter(self._tombstone_keep_cond(purge_before))
         snap_dir = self._snap_payload_dir(sid)
-        rows.select(*[f.name for f in schema.fields], _BUCKET).write.partitionBy(
-            _BUCKET
-        ).mode("overwrite").parquet(snap_dir)
+        _data_writer(
+            rows.select(*[f.name for f in schema.fields], _BUCKET)
+        ).partitionBy(_BUCKET).parquet(snap_dir)
         return self._scan_partitioned_output(snap_dir)
 
     def _write_flat(
@@ -1539,9 +1640,14 @@ class LocalSnapshotSink(SnapshotSink):
         are NOT transient (CoW change sidecars live as long as the
         snapshot; the delta_compression contract is transience)."""
         snap_dir = self._snap_payload_dir(sid)
-        writer = self._align(df, schema).select(
-            *[f.name for f in schema.fields]
-        ).write.mode("overwrite")
+        rows = self._align(df, schema).select(*[f.name for f in schema.fields])
+        # a batch of many small input files would otherwise write one
+        # small file per input file (one scan task each); coalesce never
+        # adds partitions, so large inputs keep Spark's split plan
+        n = _open_cost_partitions(df)
+        if n is not None:
+            rows = rows.coalesce(n)
+        writer = _data_writer(rows)
         if use_delta_codec:
             # transient delta files: no dictionary attempt (see
             # _write_bucketed) -- persistent files (CoW change sidecars,
@@ -4229,16 +4335,14 @@ class LocalSnapshotSink(SnapshotSink):
                     # batches that actually violate): persist them with the
                     # violated-expectation names for triage
                     qdir = os.path.join(self.table_dir, "quarantine", sid)
-                    (
+                    _data_writer(
                         quarantine_src.filter(
                             F.col("_exp_quar") & ~F.col("_too_late")
                         )
                         .withColumnRenamed("_exp_viol", "_violations")
                         .drop("_exp_fail", "_exp_quar", "_exp_drop", "_too_late")
                         .withColumn("_batch_token", F.lit(token))
-                        .write.mode("overwrite")
-                        .parquet(qdir)
-                    )
+                    ).parquet(qdir)
                     metrics["quarantine_dir"] = qdir
         # the stats job runs whenever lineage wants it (collect_metrics) OR
         # the fast path skipped the Observations (not use_observe): the
@@ -4480,6 +4584,11 @@ class LocalSnapshotSink(SnapshotSink):
             if self.mode == "cow":
                 for b in touched:
                     delta_bytes[str(b)] = 0  # folded into the rewritten base
+            # ONE list blob for the commit: base and delta lists plus the
+            # CoW change sidecar
+            files_, deltas_, changes_ = self._pack_maps(
+                files_, deltas_, {"change_files": change_files}
+            )
             return {
                 "snapshot_id": sid,
                 "parent": base["snapshot_id"],
@@ -4492,8 +4601,8 @@ class LocalSnapshotSink(SnapshotSink):
                     else {}
                 ),
                 "num_buckets": int(base.get("num_buckets", nb)),
-                "files": self._pack_map(files_),
-                "deltas": self._pack_map(deltas_),
+                "files": files_,
+                "deltas": deltas_,
                 "committed_batches": committed,
                 "token_seq": token_seq,
                 "delta_bytes": delta_bytes,
@@ -4517,11 +4626,7 @@ class LocalSnapshotSink(SnapshotSink):
                 },
                 # CoW precise change set (read_changes uses it over the
                 # base-file diff); MoR commits have none
-                **(
-                    {"change_files": self._pack_list(change_files)}
-                    if change_files
-                    else {}
-                ),
+                **(changes_ if change_files else {}),
                 # per-commit event-time stats for THIS commit's change
                 # files: immutable metadata the windowed incremental read
                 # prunes from without re-opening footers (Iceberg
@@ -4893,12 +4998,16 @@ class LocalSnapshotSink(SnapshotSink):
                 if len(committed) > self.max_committed_tokens:
                     for k in list(committed)[: len(committed) - self.max_committed_tokens]:
                         del committed[k]
+                packed, imported = self._pack_maps(
+                    deltas_,
+                    {"imported_files": sorted(self._imported_set(latest) | set(files))},
+                )
                 manifest = {
                     **latest,
                     "snapshot_id": sid,
                     "parent": latest["snapshot_id"],
                     "schema": new_schema.jsonValue(),
-                    "deltas": self._pack_map(deltas_),
+                    "deltas": packed,
                     "committed_batches": committed,
                     "delta_bytes": delta_bytes,
                     # the EVER-imported set: dedup memory for incremental
@@ -4907,9 +5016,7 @@ class LocalSnapshotSink(SnapshotSink):
                     # rewritten only by import commits) -- the same order
                     # as the manifest's own file metadata, and the cost of
                     # "never adopt the same file twice" being exact.
-                    "imported_files": self._pack_list(
-                        sorted(self._imported_set(latest) | set(files))
-                    ),
+                    **imported,
                     "stats": {
                         "delta_files": self._count_files(deltas_),
                         "delta_commits": int(
@@ -5035,13 +5142,8 @@ class LocalSnapshotSink(SnapshotSink):
         straggler tail (guide 2.6)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        if self._compact_pool is None:
-            def _mark_tid() -> None:
-                self._compact_tid = threading.get_ident()
-
-            self._compact_pool = ThreadPoolExecutor(
-                1, thread_name_prefix="fetchez-compact", initializer=_mark_tid
-            )
+        def _mark_tid() -> None:
+            self._compact_tid = threading.get_ident()
 
         def _run() -> dict[str, Any]:
             return self.compact(
@@ -5055,6 +5157,11 @@ class LocalSnapshotSink(SnapshotSink):
                 # another stream thread launched between our in-flight
                 # check and here -- first writer wins, one fold at a time
                 return
+            if self._compact_pool is None:
+                # created lazily, shut down by finish_maintenance()
+                self._compact_pool = ThreadPoolExecutor(
+                    1, thread_name_prefix="fetchez-compact", initializer=_mark_tid
+                )
             fut = self._compact_pool.submit(_run)
             fut._fz_ctx = (bool(size_trigger), int(total_db))
             self._compact_future = fut
@@ -5098,8 +5205,21 @@ class LocalSnapshotSink(SnapshotSink):
     def finish_maintenance(self) -> dict[str, Any] | None:
         """Barrier for merge-triggered background maintenance: blocks until
         any in-flight fold commits and returns its result dict (None when
-        nothing was pending).  Fold errors re-raise here."""
-        return self._harvest_compact(None)
+        nothing was pending).  Fold errors re-raise here.  The idle fold
+        thread is then shut down (the next merge-triggered fold starts a
+        new one), so a finished replay or stream leaves no thread behind."""
+        try:
+            return self._harvest_compact(None)
+        finally:
+            with self._compact_mu:
+                pool = None
+                if self._compact_future is None:
+                    # a fold another stream thread launched since the
+                    # join keeps its pool until the next barrier
+                    pool, self._compact_pool = self._compact_pool, None
+            if pool is not None:
+                pool.shutdown(wait=True)
+                self._compact_tid = None
 
     def compact(
         self,
@@ -5251,27 +5371,24 @@ class LocalSnapshotSink(SnapshotSink):
             consumed = set(delta_files)
             with self._commit_lock():
                 latest = self.manifest()
-                deltas_ = {
-                    b: [f for f in self._resolve_list(v) if f not in consumed]
-                    for b, v in latest.get("deltas", {}).items()
-                }
+                deltas_ = self._unconsumed(latest.get("deltas", {}), consumed)
                 if int(latest.get("num_buckets", cur["num_buckets"])) != int(
                     cur["num_buckets"]
                 ):
                     # a rebucket() landed mid-consolidation: our outputs are
                     # clustered by the OLD bucketing -- flat-list them
-                    deltas_[_FLAT] = deltas_.get(_FLAT, []) + [
+                    deltas_[_FLAT] = self._resolve_list(deltas_.get(_FLAT, [])) + [
                         f for fs in written.values() for f in fs
                     ]
                 else:
                     for b, fs in written.items():
-                        deltas_[b] = deltas_.get(b, []) + list(fs)
+                        deltas_[b] = self._resolve_list(deltas_.get(b, [])) + list(fs)
                 manifest = {
                     **latest,
                     "snapshot_id": sid,
                     "parent": latest["snapshot_id"],
-                    "deltas": self._pack_map(deltas_),
-                    "delta_bytes": self._sizes_by_bucket(deltas_),
+                    "deltas": self._pack_maps(deltas_)[0],
+                    "delta_bytes": self._sizes_by_bucket(self._resolve_map(deltas_)),
                     # stats built from scratch: a minor compact is a pure
                     # maintenance commit, so it must NOT inherit the parent
                     # merge's rows_in/rows_upserted/rows_deleted (catalog
@@ -5577,10 +5694,7 @@ class LocalSnapshotSink(SnapshotSink):
                             "maintenance job per table"
                         )
             new_files = dict(latest["files"])
-            new_deltas = {
-                b: [f for f in self._resolve_list(v) if f not in consumed]
-                for b, v in latest.get("deltas", {}).items()
-            }
+            new_deltas = self._unconsumed(latest.get("deltas", {}), consumed)
             for b in todo:
                 new_files[b] = list(kept_map.get(b, []))
             for b, fs in written.items():
@@ -5640,15 +5754,16 @@ class LocalSnapshotSink(SnapshotSink):
             brm.update(
                 {b: v for b, v in new_bucket_rows.items() if str(b) not in mv}
             )
+            packed_files, packed_deltas = self._pack_maps(new_files, new_deltas)
             manifest = {
                 **latest,
                 "snapshot_id": sid,
                 "parent": latest["snapshot_id"],
-                "files": self._pack_map(new_files),
-                "deltas": self._pack_map(new_deltas),
+                "files": packed_files,
+                "deltas": packed_deltas,
                 # refresh the size-policy bookkeeping from the exact
                 # remaining delta files (maintenance path is O(deltas))
-                "delta_bytes": self._sizes_by_bucket(new_deltas),
+                "delta_bytes": self._sizes_by_bucket(self._resolve_map(new_deltas)),
                 "stats": {"compacted_buckets": len(written), "delta_commits": dc},
             }
             if ks:
@@ -5784,13 +5899,14 @@ class LocalSnapshotSink(SnapshotSink):
                 if f not in consumed
             ]
             new_deltas = {_FLAT: survivors} if survivors else {}
+            packed_files, packed_deltas = self._pack_maps(written, new_deltas)
             manifest = {
                 **latest,
                 "snapshot_id": sid,
                 "parent": latest["snapshot_id"],
                 "num_buckets": int(new_num_buckets),
-                "files": self._pack_map(written),
-                "deltas": self._pack_map(new_deltas),
+                "files": packed_files,
+                "deltas": packed_deltas,
                 "delta_bytes": self._sizes_by_bucket(new_deltas),
                 # maintenance stats: state unchanged, change scans skip it;
                 # cadence counter restarts under the new layout
@@ -5973,8 +6089,7 @@ class LocalSnapshotSink(SnapshotSink):
         return "ref:" + self._write_blob_body(body, "blob")
 
     def _resolve_blob(self, ref: str):
-        with open(os.path.join(self._lists_dir(), ref[len("ref:"):])) as f:
-            return json.load(f)
+        return _blob_entry(self._load_blob(_blob_name(ref)), ref)
 
     # ------------------------------------------------------------- maintain
     def rollback(self, snapshot_id: str) -> None:
@@ -6091,6 +6206,13 @@ class LocalSnapshotSink(SnapshotSink):
             with clone._commit_lock():
                 root = clone.manifest()
                 sid = clone._claim_sid(root)
+                # resolve via the SOURCE's blob store, re-pack into the
+                # clone's: the clone must never depend on source blob
+                # retention
+                files_, deltas_ = clone._pack_maps(
+                    self._resolve_map(src["files"]),
+                    self._resolve_map(src.get("deltas", {})),
+                )
                 manifest = {
                     "snapshot_id": sid,
                     "parent": root["snapshot_id"],
@@ -6102,13 +6224,8 @@ class LocalSnapshotSink(SnapshotSink):
                         else {}
                     ),
                     "num_buckets": int(src["num_buckets"]),
-                    # resolve via the SOURCE's blob store, re-pack into
-                    # the clone's: the clone must never depend on source
-                    # blob retention
-                    "files": clone._pack_map(self._resolve_map(src["files"])),
-                    "deltas": clone._pack_map(
-                        self._resolve_map(src.get("deltas", {}))
-                    ),
+                    "files": files_,
+                    "deltas": deltas_,
                     "committed_batches": dict(src.get("committed_batches") or {}),
                     "token_seq": dict(src.get("token_seq") or {}),
                     "delta_bytes": dict(src.get("delta_bytes") or {}),
@@ -6833,14 +6950,19 @@ class LocalSnapshotSink(SnapshotSink):
         live_blobs: set[str] = set()
         manifests: dict[str, dict] = {}
 
+        on_disk: dict[str, Any] = {}
+
         def _list_from_disk(val) -> list[str]:
             # NEVER through _list_cache: fsck verifies what is ON DISK,
             # and this session may have written (and cached) the blob
-            # whose file has since been lost
+            # whose file has since been lost.  Each blob is read once per
+            # fsck (a commit's pack serves all its buckets).
             if isinstance(val, list):
                 return val
-            with open(os.path.join(self._lists_dir(), val[len("ref:"):])) as f:
-                return json.loads(f.read())
+            blob = _blob_name(val)
+            if blob not in on_disk:
+                on_disk[blob] = self._load_blob(blob)
+            return _blob_entry(on_disk[blob], val)
 
         with self._commit_lock():
             sids = self.snapshots()
@@ -6915,10 +7037,10 @@ class LocalSnapshotSink(SnapshotSink):
                                     f"{b!r} outside 0..{nb - 1}"
                                 )
                         if isinstance(val, str):
-                            live_blobs.add(val[len("ref:"):])
+                            live_blobs.add(_blob_name(val))
                         try:
                             data_files.update(_list_from_disk(val))
-                        except OSError as e:
+                        except (OSError, KeyError) as e:
                             errors.append(
                                 f"manifest {sid}: {field}[{b}] list blob "
                                 f"missing: {e}"
@@ -6926,20 +7048,20 @@ class LocalSnapshotSink(SnapshotSink):
                 cf = m.get("change_files")
                 if cf:
                     if isinstance(cf, str):
-                        live_blobs.add(cf[len("ref:"):])
+                        live_blobs.add(_blob_name(cf))
                     try:
                         data_files.update(_list_from_disk(cf))
-                    except OSError as e:
+                    except (OSError, KeyError) as e:
                         errors.append(
                             f"manifest {sid}: change_files blob missing: {e}"
                         )
                 for k in CATALOG_KEYS + ("ts_stats_new",):
                     ref = m.get(k)
                     if isinstance(ref, str) and ref.startswith("ref:"):
-                        live_blobs.add(ref[len("ref:"):])
+                        live_blobs.add(_blob_name(ref))
                         try:
-                            self._resolve_blob(ref)
-                        except OSError as e:
+                            _list_from_disk(ref)
+                        except (OSError, KeyError) as e:
                             errors.append(
                                 f"manifest {sid}: catalog blob {k!r} "
                                 f"missing: {e}"
@@ -7488,7 +7610,7 @@ class LocalSnapshotSink(SnapshotSink):
                     + extras
                 ):
                     if isinstance(files, str):
-                        live_blobs.add(files[len("ref:"):])
+                        live_blobs.add(_blob_name(files))
                         if files in catalog_refs:
                             continue  # catalog blobs are not data-file lists
                     referenced.update(self._resolve_list(files))

@@ -1,0 +1,261 @@
+"""What one commit leaves on disk: its data files, one manifest and at
+most one file-list blob.
+
+A commit packs every bucket list it changed into one content-addressed
+blob (``ref:list-<sha1>.json#<bucket>``), table data dirs carry no
+``_SUCCESS`` markers, and a flat delta built from many small input files
+is written as few files as Spark's per-file open cost allows.  Tables
+written in the older per-bucket-blob and inline encodings keep reading,
+passing fsck, expiring and cloning.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import importlib.util
+import json
+import os
+
+import pytest
+
+from fetchez_spark.changegen import ChangeLogSpec, write_change_log
+from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink
+from fetchez_spark.streaming.engine import replay_batches
+
+UTC = dt.timezone.utc
+_TOOL = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "file_census.py")
+
+
+def _census_tool():
+    spec = importlib.util.spec_from_file_location("file_census", _TOOL)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _census(path: str) -> dict[str, int]:
+    return {k: v["files"] for k, v in _census_tool().census(path).items()}
+
+
+def _batch(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "op string, conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp, seq long",
+    )
+
+
+def _rows(n: int, start: int = 0, convs: int = 64):
+    t0 = dt.datetime(2025, 1, 1, tzinfo=UTC)
+    return [
+        ("I", f"c{i % convs}", i // convs, "user", f"t{i}", None,
+         t0 + dt.timedelta(seconds=i), i)
+        for i in range(start, start + n)
+    ]
+
+
+def _blobs(sink) -> set[str]:
+    d = sink._lists_dir()
+    return {f for f in os.listdir(d) if f.startswith("list-")} if os.path.isdir(d) else set()
+
+
+def _state(sink, spark) -> set[tuple]:
+    return {(r["conv_id"], r["turn_idx"], r["text"]) for r in sink.read(spark).collect()}
+
+
+@pytest.fixture(scope="module")
+def replayed(spark, tmp_path_factory):
+    """A 3-batch flat-delta replay with a fold after batch 2 and a
+    closing compact(), over 16 buckets."""
+    root = tmp_path_factory.mktemp("replay")
+    files = write_change_log(
+        ChangeLogSpec(num_events=3000, num_convs=150, seed=5), str(root / "log"), num_chunks=6
+    )
+    sink = LocalSnapshotSink(
+        str(root / "t"), num_buckets=16, cluster_deltas=False, compact_every=2,
+        async_compact=False,
+    )
+    replay_batches(spark, [files[0:2], files[2:4], files[4:6]], sink)
+    sink.compact(spark)
+    return sink
+
+
+def test_replay_file_census(replayed):
+    # 3 merges of one flat file each, a 16-bucket fold, a 16-bucket
+    # closing compact: 35 data files, each with its .crc; one manifest
+    # and one list blob per commit (root + 5); one claim per data dir
+    assert _census(replayed.table_dir) == {
+        "parquet": 35,
+        "crc": 35,
+        "_SUCCESS": 0,
+        "CLAIM.json": 5,
+        "manifest": 6,
+        "list blob": 5,
+        "other": 2,  # VERSION and COMMIT.lock
+    }
+
+
+def test_no_success_markers_in_data_dirs(replayed):
+    data = os.path.join(replayed.table_dir, "data")
+    found = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(data)
+        for f in names
+        if "_SUCCESS" in f
+    ]
+    assert found == []
+
+
+def test_fold_commit_writes_one_list_blob(spark, tmp_path):
+    sink = LocalSnapshotSink(str(tmp_path / "t"), num_buckets=16, compact_every=10**9)
+    sink.merge(_batch(spark, _rows(400)), "b1")
+    assert len(sink.delta_lists()) == 16, "the batch touches every bucket"
+    before = _blobs(sink)
+    sink.compact(spark)
+    new = _blobs(sink) - before
+    assert len(new) == 1
+    refs = set(sink.manifest()["files"].values())
+    assert len(refs) == 16
+    assert {r.split("#")[0] for r in refs} == {f"ref:{b}" for b in new}
+
+
+def test_pack_maps_one_blob_for_all_maps(tmp_path):
+    """A fold that keeps late deltas in a bucket it rewrote holds two
+    different lists for one bucket: both land in the one pack."""
+    sink = LocalSnapshotSink.__new__(LocalSnapshotSink)
+    sink.table_dir = str(tmp_path / "t")
+    sink._list_cache = {}
+    files, deltas = sink._pack_maps(
+        {"0": ["b.parquet", "a.parquet"], "1": "ref:list-old.json#1", "2": []},
+        {"0": ["late.parquet"], "3": ["a.parquet", "b.parquet"]},
+    )
+    assert files["1"] == "ref:list-old.json#1" and files["2"] == []
+    assert len({r.split("#")[0] for r in (files["0"], deltas["0"], deltas["3"])}) == 1
+    assert files["0"] != deltas["0"]
+    assert len(_blobs(sink)) == 1
+    sink._list_cache = {}  # resolve from disk
+    assert sink._resolve_list(files["0"]) == ["a.parquet", "b.parquet"]
+    assert sink._resolve_list(deltas["0"]) == ["late.parquet"]
+    assert sink._resolve_list(deltas["3"]) == ["a.parquet", "b.parquet"]
+
+
+def _to_seed_format(sink) -> None:
+    """Rewrite every manifest in the older encodings: even buckets as
+    per-bucket list blobs, odd buckets as inline lists."""
+    for sid in sink.snapshots():
+        path = sink._manifest_path(sid)
+        with open(path) as f:
+            m = json.load(f)
+        for field in ("files", "deltas"):
+            m[field] = {
+                b: (sink._pack_list(fs) if int(b) % 2 == 0 else fs)
+                for b, fs in sink._resolve_map(m.get(field, {})).items()
+            }
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+
+def test_seed_format_table_reads_fscks_expires_and_clones(spark, tmp_path):
+    sink = LocalSnapshotSink(str(tmp_path / "t"), num_buckets=4, compact_every=10**9)
+    for i in range(4):
+        sink.merge(_batch(spark, _rows(12, start=12 * i, convs=8)), f"b{i}")
+    want = _state(sink, spark)
+    packs = _blobs(sink)
+    _to_seed_format(sink)
+    assert all(
+        not isinstance(v, str) or "#" not in v
+        for m in map(sink.manifest, sink.snapshots())
+        for v in list(m["files"].values()) + list(m["deltas"].values())
+    )
+    sink._list_cache.clear()
+    old = LocalSnapshotSink(str(tmp_path / "t"))
+    assert _state(old, spark) == want
+    assert old.fsck()["ok"]
+
+    # a new commit on top: the touched bucket and the inline lists move
+    # into the commit's one pack; untouched per-bucket blob refs stay
+    prev = old.manifest()["deltas"]
+    old.merge(_batch(spark, [("I", "c0", 99, "user", "new", None,
+                              dt.datetime(2025, 2, 1, tzinfo=UTC), 999)]), "b-new")
+    want.add(("c0", 99, "new"))
+    head = old.manifest()["deltas"]
+    refs = [v for v in head.values() if isinstance(v, str)]
+    live = {r[len("ref:"):].split("#")[0] for r in refs}
+    assert len({r.split("#")[0] for r in refs if "#" in r}) == 1
+    assert all("#" in head[b] for b, v in prev.items() if isinstance(v, list))
+    moved = [b for b, v in prev.items() if isinstance(v, str) and head[b] != v]
+    assert len(moved) <= 1, "only the touched bucket leaves its blob"
+    assert any("#" not in r for r in refs), "a per-bucket blob stays live"
+    before = _blobs(old)
+    assert before - live, "older commits left blobs only they reference"
+
+    old.expire_snapshots(keep_last=1, min_age_seconds=0)
+    after = _blobs(old)
+    assert after == live, "GC keeps exactly the blobs and packs the head names"
+    assert not packs & after
+    assert _state(old, spark) == want
+    assert old.fsck()["ok"]
+
+    clone = old.clone_to(str(tmp_path / "c"))
+    assert _state(clone, spark) == want
+    assert clone.fsck()["ok"]
+    assert all("#" in v for v in clone.manifest()["deltas"].values() if isinstance(v, str))
+
+
+def test_missing_pack_blob_is_an_fsck_error(spark, tmp_path):
+    sink = LocalSnapshotSink(str(tmp_path / "t"), num_buckets=4, compact_every=10**9)
+    sink.merge(_batch(spark, _rows(40)), "b1")
+    ref = next(v for v in sink.manifest()["deltas"].values() if isinstance(v, str))
+    assert "#" in ref
+    os.remove(os.path.join(sink._lists_dir(), ref[len("ref:"):].split("#")[0]))
+    report = sink.fsck()
+    assert not report["ok"]
+    assert any("blob missing" in e for e in report["errors"])
+
+
+def _flat_sink(tmp_path, name):
+    return LocalSnapshotSink(
+        str(tmp_path / name), num_buckets=16, cluster_deltas=False, compact_every=10**9
+    )
+
+
+def _flat_files(sink) -> list[str]:
+    return sink.delta_lists()["*"]
+
+
+def test_small_file_scan_batch_writes_one_flat_file(spark, tmp_path):
+    files = write_change_log(
+        ChangeLogSpec(num_events=2000, num_convs=100, seed=3), str(tmp_path / "log"), num_chunks=4
+    )
+    batch = spark.read.parquet(*files)
+    assert batch.rdd.getNumPartitions() > 1
+    sink = _flat_sink(tmp_path, "t")
+    replay_batches(spark, [files], sink)
+    assert len(_flat_files(sink)) == 1
+
+
+def test_created_batch_keeps_its_partitions(spark, tmp_path):
+    batch = _batch(spark, _rows(60)).repartition(3)
+    sink = _flat_sink(tmp_path, "t")
+    sink.merge(batch, "b1")
+    assert len(_flat_files(sink)) == 3
+
+
+def test_batch_above_open_cost_keeps_its_partitions(spark, tmp_path):
+    files = write_change_log(
+        ChangeLogSpec(num_events=2000, num_convs=100, seed=4), str(tmp_path / "log"), num_chunks=4
+    )
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    # an open cost far below one input file: every scan partition holds
+    # many open costs of input, so the write keeps the scan's partitions
+    spark.conf.set(key, "1k")
+    try:
+        batch = spark.read.parquet(*files)
+        parts = batch.rdd.getNumPartitions()
+        assert parts > 1
+        sink = _flat_sink(tmp_path, "t")
+        sink.merge(batch, "b1")
+        assert len(_flat_files(sink)) == parts
+    finally:
+        spark.conf.set(key, old)

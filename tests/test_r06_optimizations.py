@@ -136,3 +136,26 @@ def test_async_compact_equals_inline_and_barriers(spark, tmp_path):
     assert sorted(map(tuple, sink.read(spark).collect())) == before
     assert out["compacted_buckets"] == 0 or out.get("snapshot_id")
     assert not any(sink.delta_lists().values())
+
+
+def test_fold_thread_stops_after_replay(spark, tmp_path):
+    """finish_maintenance() shuts the idle background fold thread down:
+    no fetchez-compact thread outlives replay_batches, and the next
+    merge-triggered fold starts a new one."""
+    import threading
+
+    from fetchez_spark.streaming.engine import replay_batches
+
+    def fold_threads():
+        return [t for t in threading.enumerate() if t.name.startswith("fetchez-compact")]
+
+    sink = LocalSnapshotSink(
+        str(tmp_path / "t"), num_buckets=4, compact_every=2, cluster_deltas=False
+    )
+    for rep in range(2):
+        res = replay_batches(
+            spark, [_batch(spark, n=200), _batch(spark, n=200)], sink, token_prefix=f"r{rep}"
+        )
+        assert any("compacted" in m for m in res), res
+        assert fold_threads() == []
+        assert sink._compact_pool is None
