@@ -465,6 +465,9 @@ class ParquetExportView(IncrementalView):
             state.repartition(max(1, parts), F.col(_BUCKET_COL))
             .write.partitionBy(_BUCKET_COL)
             .mode("error")
+            # no _SUCCESS marker: consumers follow the `current` symlink
+            # or manifest-current.txt, and nothing reads the marker
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         )
         if self.parquet_codec:
             writer = writer.option("compression", self.parquet_codec)

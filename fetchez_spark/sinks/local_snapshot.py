@@ -298,14 +298,13 @@ def _conf_bytes(text: str) -> int:
     return int(m.group(1)) * 1024 ** _BYTE_UNITS[m.group(2)]
 
 
-def _open_cost_partitions(df: DataFrame) -> int | None:
-    """Partitions that keep each output file of ``df`` at least Spark's
-    per-file open cost (``spark.sql.files.openCostInBytes``) of input:
-    ``ceil(input bytes / open cost)``, at least 1.  None when ``df``
-    scans no files, or files that are not local."""
+def open_cost_partitions(spark: SparkSession, uris: list[str]) -> int | None:
+    """Partitions that keep each output file written from ``uris`` at
+    least Spark's per-file open cost (``spark.sql.files.openCostInBytes``)
+    of input: ``ceil(input bytes / open cost)``, at least 1.  None when
+    ``uris`` is empty, or names a file that is missing or not local."""
     from urllib.parse import unquote, urlparse
 
-    uris = df.inputFiles()
     if not uris:
         return None
     total = 0
@@ -317,7 +316,7 @@ def _open_cost_partitions(df: DataFrame) -> int | None:
             total += os.path.getsize(unquote(u.path))
         except OSError:
             return None
-    cost = _conf_bytes(df.sparkSession.conf.get("spark.sql.files.openCostInBytes"))
+    cost = _conf_bytes(spark.conf.get("spark.sql.files.openCostInBytes"))
     return max(1, -(-total // max(cost, 1)))
 
 
@@ -1170,23 +1169,11 @@ class LocalSnapshotSink(SnapshotSink):
         if fanout > 1:
             shuffle_keys.append(F.pmod(F.xxhash64(F.col(INTERNAL_SEQ)), F.lit(fanout)))
         with _observed_write_conf(df.sparkSession):
-            writer = (
-                _data_writer(
-                    self._align(df, schema)
-                    .select(*out_cols)
-                    .repartition(max(n_partitions, 1) * max(fanout, 1), *shuffle_keys)
-                )
-                .partitionBy(_BUCKET)
-                # transient files (folded away at the next compaction):
-                # skip dictionary encoding -- the near-unique text payload
-                # defeats it anyway, and the attempt costs ~15% of encode
-                # and ~20% of decode time (measured) for ~14% more bytes
-                # that zstd-on-plain mostly claws back
-                .option("parquet.enable.dictionary", "false")
-            )
-            if self.delta_compression:
-                writer = writer.option("compression", self.delta_compression)
-            writer.parquet(snap_dir)
+            self._delta_writer(
+                self._align(df, schema)
+                .select(*out_cols)
+                .repartition(max(n_partitions, 1) * max(fanout, 1), *shuffle_keys)
+            ).partitionBy(_BUCKET).parquet(snap_dir)
         out: dict[str, list[str]] = {}
         for entry in os.scandir(snap_dir):
             if entry.is_dir() and entry.name.startswith(f"{_BUCKET}="):
@@ -1408,7 +1395,7 @@ class LocalSnapshotSink(SnapshotSink):
     # Zipf-hot keys; below it, the one-exchange shape is cheaper (the
     # straggler costs milliseconds there).  Scale-free: the gate follows
     # the fold's own input bytes, not machine or scale-factor constants.
-    # 2 MiB, not 64: the gate sees COMPRESSED parquet bytes (no-dict zstd
+    # 2 MiB, not 64: the gate sees COMPRESSED parquet bytes (zstd
     # deltas decode ~3x larger), and a measured 65 MB fold under the old
     # 64 MiB floor spent 226 task-seconds in the raw-shuffle reduce (Zipf
     # hot key + balls-into-bins) vs ~70 for the combine shape -- the
@@ -1419,6 +1406,22 @@ class LocalSnapshotSink(SnapshotSink):
     # fold will run (see combine_first's num_buckets note), instead of
     # warming a plan the session never uses again.
     FOLD_COMBINE_MIN_BYTES = 2 * 1024 * 1024
+
+    # Dictionary page cap for transient delta files (_delta_writer).
+    # Parquet tries a dictionary per column chunk and falls back to plain
+    # encoding once the dictionary outgrows this cap, so low-cardinality
+    # columns (conv_id, role, tool, turn_idx, _src) keep their
+    # dictionaries while near-unique ones (text, ts, _seq) give up after
+    # 64 KiB instead of the 1 MiB default.  Measured on the three deltas
+    # of a 96k-event flat replay, the same rows rewritten with only this
+    # writer option changed (local[4], medians of 20 rewrites): dictionary
+    # off 1,515,968 B; 64 KiB cap 1,332,449 B (-12.1%) at +7% encode
+    # time, inside the run-to-run spread; 1 MiB default 1,350,660 B at
+    # +21% encode -- the full attempt on the text payload, which once had
+    # delta files skip dictionaries altogether.  Decode time is flat.
+    # Fold bases, CoW change sidecars and exports keep the session
+    # default.
+    DELTA_DICT_PAGE_BYTES = 64 * 1024
 
     def _fold_combine_first(self, files: list[str]) -> bool:
         """Should a fold over ``files`` pre-combine map-side?  True for
@@ -1627,6 +1630,17 @@ class LocalSnapshotSink(SnapshotSink):
         ).partitionBy(_BUCKET).parquet(snap_dir)
         return self._scan_partitioned_output(snap_dir)
 
+    def _delta_writer(self, rows: DataFrame):
+        """The writer of transient delta files, clustered and flat: the
+        table data writer with the dictionary page capped at
+        ``DELTA_DICT_PAGE_BYTES`` and the ``delta_compression`` codec."""
+        writer = _data_writer(rows).option(
+            "parquet.dictionary.page.size", str(self.DELTA_DICT_PAGE_BYTES)
+        )
+        if self.delta_compression:
+            writer = writer.option("compression", self.delta_compression)
+        return writer
+
     def _write_flat(
         self,
         df: DataFrame,
@@ -1635,26 +1649,21 @@ class LocalSnapshotSink(SnapshotSink):
         use_delta_codec: bool = True,
     ) -> list[str]:
         """Write rows as flat files under a snapshot-unique dir (no
-        clustering; AQE decides the file count); return the file list.
-        ``use_delta_codec=False`` keeps the session codec for files that
-        are NOT transient (CoW change sidecars live as long as the
-        snapshot; the delta_compression contract is transience)."""
+        clustering); return the file list.  The frame's partitions decide
+        the file count, coalesced to Spark's open cost when it scans
+        small local files.  ``use_delta_codec=False`` keeps the session
+        writer for files that are NOT transient (CoW change sidecars live
+        as long as the snapshot; the delta_compression contract is
+        transience)."""
         snap_dir = self._snap_payload_dir(sid)
         rows = self._align(df, schema).select(*[f.name for f in schema.fields])
         # a batch of many small input files would otherwise write one
         # small file per input file (one scan task each); coalesce never
         # adds partitions, so large inputs keep Spark's split plan
-        n = _open_cost_partitions(df)
+        n = open_cost_partitions(df.sparkSession, df.inputFiles())
         if n is not None:
             rows = rows.coalesce(n)
-        writer = _data_writer(rows)
-        if use_delta_codec:
-            # transient delta files: no dictionary attempt (see
-            # _write_bucketed) -- persistent files (CoW change sidecars,
-            # use_delta_codec=False) keep the full-fidelity encoding
-            writer = writer.option("parquet.enable.dictionary", "false")
-            if self.delta_compression:
-                writer = writer.option("compression", self.delta_compression)
+        writer = self._delta_writer(rows) if use_delta_codec else _data_writer(rows)
         writer.parquet(snap_dir)
         return [
             os.path.join(snap_dir, fn)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from fetchez_spark.schema import CHANGE_EVENT_SCHEMA, merge_schemas
 from fetchez_spark.sinks.base import SnapshotSink
+from fetchez_spark.sinks.local_snapshot import open_cost_partitions
 from fetchez_spark.streaming.lineage import LineageLog
 
 Transform = Callable[[DataFrame], DataFrame]
@@ -293,6 +294,7 @@ def make_batch_fn(
     token_prefix: str = "",
     watch_schema: tuple[str, Any, str] | None = None,
     bad_records: tuple[str, str] | None = None,
+    checkpoint_dir: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The foreachBatch function: transform chain -> MERGE -> lineage.
 
@@ -322,7 +324,16 @@ def make_batch_fn(
     between quarantine and commit replays both idempotently (the
     quarantine write is mode=overwrite per batch token, the merge is
     token-idempotent).  Corrupt rows NEVER advance the table: the
-    ``_corrupt_record`` column is stripped before the merge either way."""
+    ``_corrupt_record`` column is stripped before the merge either way.
+
+    ``checkpoint_dir`` (a file-source query's checkpoint) sizes each
+    batch by its own input files: the frame is coalesced to
+    ``ceil(input bytes / spark.sql.files.openCostInBytes)`` partitions
+    before the merge, so a batch of many small files writes few delta
+    files instead of one per input file.  The frame ``foreachBatch``
+    hands over lists no input files of its own, so the sink cannot size
+    it.  Batches whose files are missing or not local keep their
+    partitions."""
 
     def _token(batch_id: int) -> str:
         return f"{token_prefix}-{batch_id}" if token_prefix else str(batch_id)
@@ -337,6 +348,10 @@ def make_batch_fn(
             if on_batch:
                 on_batch(batch_id, {"skipped": True})
             return
+        n = open_cost_partitions(
+            batch.sparkSession,
+            _batch_source_files(checkpoint_dir, batch_id) if checkpoint_dir else [],
+        )
         if watch_schema is not None:
             ckpt_dir, stream_schema, fmt = watch_schema
             files = _batch_source_files(ckpt_dir, batch_id)
@@ -416,6 +431,10 @@ def make_batch_fn(
                 )
             batch = batch.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
         batch = _apply_transforms(batch, transforms)
+        if n is not None:
+            # coalesce never adds partitions: a batch above the open cost
+            # per scan partition keeps Spark's split plan
+            batch = batch.coalesce(n)
         # Spark's checkpoint owns source offsets keyed by batch_id; the
         # sink records the same batch_id so {offsets, snapshot} commit as
         # one logical unit (SURVEY.md section 4 "resume from partial")
@@ -660,6 +679,7 @@ def run_stream(
                     (checkpoint_dir, schema, log_format) if watch_schema else None
                 ),
                 bad_records=batch_bad_records,
+                checkpoint_dir=checkpoint_dir,
             )
         )
         .option("checkpointLocation", checkpoint_dir)

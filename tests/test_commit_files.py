@@ -259,3 +259,26 @@ def test_batch_above_open_cost_keeps_its_partitions(spark, tmp_path):
         assert len(_flat_files(sink)) == parts
     finally:
         spark.conf.set(key, old)
+
+
+def test_column_census_reports_bytes_and_dictionary_chunks(tmp_path, capsys):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({"role": ["user", "tool"] * 50, "text": [f"t{i}" for i in range(100)]})
+    for i in range(2):
+        d = tmp_path / f"_bucket={i}"
+        d.mkdir()
+        pq.write_table(table, str(d / "part-0.parquet"), use_dictionary=["role"])
+    (tmp_path / "VERSION").write_text("snap-1")
+    tool = _census_tool()
+    cols = tool.column_census(str(tmp_path))
+    assert list(cols) == ["role", "text"]
+    assert cols["role"]["chunks"] == 2 and cols["role"]["dict_chunks"] == 2
+    assert cols["text"]["chunks"] == 2 and cols["text"]["dict_chunks"] == 0
+    meta = pq.read_metadata(str(tmp_path / "_bucket=0" / "part-0.parquet"))
+    assert cols["text"]["bytes"] == 2 * meta.row_group(0).column(1).total_compressed_size
+    assert tool.main(["--columns", str(tmp_path)]) == 0
+    out = capsys.readouterr().out.split("\n")
+    assert out[2].split() == ["role", str(cols["role"]["bytes"]), "2", "2"]
+    assert out[3].split() == ["text", str(cols["text"]["bytes"]), "2", "0"]

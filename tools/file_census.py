@@ -7,15 +7,21 @@ blobs (``manifests/lists/list-*.json``), and ``other`` (VERSION, locks,
 catalog blobs, logs, ...).  Only the given directories are read.
 
     python tools/file_census.py <dir> [<dir> ...]
+    python tools/file_census.py --columns <dir> [<dir> ...]
 
 Prints one block per directory (files and bytes per kind), plus a total
-block when more than one directory is given.
+block when more than one directory is given.  ``--columns`` instead
+prints, per directory, each parquet column's compressed bytes, its
+column-chunk count, and how many of those chunks are dictionary-encoded
+(carry a dictionary page).  It reads parquet footers only.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+
+import pyarrow.parquet as pq
 
 KINDS = ("parquet", "crc", "_SUCCESS", "CLAIM.json", "manifest", "list blob", "other")
 
@@ -54,6 +60,40 @@ def census(root: str) -> dict[str, dict[str, int]]:
     return out
 
 
+def column_census(root: str) -> dict[str, dict[str, int]]:
+    """{column: {"bytes", "chunks", "dict_chunks"}} over the footers of
+    every parquet file under ``root``; ``bytes`` is the compressed size
+    of the column's chunks, dictionary pages included."""
+    out: dict[str, dict[str, int]] = {}
+    for dirpath, _, names in os.walk(root):
+        for name in sorted(names):
+            if not name.endswith(".parquet"):
+                continue
+            try:
+                meta = pq.read_metadata(os.path.join(dirpath, name))
+            except OSError:  # removed while walking
+                continue
+            for g in range(meta.num_row_groups):
+                group = meta.row_group(g)
+                for c in range(group.num_columns):
+                    chunk = group.column(c)
+                    row = out.setdefault(
+                        chunk.path_in_schema, {"bytes": 0, "chunks": 0, "dict_chunks": 0}
+                    )
+                    row["bytes"] += chunk.total_compressed_size
+                    row["chunks"] += 1
+                    row["dict_chunks"] += int(chunk.has_dictionary_page)
+    return out
+
+
+def _print_columns(title: str, c: dict) -> None:
+    print(title)
+    print(f"  {'column':<16}{'bytes':>14}{'chunks':>8}{'dict':>8}")
+    for col, row in c.items():
+        print(f"  {col:<16}{row['bytes']:>14}{row['chunks']:>8}{row['dict_chunks']:>8}")
+    print(f"  {'all':<16}{sum(r['bytes'] for r in c.values()):>14}")
+
+
 def _add(total: dict, part: dict) -> None:
     for k, row in part.items():
         total[k]["files"] += row["files"]
@@ -71,9 +111,16 @@ def _print_block(title: str, c: dict) -> None:
 
 
 def main(dirs: list[str]) -> int:
+    columns = dirs[:1] == ["--columns"]
+    if columns:
+        dirs = dirs[1:]
     if not dirs:
         print(__doc__.strip(), file=sys.stderr)
         return 2
+    if columns:
+        for d in dirs:
+            _print_columns(d, column_census(d))
+        return 0
     per_dir = {d: census(d) for d in dirs}
     total = {k: {"files": 0, "bytes": 0} for k in KINDS}
     for c in per_dir.values():
