@@ -162,7 +162,6 @@ def run_bench(cores: int, log_dir: str | None = None, json_out: str | None = Non
             num_buckets=max(2 * cores, 32),
             collect_metrics=True,
             compact_every=max(len(chunks) // 2, 2),
-            delta_compression=os.environ.get("FETCHEZ_DELTA_CODEC") or None,
             # r4b default: FAST-APPEND ingest (flat deltas, ZERO shuffle on
             # the append path; periodic compaction does the clustering --
             # the Iceberg fast-append + scheduled-rewrite shape).  Measured
@@ -174,10 +173,6 @@ def run_bench(cores: int, log_dir: str | None = None, json_out: str | None = Non
             # read-heavy tails: bucket-pruned reads between compactions
             # never touch flat deltas.
             cluster_deltas=os.environ.get("FETCHEZ_CLUSTER_DELTAS", "0") != "0",
-            # FETCHEZ_LOCAL_COMPACT=1: exchange-free bucket-local major
-            # folds (flat deltas minor-clustered first) -- steady-state
-            # shuffle drops to one pass per event's bytes
-            compact_bucket_local=os.environ.get("FETCHEZ_LOCAL_COMPACT", "0") == "1",
             # FETCHEZ_MERGE_MODE=partial: replay under the per-column
             # partial-update fold instead of full-row LWW -- measures the
             # mode's overhead (wider delta rows: per-column version

@@ -125,9 +125,7 @@ def profile_replay(events: int | None, cores: int, batches: int) -> dict:
             num_buckets=max(2 * cores, 32),
             collect_metrics=True,
             compact_every=max(len(chunks) // 2, 2),
-            delta_compression=os.environ.get("FETCHEZ_DELTA_CODEC") or None,
             cluster_deltas=os.environ.get("FETCHEZ_CLUSTER_DELTAS", "0") != "0",
-            compact_bucket_local=os.environ.get("FETCHEZ_LOCAL_COMPACT", "0") == "1",
         )
         compact_secs: list[float] = []
         orig_compact = LocalSnapshotSink.compact

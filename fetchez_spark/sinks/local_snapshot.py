@@ -164,7 +164,6 @@ _TABLE_PROPERTIES: dict[str, tuple[Any, Any]] = {
     "tombstone_retention_seconds": (None, float),
     "row_ttl_seconds": (None, float),
     "late_tolerance_seconds": (None, float),
-    "delta_compression": (None, str),
     # snapshot-history retention for auto_maintain (expire keeps this
     # many); None = never auto-expire
     "snapshot_keep_last": (None, int),
@@ -373,13 +372,11 @@ class LocalSnapshotSink(SnapshotSink):
         max_committed_tokens: int = 1024,
         write_fanout: int = 1,
         track_changes: bool = True,
-        delta_compression: str | None = None,
         monotonic_tokens: bool = True,
         auto_compact_bytes: int | None = None,
         compact_min_bucket_bytes: int | None = None,
         target_file_bytes: int | None = None,
         sort_on_compact: bool = False,
-        compact_bucket_local: bool = False,
         branch: str = "main",
         tombstone_retention_seconds: float | None = None,
         expectations: list[tuple[str, str, str]] | None = None,
@@ -407,11 +404,6 @@ class LocalSnapshotSink(SnapshotSink):
             raise ValueError(
                 f"merge_mode must be 'lww' or 'partial', got {merge_mode!r}"
             )
-        if merge_mode == "partial" and compact_bucket_local:
-            raise ValueError(
-                "merge_mode='partial' does not support compact_bucket_local: "
-                "the Arrow bucket-local fold implements full-row LWW only"
-            )
         self.merge_mode = merge_mode or "lww"
         if not re.fullmatch(r"[A-Za-z0-9._-]+", branch):
             raise ValueError(f"invalid branch name {branch!r}")
@@ -436,12 +428,6 @@ class LocalSnapshotSink(SnapshotSink):
         # rewrite) as a changes sidecar so read_changes stays exact.  MoR
         # needs nothing: its delta files ARE the change set.
         self.track_changes = track_changes
-        # leveled compression (the RocksDB shape): delta files are
-        # TRANSIENT (folded away at the next compaction), so they can
-        # trade bytes for write/read CPU with a lighter codec while
-        # compacted base files keep the session default (zstd).  None =
-        # session codec everywhere.
-        self.delta_compression = delta_compression
         # per-prefix token-sequence watermarks assume tokens sharing a
         # numeric-suffix prefix commit in INCREASING order (true for
         # stream batch ids and replay indices).  Set False when issuing
@@ -523,16 +509,6 @@ class LocalSnapshotSink(SnapshotSink):
         # (repartitionByRange) -- the same price Iceberg's sorted
         # rewrite pays.
         self.sort_on_compact = sort_on_compact
-        # compact_bucket_local: major compaction folds each bucket's
-        # already-clustered files EXCHANGE-FREE (per-branch coalesce +
-        # partition-local sort + Arrow streaming keep-last) instead of
-        # re-shuffling the whole table through one Exchange.  On a real
-        # cluster this removes a full-table network pass per fold --
-        # steady-state bytes-shuffled-per-event drops to O(event bytes)
-        # (each event's bytes cross the wire once, when its flat/delta
-        # file is first clustered) independent of table size.  See
-        # _bucket_local_fold_frame.
-        self.compact_bucket_local = compact_bucket_local
         # tombstone_retention_seconds: EVENT-TIME horizon for physical
         # tombstone removal at major compaction -- tombstones with
         # ts < (high_watermark - retention) are dropped from the fold
@@ -1174,16 +1150,7 @@ class LocalSnapshotSink(SnapshotSink):
                 .select(*out_cols)
                 .repartition(max(n_partitions, 1) * max(fanout, 1), *shuffle_keys)
             ).partitionBy(_BUCKET).parquet(snap_dir)
-        out: dict[str, list[str]] = {}
-        for entry in os.scandir(snap_dir):
-            if entry.is_dir() and entry.name.startswith(f"{_BUCKET}="):
-                b = entry.name.split("=", 1)[1]
-                out[b] = [
-                    os.path.join(entry.path, fn)
-                    for fn in sorted(os.listdir(entry.path))
-                    if fn.endswith(".parquet")
-                ]
-        return out
+        return self._scan_partitioned_output(snap_dir)
 
     def _dedup_write_bucketed(
         self,
@@ -1220,8 +1187,11 @@ class LocalSnapshotSink(SnapshotSink):
         40M events / 32 cores: 21.2s -> 12.4s for the fold write, with
         per-task skew gone (max/median reduce task ~1.1 vs ~10) and one
         output file per bucket preserved.  Small folds keep the
-        one-exchange shape: below ~64 MB the straggler costs
-        milliseconds and the extra exchange is pure overhead.
+        one-exchange shape: below ``FOLD_COMBINE_MIN_BYTES`` (2 MiB of
+        input) the straggler costs milliseconds and the extra exchange
+        is pure overhead.  ``combine_first`` needs ``num_buckets``: the
+        combine groups on the key alone and recomputes the bucket from
+        it (see below).
 
         ``cluster_expr`` (a Column over the payload schema, e.g. a Morton
         key from :mod:`fetchez_spark.plans.zorder`): after the fold, the
@@ -1344,7 +1314,7 @@ class LocalSnapshotSink(SnapshotSink):
             # map-side partial aggregate (exchange on the full grouping
             # key) -- the winners-only move to their buckets happens
             # below, after the purge/TTL filters trim them further.
-            # With ``num_buckets`` known, group on the KEY ALONE: _bucket
+            # Group on the KEY ALONE: _bucket
             # is a pure function of key[0], so it adds nothing to the
             # groups -- and dropping it keeps the pmod(hash, num_buckets)
             # LITERAL out of the expensive map stage's generated code.
@@ -1357,17 +1327,12 @@ class LocalSnapshotSink(SnapshotSink):
             # for the session's first vs second fold of the same data
             # volume).  The bucket is recomputed on the winners only
             # (O(|winners|) hashes instead of O(rows)).
-            if num_buckets is not None:
-                won = (
-                    aligned.drop(_BUCKET)
-                    .groupBy(*[F.col(k) for k in self.key])
-                    .agg(*aggs)
-                    .withColumn(_BUCKET, self._bucket_expr(num_buckets))
-                )
-            else:
-                won = aligned.groupBy(
-                    F.col(_BUCKET), *[F.col(k) for k in self.key]
-                ).agg(*aggs)
+            won = (
+                aligned.drop(_BUCKET)
+                .groupBy(*[F.col(k) for k in self.key])
+                .agg(*aggs)
+                .withColumn(_BUCKET, self._bucket_expr(num_buckets))
+            )
         else:
             won = (
                 aligned.repartition(max(n_partitions, 1), F.col(_BUCKET))
@@ -1447,108 +1412,6 @@ class LocalSnapshotSink(SnapshotSink):
                 ]
         return out
 
-    def _bucket_local_fold_frame(
-        self,
-        spark: SparkSession,
-        groups: dict[str, list[str]],
-        schema: T.StructType,
-        num_buckets: int,
-        max_branches: int = 128,
-    ) -> DataFrame:
-        """EXCHANGE-FREE fold of already-bucket-clustered file groups --
-        the plan behind ``compact(local=True)``.
-
-        The Iceberg/Delta rewrite actions run compaction as independent
-        per-file-group tasks precisely because the input is already
-        partition-clustered: re-shuffling rows that are already grouped
-        is pure waste, and on a 1000-executor cluster that waste is a
-        full-table pass over the NETWORK per fold.  Spark's DataFrame
-        groupBy can't see that pre-clustering (no bucketed-table
-        metadata), so the grouped reduction here is expressed
-        partition-locally instead:
-
-        * each branch reads one (or several) buckets' base+delta files
-          and ``coalesce(1)``-es them into ONE partition -- a narrow
-          dependency, not a shuffle; buckets are bin-packed onto
-          ``max_branches`` branches by bytes (greedy LPT) so stragglers
-          don't serialize the job;
-        * ``sortWithinPartitions`` (key..., ts, _seq, payload) is a
-          partition-local spillable sort -- key runs become contiguous,
-          and the trailing payload columns make the order TOTAL so ties
-          on (ts, _seq) break exactly like the hash path's
-          ``max(struct(ts, _seq, payload...))`` (Spark orders struct
-          fields left-to-right with null-first, same as this sort);
-        * an Arrow-batched ``mapInPandas`` keeps the LAST row per key in
-          one streaming pass (O(batch) memory: only the current key's
-          winner carries across batch boundaries) -- the sanctioned
-          vectorized escape hatch, chosen here because it replaces a
-          full-table Exchange with zero data movement;
-        * the ``partitionBy(_bucket)`` write needs no repartition: every
-          task already holds whole buckets.
-
-        Plan: Scan -> Coalesce -> Sort -> MapInPandas per branch, Union
-        on top -- ZERO Exchange nodes (asserted by
-        tests/test_round4_localcompact.py).  Output rows are key-sorted
-        within each file as a side effect, so sorted-compaction stats
-        cost nothing extra.
-        """
-        key = list(self.key)
-        order = ["ts", INTERNAL_SEQ]
-        others = [f.name for f in schema.fields if f.name not in order]
-        sort_cols = [*key, *order, *[c for c in others if c not in key]]
-        out_schema = T.StructType(
-            list(schema.fields) + [T.StructField(_BUCKET, T.IntegerType(), True)]
-        )
-
-        def fold(batches):
-            import pandas as pd
-
-            carry = None
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                if carry is not None:
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                winners = pdf.drop_duplicates(subset=key, keep="last")
-                # the last key's run may continue in the next batch: hold
-                # its current winner back; everything before it is final
-                carry = winners.tail(1)
-                winners = winners.iloc[:-1]
-                if len(winners):
-                    yield winners
-            if carry is not None:
-                yield carry
-
-        # greedy LPT bin-packing of buckets onto branches by input bytes:
-        # one branch = one task = one partition; balance beats bucket
-        # count (a 1024-bucket table doesn't need a 1024-way union plan)
-        sizes = self._sizes_by_bucket(groups)
-        n_branches = max(1, min(len(groups), max_branches))
-        branches: list[list[str]] = [[] for _ in range(n_branches)]
-        loads = [0] * n_branches
-        for b in sorted(groups, key=lambda b: -sizes.get(b, 0)):
-            i = loads.index(min(loads))
-            branches[i].append(b)
-            loads[i] += sizes.get(b, 0)
-        parts = []
-        for bs in branches:
-            files = [f for b in bs for f in groups[b]]
-            if not files:
-                continue
-            df = self._align(self._read_files(spark, files, schema), schema)
-            parts.append(
-                df.withColumn(_BUCKET, self._bucket_expr(num_buckets))
-                .coalesce(1)
-                .sortWithinPartitions(*sort_cols)
-                .mapInPandas(fold, out_schema)
-            )
-        if not parts:
-            return spark.createDataFrame([], out_schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     @staticmethod
     def _ttl_keep_cond(expire_before: str):
         """Keep condition for row TTL: drop winners older than the
@@ -1604,57 +1467,28 @@ class LocalSnapshotSink(SnapshotSink):
             return None
         return (t - timedelta(seconds=retention_seconds)).isoformat(sep=" ")
 
-    def _fold_bucket_local(
-        self,
-        spark: SparkSession,
-        groups: dict[str, list[str]],
-        sid: str,
-        schema: T.StructType,
-        num_buckets: int,
-        purge_before: str | None = None,
-        expire_before: str | None = None,
-    ) -> dict[str, list[str]]:
-        """Write side of the exchange-free fold: one file per bucket per
-        branch task, written straight from the task's partition.  The
-        tombstone-GC / row-TTL filters (``purge_before`` /
-        ``expire_before``, see _dedup_write_bucketed) are narrow
-        dependencies on top of the fold -- still zero Exchanges."""
-        rows = self._bucket_local_fold_frame(spark, groups, schema, num_buckets)
-        if expire_before is not None:
-            rows = rows.filter(self._ttl_keep_cond(expire_before))
-        if purge_before is not None:
-            rows = rows.filter(self._tombstone_keep_cond(purge_before))
-        snap_dir = self._snap_payload_dir(sid)
-        _data_writer(
-            rows.select(*[f.name for f in schema.fields], _BUCKET)
-        ).partitionBy(_BUCKET).parquet(snap_dir)
-        return self._scan_partitioned_output(snap_dir)
-
     def _delta_writer(self, rows: DataFrame):
         """The writer of transient delta files, clustered and flat: the
         table data writer with the dictionary page capped at
-        ``DELTA_DICT_PAGE_BYTES`` and the ``delta_compression`` codec."""
-        writer = _data_writer(rows).option(
+        ``DELTA_DICT_PAGE_BYTES``."""
+        return _data_writer(rows).option(
             "parquet.dictionary.page.size", str(self.DELTA_DICT_PAGE_BYTES)
         )
-        if self.delta_compression:
-            writer = writer.option("compression", self.delta_compression)
-        return writer
 
     def _write_flat(
         self,
         df: DataFrame,
         sid: str,
         schema: T.StructType,
-        use_delta_codec: bool = True,
+        transient: bool = True,
     ) -> list[str]:
         """Write rows as flat files under a snapshot-unique dir (no
         clustering); return the file list.  The frame's partitions decide
         the file count, coalesced to Spark's open cost when it scans
-        small local files.  ``use_delta_codec=False`` keeps the session
-        writer for files that are NOT transient (CoW change sidecars live
-        as long as the snapshot; the delta_compression contract is
-        transience)."""
+        small local files.  ``transient=True`` (delta files, folded away
+        at the next compaction) uses the delta writer; ``transient=False``
+        keeps the session writer for files that live as long as their
+        snapshot (CoW change sidecars)."""
         snap_dir = self._snap_payload_dir(sid)
         rows = self._align(df, schema).select(*[f.name for f in schema.fields])
         # a batch of many small input files would otherwise write one
@@ -1663,7 +1497,7 @@ class LocalSnapshotSink(SnapshotSink):
         n = open_cost_partitions(df.sparkSession, df.inputFiles())
         if n is not None:
             rows = rows.coalesce(n)
-        writer = self._delta_writer(rows) if use_delta_codec else _data_writer(rows)
+        writer = self._delta_writer(rows) if transient else _data_writer(rows)
         writer.parquet(snap_dir)
         return [
             os.path.join(snap_dir, fn)
@@ -4252,7 +4086,7 @@ class LocalSnapshotSink(SnapshotSink):
                 # rewrite below writes data/<sid> with mode("overwrite"),
                 # which would clobber a nested sidecar
                 change_files = self._write_flat(
-                    rows, f"{sid}-changes", new_schema, use_delta_codec=False
+                    rows, f"{sid}-changes", new_schema, transient=False
                 )
                 rows_src = self._read_files(
                     spark, change_files, T.StructType(list(new_schema.fields))
@@ -5238,7 +5072,6 @@ class LocalSnapshotSink(SnapshotSink):
         min_bucket_bytes: int | None = None,
         target_file_bytes: int | None = None,
         sort: bool | None = None,
-        local: bool | None = None,
         purge_tombstones_before=None,
         expire_rows_before=None,
         cluster_by: list[str] | None = None,
@@ -5285,8 +5118,7 @@ class LocalSnapshotSink(SnapshotSink):
         clustered dimension, not just the leading key.  Costs one extra
         Exchange over plain compaction (the winners-only range pass --
         the Delta OPTIMIZE ZORDER shape) and is mutually exclusive with
-        ``sort`` (one physical order per file).  Falls back from the
-        exchange-free local fold (the range pass needs the shuffle).
+        ``sort`` (one physical order per file).
 
         ``purge_tombstones_before`` (datetime or ISO string; default: the
         sink's ``tombstone_retention_seconds`` against the event-time high
@@ -5324,16 +5156,6 @@ class LocalSnapshotSink(SnapshotSink):
         lookups then skip files, not just buckets, and row groups carry
         tight min/max.  Sorted mode sizes files via the range sampler
         (the key-hash salt bin-packing applies to hash mode only).
-
-        ``local`` (default: the sink's ``compact_bucket_local``) folds
-        each bucket's already-clustered files EXCHANGE-FREE (see
-        :meth:`_bucket_local_fold_frame`): flat deltas are first
-        clustered by a minor consolidation (shuffle = O(delta bytes)),
-        then the major fold moves ZERO bytes through shuffle.  Output is
-        key-sorted per file as a side effect, so ``sort`` stats come at
-        no extra shuffle.  Falls back to the single-Exchange path when
-        ``target_file_bytes`` bin-packing is requested (file splitting
-        needs the salted repartition).
         """
         # one maintenance fold at a time: an explicit compact() barriers
         # behind any pending merge-triggered background fold (errors from
@@ -5434,29 +5256,6 @@ class LocalSnapshotSink(SnapshotSink):
             from fetchez_spark.plans.zorder import check_cluster_types
 
             check_cluster_types(schema, list(cluster_by))
-        local_eff = self.compact_bucket_local if local is None else local
-        if local_eff and self.merge_mode == "partial":
-            if local:
-                raise ValueError(
-                    "compact(local=True) is not supported on merge_mode="
-                    "'partial' tables: the Arrow bucket-local fold "
-                    "implements full-row LWW only"
-                )
-            local_eff = False
-        use_local = local_eff and not (
-            target_file_bytes or self.target_file_bytes or cluster_by
-        )
-        if use_local and delta_map.get(_FLAT):
-            # flat deltas are unclustered: cluster them FIRST with a minor
-            # consolidation (shuffle = O(delta bytes) -- the ONLY shuffle
-            # these events' bytes ever see), then fold exchange-free
-            self.compact(spark, minor=True)
-            cur = self.manifest()
-            schema = T.StructType.fromJson(cur["schema"])
-            delta_map = self._resolve_map(cur.get("deltas", {}))
-            base_map = self._resolve_map(cur["files"])
-            if delta_map.get(_FLAT):
-                use_local = False  # rebucket raced the consolidation
         has_flat = bool(delta_map.get(_FLAT))
         gc_requested = (
             purge_tombstones_before is not None or expire_rows_before is not None
@@ -5568,74 +5367,50 @@ class LocalSnapshotSink(SnapshotSink):
         # sampler above runs a Spark job, and a claim taken before it would
         # leak (live-pid-shielded) if that job failed
         sid = self._claim_sid(cur)
-        if use_local:
-            with self._claim_guard(sid):
-                written = self._fold_bucket_local(
-                    spark,
-                    {
-                        b: [
-                            f
-                            for f in base_map.get(b, [])
-                            if f not in kept_set
-                        ]
-                        + delta_map.get(b, [])
-                        for b in todo
-                    },
-                    sid,
-                    schema,
-                    int(cur["num_buckets"]),
-                    purge_before=purge,
-                    expire_before=expire,
-                )
-        else:
-            target = target_file_bytes or self.target_file_bytes
-            fanout_map: dict[int, int] | None = None
-            n_parts = max(len(todo), cur["num_buckets"] if has_flat else 1)
-            if target:
-                bsizes = self._sizes_by_bucket(
-                    {
-                        b: [
-                            f
-                            for f in base_map.get(b, [])
-                            if f not in kept_set
-                        ]
-                        + delta_map.get(b, [])
-                        for b in todo
-                    }
-                )
-                fanout_map = {
-                    int(b): max(1, -(-int(n) // int(target))) for b, n in bsizes.items()
+        target = target_file_bytes or self.target_file_bytes
+        fanout_map: dict[int, int] | None = None
+        n_parts = max(len(todo), cur["num_buckets"] if has_flat else 1)
+        if target:
+            bsizes = self._sizes_by_bucket(
+                {
+                    b: [f for f in base_map.get(b, []) if f not in kept_set]
+                    + delta_map.get(b, [])
+                    for b in todo
                 }
-                n_parts = max(n_parts, sum(fanout_map.values()))
-            if cluster_expr is not None:
-                # file sizing comes from the range sampler: keep the
-                # target-derived n_parts (file grain) but not the hash salt
-                fanout_map = None
-            combine = (
-                fanout_map is None
-                and not sort_eff
-                and cluster_expr is None
-                and self._fold_combine_first(files)
             )
-            with self._claim_guard(sid):
-                written = self._dedup_write_bucketed(
-                    self._read_files(
-                        spark, files, schema,
-                        imported=self._imported_set(cur),
-                    ).withColumn(
-                        _BUCKET, self._bucket_expr(cur["num_buckets"])
-                    ),
-                    sid,
-                    n_parts,
-                    schema,
-                    fanout_map=fanout_map,
-                    sort_output=sort_eff,
-                    purge_before=purge,
-                    expire_before=expire,
-                    cluster_expr=cluster_expr,
-                    combine_first=combine,
-                    num_buckets=int(cur["num_buckets"]),
-                )
+            fanout_map = {
+                int(b): max(1, -(-int(n) // int(target))) for b, n in bsizes.items()
+            }
+            n_parts = max(n_parts, sum(fanout_map.values()))
+        if cluster_expr is not None:
+            # file sizing comes from the range sampler: keep the
+            # target-derived n_parts (file grain) but not the hash salt
+            fanout_map = None
+        combine = (
+            fanout_map is None
+            and not sort_eff
+            and cluster_expr is None
+            and self._fold_combine_first(files)
+        )
+        with self._claim_guard(sid):
+            written = self._dedup_write_bucketed(
+                self._read_files(
+                    spark, files, schema,
+                    imported=self._imported_set(cur),
+                ).withColumn(
+                    _BUCKET, self._bucket_expr(cur["num_buckets"])
+                ),
+                sid,
+                n_parts,
+                schema,
+                fanout_map=fanout_map,
+                sort_output=sort_eff,
+                purge_before=purge,
+                expire_before=expire,
+                cluster_expr=cluster_expr,
+                combine_first=combine,
+                num_buckets=int(cur["num_buckets"]),
+            )
         # per-file key ranges for the files this fold produced (one
         # column-pruned O(written) job); entries for the files this fold
         # REPLACES are trimmed below under the lock.  The whole stats

@@ -394,18 +394,6 @@ def test_merge_mode_recorded_and_adopted(spark, tmp_path):
         LocalSnapshotSink(other.table_dir, merge_mode="partial")
 
 
-def test_partial_rejects_bucket_local_fold(spark, tmp_path):
-    with pytest.raises(ValueError, match="bucket_local"):
-        _mk(spark, tmp_path, name="bl", compact_bucket_local=True)
-    sink = _mk(spark, tmp_path, name="ok")
-    sink.merge(
-        _df(spark, [("U", "A", 0, "user", "hi", None, _ts(1), 1)]),
-        batch_token="b-0",
-    )
-    with pytest.raises(ValueError, match="local"):
-        sink.compact(spark, local=True)
-
-
 def test_internal_name_collision_rejected(spark, tmp_path):
     sink = _mk(spark, tmp_path)
     bad = spark.createDataFrame(

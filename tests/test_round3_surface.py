@@ -314,34 +314,6 @@ def test_iceberg_widening_ddl(spark):
     ]
 
 
-def test_delta_compression_knob_writes_codec(spark, tmp_path):
-    """Leveled compression: transient delta files can use a lighter codec
-    than compacted bases (RocksDB shape).  Measured on this box zstd wins
-    anyway (~2% over lz4 at 32 cores), so None (session codec) is the
-    default -- the knob exists for IO-bound deployments."""
-    import datetime as dt
-
-    from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink
-
-    t = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
-    sink = LocalSnapshotSink(str(tmp_path / "t"), num_buckets=2, delta_compression="lz4")
-    sink.merge(
-        spark.createDataFrame(
-            [("c1", 0, "u", "x", None, t, "upsert", 1)],
-            "conv_id string, turn_idx int, role string, text string, tool string, "
-            "ts timestamp, op string, seq long",
-        ),
-        "d-0",
-    )
-    deltas = [f for fs in sink.delta_lists().values() for f in fs]
-    assert deltas and all(".lz4" in f for f in deltas)  # lz4hadoop suffix
-    # compaction re-encodes with the session codec (zstd default)
-    sink.compact(spark)
-    bases = [f for fs in sink.file_lists().values() for f in fs]
-    assert bases and all(".lz4" not in f for f in bases)
-    assert sink.read(spark).count() == 1
-
-
 def test_cli_maintain_command(spark, tmp_path, capsys):
     """CLI maintenance surface: compact + vacuum + expire + rollback in
     one dispatch (the table-upkeep analog of the reference's cleanup
@@ -445,27 +417,3 @@ def test_expire_keep_last_zero_keeps_current_only(spark, tmp_path):
         "keep_last=0 keeps exactly the current pointer (was a silent no-op)"
     )
     assert sink.read(spark).count() == 3
-
-
-def test_cow_change_sidecar_ignores_delta_codec(spark, tmp_path):
-    """delta_compression's contract is TRANSIENCE; CoW change sidecars are
-    permanent (served by read_changes for the snapshot's lifetime), so
-    they must keep the session codec."""
-    import datetime as dt
-
-    from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink
-
-    t = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
-    sink = LocalSnapshotSink(
-        str(tmp_path / "t"), num_buckets=1, mode="cow", delta_compression="lz4"
-    )
-    sink.merge(
-        spark.createDataFrame(
-            [("c1", 0, "u", "x", None, t, "upsert", 1)],
-            "conv_id string, turn_idx int, role string, text string, tool string, "
-            "ts timestamp, op string, seq long",
-        ),
-        "m-0",
-    )
-    chg = sink._resolve_list(sink.manifest()["change_files"])
-    assert chg and all(".lz4" not in f for f in chg)

@@ -204,20 +204,6 @@ def test_minor_compact_never_purges(spark, tmp_path):
     assert sink.read(spark).filter("conv_id = 'c2'").count() == 0
 
 
-def test_local_fold_purges_exchange_free(spark, tmp_path):
-    """The bucket-local (exchange-free) major fold honors the horizon too;
-    the GC filter is a narrow dependency on top of the fold."""
-    sink = _seed(spark, tmp_path, compact_bucket_local=True)
-    sink.compact(spark)  # establish clustered bases
-    sink.delete_where(spark, "conv_id IN ('c1', 'c3')")
-    sink.compact(spark, purge_tombstones_before=_ts(3))
-    # c1 tombstones (ts 1,2) purged; c3 (ts 4) survives
-    assert _dead_keys(spark, sink) == {("c3", 0)}
-    assert {(r["conv_id"], r["turn_idx"]) for r in sink.read(spark).collect()} == {
-        ("c2", 0)
-    }
-
-
 # ------------------------------------------------------------------ CLI face
 def test_cli_delete_where_and_purge(spark, tmp_path, capsys):
     """One dispatch covers GDPR erasure end to end: --delete-where

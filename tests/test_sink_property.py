@@ -54,12 +54,10 @@ def _oracle(rows):
     compact_mid=st.booleans(),
     mode=st.sampled_from(["mor", "cow"]),
     clustered=st.booleans(),
-    local_fold=st.booleans(),
     dv=st.sampled_from([None, 0.5, 0.99]),
 )
 def test_sink_matches_oracle_any_batching_any_mode(
-    spark, tmp_path_factory, events, split, compact_mid, mode, clustered,
-    local_fold, dv
+    spark, tmp_path_factory, events, split, compact_mid, mode, clustered, dv
 ):
     rows = _rows(events)
     cut = min(split, len(rows))
@@ -77,11 +75,10 @@ def test_sink_matches_oracle_any_batching_any_mode(
     b1 = spark.createDataFrame(rows[:cut], CHANGE_EVENT_SCHEMA)
     sink.merge(b1, "b1")
     if compact_mid:
-        # local_fold=True takes the exchange-free bucket-local fold
-        # (minor-first when flat deltas exist); dv adds the
-        # live-fraction-aware fold (kept files + mv buckets) -- every
-        # path must be state-identical under any batching/mode/layout
-        sink.compact(spark, local=local_fold, min_dead_fraction=dv)
+        # dv adds the live-fraction-aware fold (kept files + mv
+        # buckets) -- every path must be state-identical under any
+        # batching/mode/layout
+        sink.compact(spark, min_dead_fraction=dv)
     if rows[cut:]:
         sink.merge(spark.createDataFrame(rows[cut:], CHANGE_EVENT_SCHEMA), "b2")
     got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in sink.read(spark).collect()}

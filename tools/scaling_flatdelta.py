@@ -45,10 +45,6 @@ CONFIGS = {
     # fast-append: flat delta files, zero ingest shuffle; periodic
     # compaction does the clustering
     "flat": {"FETCHEZ_CLUSTER_DELTAS": "0"},
-    # the full byte-minimizing path: flat append (zero ingest shuffle)
-    # + exchange-free bucket-local major folds -- steady-state shuffle
-    # is ONE minor-clustering pass over each event's bytes, nothing else
-    "flat_local": {"FETCHEZ_CLUSTER_DELTAS": "0", "FETCHEZ_LOCAL_COMPACT": "1"},
 }
 
 # re-measure a subset without the full 18-run matrix, e.g.
