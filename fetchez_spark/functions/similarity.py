@@ -209,26 +209,12 @@ class IVFIndex:
         safely with writers).  A fresh session then serves probes straight
         from the table it indexes -- no sidecar file to distribute."""
         payload = self._payload()
-        with sink._commit_lock():
-            latest = sink.manifest()
-            sid = sink._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "ann_index": sink._pack_blob(payload),
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "ann_index_updated": True,
-                },
-            }
-            # metadata-only commit: must not inherit the parent's CoW
-            # change sidecar (read_changes would double-emit that batch)
-            manifest.pop("change_files", None)
-            sink._commit(manifest)
-        return sid
+        return sink._commit_metadata(
+            lambda latest: (
+                {"ann_index": sink._pack_blob(payload)},
+                {"ann_index_updated": True},
+            )
+        )["snapshot_id"]
 
     @classmethod
     def load_from_table(cls, sink) -> "IVFIndex":

@@ -193,27 +193,14 @@ class ConversationView(IncrementalView):
         sink = self.store
         if sink.manifest().get("convview_def"):
             return
-        with sink._commit_lock():
-            latest = sink.manifest()
-            if latest.get("convview_def"):
-                return
-            sid = sink._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "convview_def": sink._pack_blob(self._definition()),
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "convview_def_updated": True,
-                },
-            }
-            # metadata-only commit: must not inherit the parent's CoW
-            # change sidecar (read_changes would double-emit that batch)
-            manifest.pop("change_files", None)
-            sink._commit(manifest)
+        sink._commit_metadata(
+            lambda latest: None
+            if latest.get("convview_def")
+            else (
+                {"convview_def": sink._pack_blob(self._definition())},
+                {"convview_def_updated": True},
+            )
+        )
 
     @classmethod
     def load(cls, store_dir: str) -> "ConversationView":

@@ -260,29 +260,14 @@ class TableMirror(RetentionPinMixin):
         sink = self.target
         if sink.manifest().get("mirror_def"):
             return
-        with sink._commit_lock():
-            latest = sink.manifest()
-            if latest.get("mirror_def"):
-                return
-            sid = sink._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "mirror_def": sink._pack_blob(
-                    {"source_dir": self.source.table_dir}
-                ),
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "mirror_def_updated": True,
-                },
-            }
-            # metadata-only commit: must not inherit the parent's CoW
-            # change sidecar (read_changes would double-emit that batch)
-            manifest.pop("change_files", None)
-            sink._commit(manifest)
+        sink._commit_metadata(
+            lambda latest: None
+            if latest.get("mirror_def")
+            else (
+                {"mirror_def": sink._pack_blob({"source_dir": self.source.table_dir})},
+                {"mirror_def_updated": True},
+            )
+        )
 
     @classmethod
     def load(cls, target_dir: str) -> "TableMirror":

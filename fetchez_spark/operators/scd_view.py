@@ -388,36 +388,22 @@ class SCD2View(IncrementalView):
         sink = self.store
         if self._check_definition(sink.manifest().get("scd2_def")):
             return
-        with sink._commit_lock():
-            latest = sink.manifest()
-            if self._check_definition(latest.get("scd2_def")):
-                return
-            sid = sink._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "scd2_def": sink._pack_blob(
-                    {
-                        "source_dir": self.source.table_dir,
-                        "attrs": self.attrs,
-                        # the stable identity of a pinned set: physical
-                        # names survive source rename_column
-                        "attrs_physical": self._attrs_physical,
-                        "suppress_unchanged": self.suppress_unchanged,
-                    }
-                ),
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "scd2_def_updated": True,
-                },
-            }
-            # metadata-only commit: must not inherit the parent's CoW
-            # change sidecar (read_changes would double-emit that batch)
-            manifest.pop("change_files", None)
-            sink._commit(manifest)
+        definition = {
+            "source_dir": self.source.table_dir,
+            "attrs": self.attrs,
+            # the stable identity of a pinned set: physical
+            # names survive source rename_column
+            "attrs_physical": self._attrs_physical,
+            "suppress_unchanged": self.suppress_unchanged,
+        }
+        sink._commit_metadata(
+            lambda latest: None
+            if self._check_definition(latest.get("scd2_def"))
+            else (
+                {"scd2_def": sink._pack_blob(definition)},
+                {"scd2_def_updated": True},
+            )
+        )
 
     @classmethod
     def load(cls, store_dir: str) -> "SCD2View":

@@ -157,33 +157,22 @@ class TokenIndexView(IncrementalView):
         sink = self.store
         if sink.manifest().get(self._DEF_KEY):
             return
-        with sink._commit_lock():
-            latest = sink.manifest()
-            if latest.get(self._DEF_KEY):
-                return
-            sid = sink._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                self._DEF_KEY: sink._pack_blob(
-                    {
-                        "source_dir": self.source.table_dir,
-                        "text_col": self.text_col,
-                        "num_buckets": latest["num_buckets"],
-                    }
-                ),
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "tokidx_def_updated": True,
+        sink._commit_metadata(
+            lambda latest: None
+            if latest.get(self._DEF_KEY)
+            else (
+                {
+                    self._DEF_KEY: sink._pack_blob(
+                        {
+                            "source_dir": self.source.table_dir,
+                            "text_col": self.text_col,
+                            "num_buckets": latest["num_buckets"],
+                        }
+                    )
                 },
-            }
-            # metadata-only commit: must not inherit the parent's CoW
-            # change sidecar (read_changes would double-emit that batch)
-            manifest.pop("change_files", None)
-            sink._commit(manifest)
+                {"tokidx_def_updated": True},
+            )
+        )
 
     @classmethod
     def load(cls, store_dir: str) -> "TokenIndexView":

@@ -168,27 +168,14 @@ class VectorIndexView(IncrementalView):
         sink = self.store
         if sink.manifest().get(_DEF_KEY):
             return
-        with sink._commit_lock():
-            latest = sink.manifest()
-            if latest.get(_DEF_KEY):
-                return
-            sid = sink._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                _DEF_KEY: sink._pack_blob(self._definition()),
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "vecidx_def_updated": True,
-                },
-            }
-            # metadata-only commit: must not inherit the parent's CoW
-            # change sidecar (read_changes would double-emit that batch)
-            manifest.pop("change_files", None)
-            sink._commit(manifest)
+        sink._commit_metadata(
+            lambda latest: None
+            if latest.get(_DEF_KEY)
+            else (
+                {_DEF_KEY: sink._pack_blob(self._definition())},
+                {"vecidx_def_updated": True},
+            )
+        )
 
     @classmethod
     def load(cls, store_dir: str) -> "VectorIndexView":

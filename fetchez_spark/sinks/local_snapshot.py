@@ -18,7 +18,15 @@ tokens are a bounded sliding window for the same reason.  Data dirs hold
 no ``_SUCCESS`` markers: the commit point is the VERSION swap.
 
 Manifest (the "snapshot"): schema, parent pointer, per-bucket base-file and
-delta-file lists, committed batch tokens, row stats.  A commit is:
+delta-file lists, committed batch tokens, row stats, plus catalog state
+(properties, expectations, view definitions, ...).  One rule says what a
+new snapshot inherits: every top-level key of its parent except
+``snapshot_id``, ``parent`` and the per-commit keys ``stats``,
+``change_files`` and ``ts_stats_new``; the commit then sets the keys it
+changes.  ``stats.delta_commits`` carries over unless the commit resets
+it, and the parent's ``committed_at`` is the floor of the child's stamp.
+Every top-level ``ref:`` value is a live payload for expiry, fsck and
+clones.  A commit is:
 
 1. write new data files under a snapshot-unique directory (never mutates
    existing files -- crash mid-write leaves unreferenced orphans only);
@@ -121,32 +129,25 @@ def _internal_names(columns) -> list[str]:
     StructType or a list of names)."""
     names = columns.names if hasattr(columns, "names") else columns
     return [c for c in names if _is_internal_name(c)]
-# manifest keys whose (blob-ref) payloads every merge carries forward and
-# snapshot expiry keeps alive: table-resident catalog state
-CATALOG_KEYS = (
-    "index", "ann_index", "key_stats", "col_stats", "key_blooms",
-    "bucket_rows", "matview_def", "mirror_def", "scd2_def",
-    # buckets whose base keeps superseded rows (compact min_dead_fraction):
-    # reads must keep LWW-folding them even with zero pending deltas, so
-    # every commit carries the marker until a full fold clears it
-    "mv_buckets",
-    # zero-copy onboarded files (import_files): the marker that tells the
-    # read paths which delta files never carried the engine's internal
-    # columns and need scan-time normalization
-    "imported_files",
-    # column-rename indirection (physical -> logical), carried forward
-    # by every commit like the other catalog payloads
-    "logical_names",
-    # physical names of DROPPED columns: reserved so a later batch can't
-    # reuse the name and resurrect stale values from pre-drop files
-    "retired_columns",
-    # persisted maintenance/retention policy (see _TABLE_PROPERTIES)
-    "properties",
-    # persisted write-time data-quality gates (the Delta ADD CONSTRAINT
-    # analog): every writer of the table enforces them, not just the
-    # session that declared them
-    "expectations",
-)
+
+
+# manifest keys that describe ONE commit and are never inherited by its
+# child (see LocalSnapshotSink._child_manifest): the commit's own stats,
+# its CoW change set, and the event-time stats of that change set
+_PER_COMMIT_KEYS = ("stats", "change_files", "ts_stats_new")
+
+
+def _payload_refs(manifest: dict) -> dict[str, str]:
+    """Every top-level blob ref of a manifest (catalog payloads, view
+    definitions, per-commit stats, the CoW change list): the payloads
+    expiry keeps alive, fsck resolves and a clone re-packs.  A key an
+    operator adds later is covered without being registered anywhere."""
+    return {
+        k: v
+        for k, v in manifest.items()
+        if isinstance(v, str) and v.startswith("ref:")
+    }
+
 
 # Maintenance/retention knobs that are PART OF THE TABLE METADATA (the
 # Iceberg table-properties analog): recorded at bootstrap when the creating
@@ -1505,14 +1506,65 @@ class LocalSnapshotSink(SnapshotSink):
             if fn.endswith(".parquet")
         ]
 
+    @staticmethod
+    def _child_manifest(parent: dict, sid: str, stats: dict, /, **changes) -> dict:
+        """The manifest of commit ``sid`` on top of ``parent`` -- the ONE
+        inheritance rule every commit goes through.  The child carries
+        every top-level key of the parent except ``snapshot_id``,
+        ``parent`` and :data:`_PER_COMMIT_KEYS` (a commit that inherited
+        its parent's ``change_files`` would make read_changes emit that
+        batch twice), including ``committed_at``, which :meth:`_commit`
+        uses as the floor of the child's stamp.  ``stats`` is this
+        commit's tag; ``stats.delta_commits`` (the compaction cadence
+        counter) carries over unless ``stats`` resets it.  ``changes``
+        replace keys wholesale."""
+        child = {"snapshot_id": sid, "parent": parent["snapshot_id"]}
+        child.update(
+            (k, v)
+            for k, v in parent.items()
+            if k not in child and k not in _PER_COMMIT_KEYS
+        )
+        child["stats"] = {
+            "delta_commits": int((parent.get("stats") or {}).get("delta_commits", 0)),
+            **stats,
+        }
+        child.update(changes)
+        return child
+
+    def _committed_with(self, parent: dict, token: str, sid: str) -> dict:
+        """``parent``'s committed-token window plus ``token -> sid``; the
+        oldest tokens past ``max_committed_tokens`` fall out."""
+        committed = dict(parent["committed_batches"])
+        committed[token] = sid
+        for k in list(committed)[: max(0, len(committed) - self.max_committed_tokens)]:
+            del committed[k]
+        return committed
+
+    def _commit_metadata(self, fn) -> dict | None:
+        """One metadata-only commit (no data files): under the commit
+        lock, ``fn(latest)`` returns ``(changes, stats)`` -- the keys to
+        replace and this commit's stats tag -- or ``None`` to commit
+        nothing.  Returns the committed manifest, or ``None``."""
+        with self._commit_lock():
+            latest = self.manifest()
+            step = fn(latest)
+            if step is None:
+                return None
+            changes, stats = step
+            manifest = self._child_manifest(
+                latest, self._claim_sid(latest), stats, **changes
+            )
+            self._commit(manifest)
+        return manifest
+
     def _commit(self, manifest: dict) -> None:
-        # wall-clock commit stamp for AS-OF-timestamp time travel.  New
-        # manifests are built as {**parent_manifest, ...}, so the value
-        # present here IS the parent's stamp -- taking max() keeps the
-        # chain monotone under clock skew between writers (Iceberg's
-        # snapshot timestamp-ms contract).
+        # wall-clock commit stamp for AS-OF-timestamp time travel.  The
+        # manifest carries its parent's stamp (_child_manifest), so max()
+        # keeps the chain STRICTLY monotone under clock steps and skew
+        # between writers (Iceberg's snapshot timestamp-ms contract): every
+        # snapshot stays resolvable by its own stamp.
         manifest["committed_at"] = max(
-            time.time(), float(manifest.get("committed_at") or 0.0)
+            time.time(), float(manifest.get("committed_at") or 0.0) + 1e-6
         )
         self._write_manifest(manifest)
         self._set_version(manifest["snapshot_id"])  # <- the atomic commit point
@@ -2314,14 +2366,16 @@ class LocalSnapshotSink(SnapshotSink):
                 "'ts' cannot be renamed: it defines LWW ordering and the "
                 "engine's event-time surface (watermarks, windows, stats)"
             )
-        with self._commit_lock():
-            latest = self.manifest()
+        p = None
+
+        def change(latest):
+            nonlocal p
             schema = T.StructType.fromJson(latest["schema"])
             lmap = dict(latest.get("logical_names") or {})
             physicals = [
                 f.name for f in schema.fields if not _is_internal_name(f.name)
             ]
-            logical_now = {lmap.get(p, p): p for p in physicals}
+            logical_now = {lmap.get(c, c): c for c in physicals}
             if old not in logical_now:
                 raise ValueError(
                     f"no column named {old!r} (columns: {sorted(logical_now)})"
@@ -2345,23 +2399,9 @@ class LocalSnapshotSink(SnapshotSink):
                 )
             else:
                 lmap[p] = new
-            sid = self._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "logical_names": lmap,
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "renamed": [old, new],
-                },
-            }
-            # metadata-only commit: no change set of its own
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
-            self._commit(manifest)
+            return {"logical_names": lmap}, {"renamed": [old, new]}
+
+        sid = self._commit_metadata(change)["snapshot_id"]
         return {"snapshot_id": sid, "renamed": {old: new}, "physical": p}
 
     def drop_column(self, name: str) -> dict[str, Any]:
@@ -2375,8 +2415,10 @@ class LocalSnapshotSink(SnapshotSink):
         is RETIRED: a later batch reusing it errors loudly (stale values
         in pre-drop files would resurrect under name-based projection).
         Key columns and ``ts`` cannot be dropped."""
-        with self._commit_lock():
-            latest = self.manifest()
+        p = None
+
+        def change(latest):
+            nonlocal p
             schema = T.StructType.fromJson(latest["schema"])
             lmap = dict(latest.get("logical_names") or {})
             logical_now = {
@@ -2409,24 +2451,13 @@ class LocalSnapshotSink(SnapshotSink):
             for d in sorted(dead):
                 if d not in retired:
                     retired.append(d)
-            sid = self._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
+            return {
                 "schema": new_schema.jsonValue(),
                 "logical_names": lmap,
                 "retired_columns": retired,
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "dropped": [name],
-                },
-            }
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
-            self._commit(manifest)
+            }, {"dropped": [name]}
+
+        sid = self._commit_metadata(change)["snapshot_id"]
         return {"snapshot_id": sid, "dropped": name, "physical": p}
 
     def set_logical_names(self, lmap: dict[str, str]) -> dict[str, Any]:
@@ -2436,27 +2467,15 @@ class LocalSnapshotSink(SnapshotSink):
         source's map is directly valid on a replica.  Entries whose
         physical column the table does not (yet) have are kept: they
         become effective when the column arrives via schema evolution."""
-        with self._commit_lock():
-            latest = self.manifest()
-            if (latest.get("logical_names") or {}) == (lmap or {}):
-                return {"snapshot_id": latest["snapshot_id"], "skipped": True}
-            sid = self._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "logical_names": dict(lmap or {}),
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "renamed": ["<adopted>", "<adopted>"],
-                },
-            }
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
-            self._commit(manifest)
-        return {"snapshot_id": sid, "logical_names": dict(lmap or {})}
+        lmap = dict(lmap or {})
+        m = self._commit_metadata(
+            lambda latest: None
+            if (latest.get("logical_names") or {}) == lmap
+            else ({"logical_names": lmap}, {"renamed": ["<adopted>", "<adopted>"]})
+        )
+        if m is None:
+            return {"snapshot_id": self.current_snapshot_id, "skipped": True}
+        return {"snapshot_id": m["snapshot_id"], "logical_names": dict(lmap)}
 
     def read_quarantine(self, spark: SparkSession) -> DataFrame:
         """All rows quarantined by write-time expectations across commits,
@@ -4027,11 +4046,6 @@ class LocalSnapshotSink(SnapshotSink):
         if inflight is None:
             inflight = self.__dict__.setdefault("_inflight", threading.local())
         inflight.sid = sid
-        # refs/lists pass through untouched for buckets this commit does
-        # not modify -- that is what makes commit metadata O(touched)
-        new_files = dict(cur["files"])
-        new_deltas = dict(cur.get("deltas", {}))
-        stats: dict[str, Any]
 
         written: list[str] = []
         change_files: list[str] = []  # CoW-only changes sidecar
@@ -4054,17 +4068,11 @@ class LocalSnapshotSink(SnapshotSink):
                     rows_b, sid, nb, new_schema, fanout=self.write_fanout
                 )
                 for b, fs in written_map.items():
-                    new_deltas[b] = self._resolve_list(new_deltas.get(b, [])) + fs
                     written_bytes[b] = sum(os.path.getsize(f) for f in fs)
                 written = [f for fs in written_map.values() for f in fs]
             else:
                 written = self._write_flat(rows, sid, new_schema)
-                new_deltas[_FLAT] = self._resolve_list(new_deltas.get(_FLAT, [])) + written
                 written_bytes[_FLAT] = sum(os.path.getsize(f) for f in written)
-            stats = {
-                "delta_files": self._count_files(new_deltas),
-                "delta_commits": int(cur.get("stats", {}).get("delta_commits", 0)) + 1,
-            }
         else:
             # 3b. copy-on-write: rewrite the buckets the batch touches.
             # Touched set comes from a cheap distinct over <= num_buckets
@@ -4128,12 +4136,6 @@ class LocalSnapshotSink(SnapshotSink):
             written_map = self._dedup_write_bucketed(
                 unioned, sid, len(touched), new_schema
             )
-            # manifest application (clear touched buckets, apply
-            # written_map, FLAT trimming) happens in _manifest_for's CoW
-            # reconcile branch -- the single code path for contended AND
-            # uncontended commits.  `stats` stays the seed the metrics
-            # harvest below mutates; _manifest_for rebuilds stats_ itself.
-            stats = {"touched_buckets": len(touched)}
             metrics["touched_buckets"] = len(touched)
 
         # harvest metrics BEFORE the manifest commit so the high-watermark
@@ -4142,8 +4144,8 @@ class LocalSnapshotSink(SnapshotSink):
         # from ONE column-pruned stats job over the JUST-WRITTEN delta
         # files (three tiny columns, page-cached) -- either way the batch
         # itself is never scanned twice.
-        new_hwm = hwm
         max_ts = None
+        delta_buckets: list[int] = []
         if use_observe:
             got_in, got_out = obs_in.get, obs_out.get
             max_ts = got_in.get("max_ts")
@@ -4247,11 +4249,9 @@ class LocalSnapshotSink(SnapshotSink):
                 .collect()
             )
             if track_buckets:
-                touched_new = sorted(
+                delta_buckets = sorted(
                     {int(b) for r in per_part for b in (r["bk"] or [])}
                 )
-                if touched_new:
-                    stats["delta_buckets"] = touched_new
             if self.collect_metrics:
                 metrics["rows_in_per_src_partition"] = {
                     int(r[INTERNAL_SRC]): int(r["n"])
@@ -4274,23 +4274,13 @@ class LocalSnapshotSink(SnapshotSink):
                     metrics["rows_too_late"] = 0
                     metrics["rows_deduped"] = total  # fast path writes verbatim
                     metrics["rows_deleted"] = sum(int(r["d"] or 0) for r in per_part)
-        if max_ts is not None:
-            iso = max_ts.isoformat(sep=" ")
-            new_hwm = max(hwm, iso) if hwm else iso
+        ours = max_ts.isoformat(sep=" ") if max_ts is not None else None
         if self.collect_metrics:
             metrics.setdefault("rows_in", 0)
             metrics.setdefault("rows_too_late", 0)
             metrics.setdefault("rows_deduped", 0)
             metrics.setdefault("rows_deleted", 0)
             metrics["rows_upserted"] = metrics["rows_deduped"] - metrics["rows_deleted"]
-            metrics["high_watermark"] = new_hwm
-            stats.update(
-                {
-                    "rows_in": metrics["rows_in"],
-                    "rows_upserted": metrics["rows_upserted"],
-                    "rows_deleted": metrics["rows_deleted"],
-                }
-            )
 
         # ---- commit: optimistic-concurrency manifest swap.  The expensive
         # data-file writes above ran unlocked; under the (driver-side,
@@ -4305,64 +4295,64 @@ class LocalSnapshotSink(SnapshotSink):
         # fast path could reuse the footer maxima for the watermark.)
 
         def _manifest_for(base: dict) -> dict:
-            # CoW always flows through the validated reconcile branch --
-            # the uncontended case is its base==cur degenerate form (every
-            # comparison trivially equal), so the rewrite-application
-            # logic (clear touched, apply written_map, FLAT trimming)
-            # exists exactly once and cannot diverge between the two.
-            if base["snapshot_id"] == cur["snapshot_id"] and self.mode != "cow":
-                files_, deltas_ = new_files, new_deltas
-                schema_, stats_, hwm_ = new_schema, stats, new_hwm
-            else:
-                files_ = dict(base["files"])
-                deltas_ = dict(base.get("deltas", {}))
-                if self.mode == "cow":
-                    # Iceberg-style OPTIMISTIC concurrency for CoW: the
-                    # rewrite stands iff no interleaved commit changed the
-                    # inputs it folded -- the touched buckets' base files
-                    # and clustered deltas, the FLAT delta list (its rows
-                    # for touched buckets were folded in), and the bucket
-                    # layout.  Disjoint-bucket writers commit concurrently
-                    # (their rewrites read and replace different state);
-                    # overlapping ones raise and the caller retries the
-                    # merge -- this batch token was never committed, so
-                    # the retry is exactly-once.  Validation compares the
-                    # PACKED per-bucket entries: a commit that does not
-                    # touch a bucket carries its entry through verbatim,
-                    # so inequality is exactly "someone changed it" (a
-                    # false positive only costs a retry).
-                    conflict = None
-                    if int(base.get("num_buckets", nb)) != nb:
-                        conflict = "a rebucket committed"
-                    elif deltas_.get(_FLAT) != cur.get("deltas", {}).get(_FLAT):
-                        conflict = "the flat delta list changed"
-                    else:
-                        for b in touched:
-                            bs = str(b)
-                            if files_.get(bs) != cur["files"].get(bs) or deltas_.get(
-                                bs
-                            ) != cur.get("deltas", {}).get(bs):
-                                conflict = f"bucket {bs} was rewritten"
-                                break
-                    if conflict:
-                        # the rewrite output is built on stale inputs --
-                        # reclaim the claim now (live-pid sentinels would
-                        # shield it from vacuum for the driver's lifetime).
-                        # defer_delete: we hold the commit lock; merge's
-                        # conflict handler empties the trash after release
-                        self._abort_claim(sid, defer_delete=True)
-                        raise ConcurrentWriteConflict(
-                            f"{conflict} during this CoW rewrite; committing "
-                            "would overwrite the concurrent change -- retry "
-                            "the merge (this batch token was not committed)"
-                        )
+            # ONE code path for contended and uncontended commits: the
+            # uncontended case is the base==cur degenerate form (every
+            # reconcile comparison trivially equal), so the application
+            # logic exists exactly once and cannot diverge between the two.
+            # Refs pass through untouched for buckets this commit does not
+            # modify -- that is what makes commit metadata O(touched).
+            files_ = dict(base["files"])
+            deltas_ = dict(base.get("deltas", {}))
+            rebucketed = int(base.get("num_buckets", nb)) != nb
+            if self.mode == "cow":
+                # Iceberg-style OPTIMISTIC concurrency for CoW: the
+                # rewrite stands iff no interleaved commit changed the
+                # inputs it folded -- the touched buckets' base files
+                # and clustered deltas, the FLAT delta list (its rows
+                # for touched buckets were folded in), and the bucket
+                # layout.  Disjoint-bucket writers commit concurrently
+                # (their rewrites read and replace different state);
+                # overlapping ones raise and the caller retries the
+                # merge -- this batch token was never committed, so
+                # the retry is exactly-once.  Validation compares the
+                # PACKED per-bucket entries: a commit that does not
+                # touch a bucket carries its entry through verbatim,
+                # so inequality is exactly "someone changed it" (a
+                # false positive only costs a retry).
+                conflict = None
+                if rebucketed:
+                    conflict = "a rebucket committed"
+                elif deltas_.get(_FLAT) != cur.get("deltas", {}).get(_FLAT):
+                    conflict = "the flat delta list changed"
+                else:
                     for b in touched:
-                        files_[str(b)] = []
-                        deltas_[str(b)] = []
-                    files_.update(written_map)
-                    if deltas_.get(_FLAT) and set(map(str, touched)) >= set(files_):
-                        deltas_[_FLAT] = []
-                elif int(base.get("num_buckets", nb)) != nb:
+                        bs = str(b)
+                        if files_.get(bs) != cur["files"].get(bs) or deltas_.get(
+                            bs
+                        ) != cur.get("deltas", {}).get(bs):
+                            conflict = f"bucket {bs} was rewritten"
+                            break
+                if conflict:
+                    # the rewrite output is built on stale inputs --
+                    # reclaim the claim now (live-pid sentinels would
+                    # shield it from vacuum for the driver's lifetime).
+                    # defer_delete: we hold the commit lock; merge's
+                    # conflict handler empties the trash after release
+                    self._abort_claim(sid, defer_delete=True)
+                    raise ConcurrentWriteConflict(
+                        f"{conflict} during this CoW rewrite; committing "
+                        "would overwrite the concurrent change -- retry "
+                        "the merge (this batch token was not committed)"
+                    )
+                for b in touched:
+                    files_[str(b)] = []
+                    deltas_[str(b)] = []
+                files_.update(written_map)
+                if deltas_.get(_FLAT) and set(map(str, touched)) >= set(files_):
+                    deltas_[_FLAT] = []
+                stats_ = {"touched_buckets": len(touched)}
+            else:
+                if rebucketed:
                     # a rebucket() committed mid-merge: our delta files are
                     # clustered by the OLD bucketing, so their per-bucket
                     # labels would lie under the new layout.  Attach them to
@@ -4374,44 +4364,23 @@ class LocalSnapshotSink(SnapshotSink):
                         deltas_[b] = self._resolve_list(deltas_.get(b, [])) + fs
                 else:
                     deltas_[_FLAT] = self._resolve_list(deltas_.get(_FLAT, [])) + written
-                schema_ = merge_schemas(
-                    T.StructType.fromJson(base["schema"]), batch_payload_schema
-                )
-                if self.mode == "cow":
-                    stats_ = {"touched_buckets": len(touched)}
-                else:
-                    stats_ = {
-                        "delta_files": self._count_files(deltas_),
-                        "delta_commits": int(base.get("stats", {}).get("delta_commits", 0)) + 1,
+                stats_ = {
+                    "delta_files": self._count_files(deltas_),
+                    "delta_commits": int(base.get("stats", {}).get("delta_commits", 0)) + 1,
+                }
+                if delta_buckets and not rebucketed:
+                    # the bucket labels are a property of the batch, not of
+                    # which base manifest won the race -- UNLESS a rebucket
+                    # interleaved: ids computed under the old layout would lie
+                    stats_["delta_buckets"] = delta_buckets
+            if self.collect_metrics:
+                # row stats keep every commit catalog-searchable
+                stats_.update(
+                    {
+                        k: metrics[k]
+                        for k in ("rows_in", "rows_upserted", "rows_deleted")
                     }
-                    if stats.get("delta_buckets") and int(
-                        base.get("num_buckets", nb)
-                    ) == nb:
-                        # reconciled commits keep their bucket labels (a
-                        # property of the batch, not of which base manifest
-                        # won the race) -- UNLESS a rebucket interleaved:
-                        # ids computed under the old layout would lie
-                        stats_["delta_buckets"] = stats["delta_buckets"]
-                if self.collect_metrics:
-                    # contended commits must stay catalog-searchable by
-                    # their row stats, same as uncontended ones
-                    stats_.update(
-                        {
-                            k: metrics[k]
-                            for k in ("rows_in", "rows_upserted", "rows_deleted")
-                            if k in metrics
-                        }
-                    )
-                ours = max_ts.isoformat(sep=" ") if max_ts is not None else None
-                hwm_ = max(
-                    (x for x in (base.get("high_watermark"), ours) if x is not None),
-                    default=None,
                 )
-            committed = dict(base["committed_batches"])
-            committed[token] = sid
-            if len(committed) > self.max_committed_tokens:
-                for k in list(committed)[: len(committed) - self.max_committed_tokens]:
-                    del committed[k]
             token_seq = dict(base.get("token_seq", {}))
             if tok_seq is not None:
                 token_seq[tok_prefix] = max(int(token_seq.get(tok_prefix, -1)), tok_seq)
@@ -4422,7 +4391,7 @@ class LocalSnapshotSink(SnapshotSink):
             for b, n in written_bytes.items():
                 # under a mid-merge rebucket the files went to the FLAT
                 # list; account their bytes there too
-                k = b if int(base.get("num_buckets", nb)) == nb else _FLAT
+                k = _FLAT if rebucketed else b
                 delta_bytes[k] = delta_bytes.get(k, 0) + int(n)
             if self.mode == "cow":
                 for b in touched:
@@ -4432,41 +4401,35 @@ class LocalSnapshotSink(SnapshotSink):
             files_, deltas_, changes_ = self._pack_maps(
                 files_, deltas_, {"change_files": change_files}
             )
-            return {
-                "snapshot_id": sid,
-                "parent": base["snapshot_id"],
-                "schema": schema_.jsonValue(),
-                "key": base.get("key", list(self.key)),
-                # the merge mode is table metadata, carried like the key
-                **(
-                    {"merge_mode": base["merge_mode"]}
-                    if base.get("merge_mode")
-                    else {}
+            # catalog payloads + file key-range stats ride along from base
+            # (stats are keyed by immutable file paths, so a merge -- even
+            # a CoW bucket rewrite -- can only leave entries DANGLING,
+            # never wrong; sorted compaction trims)
+            return self._child_manifest(
+                base,
+                sid,
+                stats_,
+                schema=merge_schemas(
+                    T.StructType.fromJson(base["schema"]), batch_payload_schema
+                ).jsonValue(),
+                key=base.get("key", list(self.key)),
+                num_buckets=int(base.get("num_buckets", nb)),
+                files=files_,
+                deltas=deltas_,
+                committed_batches=self._committed_with(base, token, sid),
+                token_seq=token_seq,
+                delta_bytes=delta_bytes,
+                high_watermark=max(
+                    (x for x in (base.get("high_watermark"), ours) if x is not None),
+                    default=None,
                 ),
-                "num_buckets": int(base.get("num_buckets", nb)),
-                "files": files_,
-                "deltas": deltas_,
-                "committed_batches": committed,
-                "token_seq": token_seq,
-                "delta_bytes": delta_bytes,
-                "stats": stats_,
-                "high_watermark": hwm_,
                 # offsets carry FORWARD dict-merged: each consumer
                 # (stream engine, matview, mirror) owns its key, and a
                 # commit that doesn't speak for a key must not clobber
                 # another consumer's position (a drift merge or
                 # maintenance commit between mirror syncs would
                 # otherwise reset last_applied to the root)
-                "offsets": {**(base.get("offsets") or {}), **(offsets or {})} or None,
-                # catalog payloads + file key-range stats ride along
-                # untouched (stats are keyed by immutable file paths, so
-                # a merge -- even a CoW bucket rewrite -- can only leave
-                # entries DANGLING, never wrong; sorted compaction trims)
-                **{
-                    k: base[k]
-                    for k in CATALOG_KEYS
-                    if k in base
-                },
+                offsets={**(base.get("offsets") or {}), **(offsets or {})} or None,
                 # CoW precise change set (read_changes uses it over the
                 # base-file diff); MoR commits have none
                 **(changes_ if change_files else {}),
@@ -4480,7 +4443,7 @@ class LocalSnapshotSink(SnapshotSink):
                     if ts_stats_new
                     else {}
                 ),
-            }
+            )
 
         skipped_result: dict[str, Any] | None = None
         with self._conflict_trash(), self._commit_lock():
@@ -4508,6 +4471,8 @@ class LocalSnapshotSink(SnapshotSink):
         if skipped_result is not None:
             self._empty_trash()
             return skipped_result
+        if self.collect_metrics:
+            metrics["high_watermark"] = manifest["high_watermark"]
         metrics["snapshot_id"] = sid
 
         # auto-compaction, two triggers:
@@ -4836,31 +4801,14 @@ class LocalSnapshotSink(SnapshotSink):
                     k: int(v) for k, v in (latest.get("delta_bytes") or {}).items()
                 }
                 delta_bytes[_FLAT] = delta_bytes.get(_FLAT, 0) + imported_bytes
-                committed = dict(latest["committed_batches"])
-                committed[token] = sid
-                if len(committed) > self.max_committed_tokens:
-                    for k in list(committed)[: len(committed) - self.max_committed_tokens]:
-                        del committed[k]
                 packed, imported = self._pack_maps(
                     deltas_,
                     {"imported_files": sorted(self._imported_set(latest) | set(files))},
                 )
-                manifest = {
-                    **latest,
-                    "snapshot_id": sid,
-                    "parent": latest["snapshot_id"],
-                    "schema": new_schema.jsonValue(),
-                    "deltas": packed,
-                    "committed_batches": committed,
-                    "delta_bytes": delta_bytes,
-                    # the EVER-imported set: dedup memory for incremental
-                    # mode and the scan-normalization marker.  Grows with
-                    # files ever adopted (O(files), content-addressed blob
-                    # rewritten only by import commits) -- the same order
-                    # as the manifest's own file metadata, and the cost of
-                    # "never adopt the same file twice" being exact.
-                    **imported,
-                    "stats": {
+                manifest = self._child_manifest(
+                    latest,
+                    sid,
+                    {
                         "delta_files": self._count_files(deltas_),
                         "delta_commits": int(
                             latest.get("stats", {}).get("delta_commits", 0)
@@ -4869,9 +4817,18 @@ class LocalSnapshotSink(SnapshotSink):
                         "imported_files": len(files),
                         "imported_bytes": imported_bytes,
                     },
-                }
-                manifest.pop("change_files", None)
-                manifest.pop("ts_stats_new", None)
+                    schema=new_schema.jsonValue(),
+                    deltas=packed,
+                    committed_batches=self._committed_with(latest, token, sid),
+                    delta_bytes=delta_bytes,
+                    # the EVER-imported set: dedup memory for incremental
+                    # mode and the scan-normalization marker.  Grows with
+                    # files ever adopted (O(files), content-addressed blob
+                    # rewritten only by import commits) -- the same order
+                    # as the manifest's own file metadata, and the cost of
+                    # "never adopt the same file twice" being exact.
+                    **imported,
+                )
                 if ts_stats_new:
                     manifest["ts_stats_new"] = self._pack_key_stats(ts_stats_new)
                 if new_key_stats:
@@ -5214,21 +5171,17 @@ class LocalSnapshotSink(SnapshotSink):
                 else:
                     for b, fs in written.items():
                         deltas_[b] = self._resolve_list(deltas_.get(b, [])) + list(fs)
-                manifest = {
-                    **latest,
-                    "snapshot_id": sid,
-                    "parent": latest["snapshot_id"],
-                    "deltas": self._pack_maps(deltas_)[0],
-                    "delta_bytes": self._sizes_by_bucket(self._resolve_map(deltas_)),
-                    # stats built from scratch: a minor compact is a pure
-                    # maintenance commit, so it must NOT inherit the parent
-                    # merge's rows_in/rows_upserted/rows_deleted (catalog
-                    # range filters like rows_in>=N would wrongly match it)
-                    "stats": {
-                        "delta_commits": int(latest.get("stats", {}).get("delta_commits", 0)),
-                        "minor_compacted_files": len(delta_files),
-                    },
-                }
+                # stats built from scratch: a minor compact is a pure
+                # maintenance commit, so it must NOT inherit the parent
+                # merge's rows_in/rows_upserted/rows_deleted (catalog
+                # range filters like rows_in>=N would wrongly match it)
+                manifest = self._child_manifest(
+                    latest,
+                    sid,
+                    {"minor_compacted_files": len(delta_files)},
+                    deltas=self._pack_maps(deltas_)[0],
+                    delta_bytes=self._sizes_by_bucket(self._resolve_map(deltas_)),
+                )
                 # blooms: trim the consumed files' entries, add this
                 # consolidation's outputs (files are immutable, surviving
                 # entries stay valid verbatim)
@@ -5240,10 +5193,6 @@ class LocalSnapshotSink(SnapshotSink):
                     manifest["key_blooms"] = self._pack_blob(bl)
                 else:
                     manifest.pop("key_blooms", None)
-                # maintenance commits carry no change set (read_changes
-                # skips them anyway; keep the manifest honest)
-                manifest.pop("change_files", None)
-                manifest.pop("ts_stats_new", None)
                 self._commit(manifest)
             return {"snapshot_id": sid, "compacted_buckets": len(written), "minor": True}
         if cluster_by:
@@ -5539,39 +5488,27 @@ class LocalSnapshotSink(SnapshotSink):
                 {b: v for b, v in new_bucket_rows.items() if str(b) not in mv}
             )
             packed_files, packed_deltas = self._pack_maps(new_files, new_deltas)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "files": packed_files,
-                "deltas": packed_deltas,
+            manifest = self._child_manifest(
+                latest,
+                sid,
+                {"compacted_buckets": len(written), "delta_commits": dc},
+                files=packed_files,
+                deltas=packed_deltas,
                 # refresh the size-policy bookkeeping from the exact
                 # remaining delta files (maintenance path is O(deltas))
-                "delta_bytes": self._sizes_by_bucket(self._resolve_map(new_deltas)),
-                "stats": {"compacted_buckets": len(written), "delta_commits": dc},
-            }
-            if ks:
-                manifest["key_stats"] = self._pack_key_stats(ks)
-            else:
-                manifest.pop("key_stats", None)
-            if cs:
-                manifest["col_stats"] = self._pack_key_stats(cs)
-            else:
-                manifest.pop("col_stats", None)
-            if bl:
-                manifest["key_blooms"] = self._pack_blob(bl)
-            else:
-                manifest.pop("key_blooms", None)
-            if brm:
-                manifest["bucket_rows"] = brm
-            else:
-                manifest.pop("bucket_rows", None)
-            if mv:
-                manifest["mv_buckets"] = sorted(mv)
-            else:
-                manifest.pop("mv_buckets", None)
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
+                delta_bytes=self._sizes_by_bucket(self._resolve_map(new_deltas)),
+            )
+            for k, v in (
+                ("key_stats", ks and self._pack_key_stats(ks)),
+                ("col_stats", cs and self._pack_key_stats(cs)),
+                ("key_blooms", bl and self._pack_blob(bl)),
+                ("bucket_rows", brm),
+                ("mv_buckets", sorted(mv)),
+            ):
+                if v:
+                    manifest[k] = v
+                else:
+                    manifest.pop(k, None)
             self._commit(manifest)
         return {
             "snapshot_id": sid,
@@ -5684,18 +5621,17 @@ class LocalSnapshotSink(SnapshotSink):
             ]
             new_deltas = {_FLAT: survivors} if survivors else {}
             packed_files, packed_deltas = self._pack_maps(written, new_deltas)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "num_buckets": int(new_num_buckets),
-                "files": packed_files,
-                "deltas": packed_deltas,
-                "delta_bytes": self._sizes_by_bucket(new_deltas),
+            manifest = self._child_manifest(
+                latest,
+                sid,
                 # maintenance stats: state unchanged, change scans skip it;
                 # cadence counter restarts under the new layout
-                "stats": {"rebucketed_from": old_nb, "delta_commits": 0},
-            }
+                {"rebucketed_from": old_nb, "delta_commits": 0},
+                num_buckets=int(new_num_buckets),
+                files=packed_files,
+                deltas=packed_deltas,
+                delta_bytes=self._sizes_by_bucket(new_deltas),
+            )
             # every pre-rebucket file was replaced: old key stats are all
             # dangling; keep only this rewrite's sorted outputs
             if new_key_stats:
@@ -5706,8 +5642,6 @@ class LocalSnapshotSink(SnapshotSink):
             manifest.pop("key_blooms", None)  # every bloom'd file was replaced
             manifest.pop("bucket_rows", None)  # bucket ids renumbered
             manifest.pop("mv_buckets", None)  # full rewrite: single-version
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
             self._commit(manifest)
         return {
             "snapshot_id": sid,
@@ -5819,26 +5753,17 @@ class LocalSnapshotSink(SnapshotSink):
                     continue
                 rec["location"] = rec[hit]
             records.append(rec)
-        with self._commit_lock():
-            latest = self.manifest()
+        existing: list[dict[str, Any]] = []
+
+        def change(latest):
+            nonlocal existing
             existing = [] if wipe else self.index_records(latest)
-            sid = self._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "index": self._pack_blob(existing + records),
-                "stats": {
-                    "delta_commits": int(latest.get("stats", {}).get("delta_commits", 0)),
-                    "ingested_records": len(records),
-                },
-            }
-            # a metadata-only commit has NO change set: inheriting the
-            # parent's change_files would make read_changes re-emit the
-            # parent CoW batch a second time
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
-            self._commit(manifest)
+            return (
+                {"index": self._pack_blob(existing + records)},
+                {"ingested_records": len(records)},
+            )
+
+        sid = self._commit_metadata(change)["snapshot_id"]
         return {
             "snapshot_id": sid,
             "ingested": len(records),
@@ -5997,39 +5922,24 @@ class LocalSnapshotSink(SnapshotSink):
                     self._resolve_map(src["files"]),
                     self._resolve_map(src.get("deltas", {})),
                 )
-                manifest = {
-                    "snapshot_id": sid,
-                    "parent": root["snapshot_id"],
-                    "schema": src["schema"],
-                    "key": list(src.get("key") or self.key),
-                    **(
-                        {"merge_mode": src["merge_mode"]}
-                        if src.get("merge_mode")
-                        else {}
-                    ),
-                    "num_buckets": int(src["num_buckets"]),
-                    "files": files_,
-                    "deltas": deltas_,
-                    "committed_batches": dict(src.get("committed_batches") or {}),
-                    "token_seq": dict(src.get("token_seq") or {}),
-                    "delta_bytes": dict(src.get("delta_bytes") or {}),
-                    "stats": dict(src.get("stats") or {}),
-                    "high_watermark": src.get("high_watermark"),
-                    "offsets": src.get("offsets"),
-                    "cloned_from": {
+                # the cloned snapshot's metadata under the clone's root;
+                # every payload blob is re-packed into the clone
+                manifest = clone._child_manifest(
+                    src,
+                    sid,
+                    src.get("stats") or {},
+                    parent=root["snapshot_id"],
+                    key=list(src.get("key") or self.key),
+                    files=files_,
+                    deltas=deltas_,
+                    cloned_from={
                         "table_dir": os.path.abspath(self.table_dir),
                         "snapshot_id": src_sid,
                         "tag": tag,
                     },
-                }
-                for k in CATALOG_KEYS:
-                    if k not in src:
-                        continue
-                    v = src[k]
-                    if isinstance(v, str) and v.startswith("ref:"):
-                        manifest[k] = clone._pack_blob(self._resolve_blob(v))
-                    else:
-                        manifest[k] = v
+                )
+                for k, ref in _payload_refs(manifest).items():
+                    manifest[k] = clone._pack_blob(self._resolve_blob(ref))
                 clone._commit(manifest)
         except BaseException:
             try:
@@ -6422,31 +6332,17 @@ class LocalSnapshotSink(SnapshotSink):
         for k, v in props.items():
             default, coerce = _TABLE_PROPERTIES[k]
             coerced[k] = None if v is None else coerce(v)
-        with self._commit_lock():
-            latest = self.manifest()
+
+        def change(latest):
             cur = dict(latest.get("properties") or {})
             for k, v in coerced.items():
                 if v is None:
                     cur.pop(k, None)
                 else:
                     cur[k] = v
-            sid = self._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "properties": cur,
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "properties_set": sorted(coerced),
-                },
-            }
-            # metadata-only commit: no change set of its own
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
-            self._commit(manifest)
+            return {"properties": cur}, {"properties_set": sorted(coerced)}
+
+        cur = self._commit_metadata(change)["properties"]
         for k, v in coerced.items():
             default, _ = _TABLE_PROPERTIES[k]
             setattr(self, k, default if v is None else v)
@@ -6488,60 +6384,37 @@ class LocalSnapshotSink(SnapshotSink):
                     f"analyze against the table schema "
                     f"({[f.name for f in logical.fields]}): {e}"
                 ) from None
-        with self._commit_lock():
-            latest = self.manifest()
-            exps = [tuple(e) for e in latest.get("expectations") or []]
+
+        def change(latest):
+            exps = [list(e) for e in latest.get("expectations") or []]
             if any(e[0] == name for e in exps):
                 raise ValueError(
                     f"expectation {name!r} already recorded; drop it first"
                 )
-            exps.append((str(name), condition, action))
-            sid = self._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "expectations": [list(e) for e in exps],
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "expectation_added": name,
-                },
-            }
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
-            self._commit(manifest)
+            exps.append([str(name), condition, action])
+            return {"expectations": exps}, {"expectation_added": name}
+
+        m = self._commit_metadata(change)
+        sid, exps = m["snapshot_id"], [tuple(e) for e in m["expectations"]]
         self.expectations = list(exps)
         return {"snapshot_id": sid, "expectations": exps}
 
     def drop_expectation(self, name: str) -> dict[str, Any]:
         """Remove a recorded expectation (one metadata-only commit)."""
-        with self._commit_lock():
-            latest = self.manifest()
-            exps = [tuple(e) for e in latest.get("expectations") or []]
+        def change(latest):
+            exps = [list(e) for e in latest.get("expectations") or []]
             if not any(e[0] == name for e in exps):
                 raise ValueError(
                     f"no expectation named {name!r} recorded "
                     f"(recorded: {sorted(e[0] for e in exps)})"
                 )
-            exps = [e for e in exps if e[0] != name]
-            sid = self._claim_sid(latest)
-            manifest = {
-                **latest,
-                "snapshot_id": sid,
-                "parent": latest["snapshot_id"],
-                "expectations": [list(e) for e in exps],
-                "stats": {
-                    "delta_commits": int(
-                        latest.get("stats", {}).get("delta_commits", 0)
-                    ),
-                    "expectation_dropped": name,
-                },
-            }
-            manifest.pop("change_files", None)
-            manifest.pop("ts_stats_new", None)
-            self._commit(manifest)
+            return (
+                {"expectations": [e for e in exps if e[0] != name]},
+                {"expectation_dropped": name},
+            )
+
+        m = self._commit_metadata(change)
+        sid, exps = m["snapshot_id"], [tuple(e) for e in m["expectations"]]
         self.expectations = [e for e in self.expectations if e[0] != name]
         # an explicit drop through THIS sink sheds the gate for good: the
         # per-merge refresh re-applies constructor-declared session gates
@@ -6839,17 +6712,16 @@ class LocalSnapshotSink(SnapshotSink):
                         errors.append(
                             f"manifest {sid}: change_files blob missing: {e}"
                         )
-                for k in CATALOG_KEYS + ("ts_stats_new",):
-                    ref = m.get(k)
-                    if isinstance(ref, str) and ref.startswith("ref:"):
-                        live_blobs.add(_blob_name(ref))
-                        try:
-                            _list_from_disk(ref)
-                        except (OSError, KeyError) as e:
-                            errors.append(
-                                f"manifest {sid}: catalog blob {k!r} "
-                                f"missing: {e}"
-                            )
+                for k, ref in _payload_refs(m).items():
+                    if k == "change_files":
+                        continue  # checked with the data-file lists above
+                    live_blobs.add(_blob_name(ref))
+                    try:
+                        _list_from_disk(ref)
+                    except (OSError, KeyError) as e:
+                        errors.append(
+                            f"manifest {sid}: catalog blob {k!r} missing: {e}"
+                        )
                 if not isinstance(m.get("committed_batches"), dict):
                     errors.append(
                         f"manifest {sid}: committed_batches is not a "
@@ -7376,27 +7248,16 @@ class LocalSnapshotSink(SnapshotSink):
             live_blobs: set[str] = set()
             for sid in keep:
                 m = self.manifest(sid)
-                catalog_refs = {
-                    m[k]
-                    for k in CATALOG_KEYS
-                    if isinstance(m.get(k), str)
-                }
-                # per-commit ts-stats blobs are metadata, not data-file
-                # lists: keep them alive with their manifest
-                if isinstance(m.get("ts_stats_new"), str):
-                    catalog_refs.add(m["ts_stats_new"])
-                extras = list(catalog_refs) + (
-                    [m["change_files"]] if m.get("change_files") else []
-                )
+                # every top-level ref is a live payload; of those only the
+                # CoW change set lists data files
+                live_blobs.update(_blob_name(r) for r in _payload_refs(m).values())
                 for files in (
                     list(m["files"].values())
                     + list(m.get("deltas", {}).values())
-                    + extras
+                    + ([m["change_files"]] if m.get("change_files") else [])
                 ):
                     if isinstance(files, str):
                         live_blobs.add(_blob_name(files))
-                        if files in catalog_refs:
-                            continue  # catalog blobs are not data-file lists
                     referenced.update(self._resolve_list(files))
             # dirs referenced by ANY manifest in the listing (incl. soon-to-
             # expire ones) are definitely not in-flight; unreferenced dirs

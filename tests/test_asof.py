@@ -114,3 +114,38 @@ def test_cli_history_and_as_of(spark, table, tmp_path, capsys):
     rc = main(["convs", sink.table_dir, "--as-of", str(marks[1]),
                "--snapshot", sink.current_snapshot_id])
     assert rc == 1
+
+
+class _SteppedClock:
+    """The sink module's ``time`` with the wall clock stepped back."""
+
+    def __init__(self, back_seconds: float) -> None:
+        self.back = back_seconds
+
+    def time(self) -> float:
+        return time.time() - self.back
+
+    def __getattr__(self, name):
+        return getattr(time, name)
+
+
+@pytest.mark.parametrize("op", ["merge", "compact"])
+def test_stamps_stay_monotone_when_the_clock_steps_back(spark, table, monkeypatch, op):
+    """A commit made after the wall clock steps back 100 s is stamped
+    after its parent, not before: history stays newest-first and the
+    parent stays resolvable by its own stamp."""
+    import fetchez_spark.sinks.local_snapshot as ls
+
+    sink, _ = table
+    parent = sink.current_snapshot_id
+    parent_at = sink.committed_at(parent)
+    monkeypatch.setattr(ls, "time", _SteppedClock(100.0))
+    if op == "merge":
+        sink.merge(_batch(spark, 3), batch_token="b3")
+    else:
+        sink.compact(spark)
+    assert sink.manifest()["parent"] == parent
+    stamps = [h["committed_at"] for h in sink.history()]
+    assert stamps == sorted(stamps, reverse=True)
+    assert stamps[0] > parent_at
+    assert sink.snapshot_as_of(parent_at) == parent

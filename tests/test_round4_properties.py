@@ -120,9 +120,9 @@ def test_set_properties_is_a_metadata_commit(spark, tmp_path):
 
 
 def test_properties_survive_merges_and_compaction(spark, tmp_path):
-    """Properties ride every commit shape: merge (from-scratch manifest via
-    CATALOG_KEYS), minor and major compaction, and expiry keeps them on
-    the surviving head."""
+    """Properties ride every commit shape: merge, minor and major
+    compaction (each child manifest inherits its parent's keys), and
+    expiry keeps them on the surviving head."""
     t = str(tmp_path / "carry")
     sink = LocalSnapshotSink(
         t, num_buckets=2, compact_every=10**9, target_file_bytes=1 << 20

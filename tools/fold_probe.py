@@ -1,15 +1,17 @@
 """Isolate the cost components of the major fold (guide section 1.4).
 
-Generates (once, cached in /dev/shm/fetchez-foldprobe) the bench's 80M
-change log, replays the APPEND half to get realistic delta files, then
-times, with the noop sink:
+Generates (once, cached in --cache, default /dev/shm/fetchez-foldprobe)
+the bench's 80M change log, replays the APPEND half to get realistic delta
+files, then times, with the noop sink:
 
   scan      read all delta files
   shuffle   + repartition(64, _bucket [, salt])
   agg       + groupBy(_bucket [, salt], key).agg(max(struct(...)))
-  write     the real fold via _dedup_write_bucketed (parquet out)
+  write     the real fold via _dedup_write_bucketed (parquet out); --salt K
+            splits every bucket into K key-hash-salted files (fanout_map)
 
 Usage: python tools/fold_probe.py [--events N] [--salt K] [--parts P]
+           [--mode all|scan|shuffle|agg|agg2|write|write2] [--cache DIR]
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CACHE = "/dev/shm/fetchez-foldprobe"
 
 
 def main() -> None:
@@ -32,6 +33,7 @@ def main() -> None:
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--parts", type=int, default=64)
     ap.add_argument("--mode", type=str, default="all")
+    ap.add_argument("--cache", type=str, default="/dev/shm/fetchez-foldprobe")
     args = ap.parse_args()
 
     import bench
@@ -44,9 +46,10 @@ def main() -> None:
     from fetchez_spark.streaming.engine import replay_batches
 
     tag = f"{args.events}"
-    log_dir = os.path.join(CACHE, f"log-{tag}")
-    table_dir = os.path.join(CACHE, f"table-{tag}")
-    os.makedirs(CACHE, exist_ok=True)
+    cache = os.path.abspath(args.cache)
+    log_dir = os.path.join(cache, f"log-{tag}")
+    table_dir = os.path.join(cache, f"table-{tag}")
+    os.makedirs(cache, exist_ok=True)
     if not os.path.isdir(log_dir):
         bench._write_log(args.events, log_dir)
     spark = get_spark(
@@ -54,7 +57,7 @@ def main() -> None:
         master="local[32]",
         shuffle_partitions=64,
         extra_conf={
-            "spark.local.dir": "/dev/shm",
+            "spark.local.dir": os.path.dirname(cache),
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "20000000",
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
             "spark.ui.enabled": "true",
@@ -64,9 +67,7 @@ def main() -> None:
         table_dir, num_buckets=64, collect_metrics=False, compact_every=10**9,
         cluster_deltas=False,
     )
-    if not sink.delta_lists().get("__flat__") and not any(
-        sink.delta_lists().values()
-    ):
+    if not any(sink.delta_lists().values()):
         files = sorted(
             os.path.join(log_dir, f)
             for f in os.listdir(log_dir)
@@ -130,7 +131,7 @@ def main() -> None:
         t0 = time.monotonic()
         sink._dedup_write_bucketed(
             read(), "probe-out", args.parts, schema,
-            salt_groups=args.salt if args.salt > 1 else None,
+            fanout_map={b: args.salt for b in range(64)} if args.salt > 1 else None,
         )
         out["write"] = round(time.monotonic() - t0, 3)
         import shutil
