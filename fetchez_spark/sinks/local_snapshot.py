@@ -288,36 +288,25 @@ def _data_writer(rows: DataFrame):
     )
 
 
-_BYTE_UNITS = {"": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2, "g": 3, "gb": 3,
-               "t": 4, "tb": 4, "p": 5, "pb": 5}
-
-
-def _conf_bytes(text: str) -> int:
-    """A Spark byte-size conf value ('4194304b', '4m', '1g') in bytes."""
-    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", text.lower())
-    return int(m.group(1)) * 1024 ** _BYTE_UNITS[m.group(2)]
-
-
-def open_cost_partitions(spark: SparkSession, uris: list[str]) -> int | None:
-    """Partitions that keep each output file written from ``uris`` at
-    least Spark's per-file open cost (``spark.sql.files.openCostInBytes``)
-    of input: ``ceil(input bytes / open cost)``, at least 1.  None when
-    ``uris`` is empty, or names a file that is missing or not local."""
-    from urllib.parse import unquote, urlparse
-
-    if not uris:
+def open_cost_partitions(df: DataFrame) -> int | None:
+    """Partitions that keep each output file written from ``df`` at least
+    Spark's per-file open cost (``spark.sql.files.openCostInBytes``) of
+    the optimized plan's size estimate: ``ceil(sizeInBytes / open
+    cost)``, at least 1.  A file scan estimates its file bytes, a
+    ``foreachBatch`` frame keeps its source's estimate, a pandas-created
+    frame knows its size.  None when the plan does not know its size
+    (the plan or a leaf reports ``spark.sql.defaultSizeInBytes``, e.g. an
+    RDD of Python rows): such frames keep their partitions, one output
+    file per partition."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    sizes = [int(plan.stats().sizeInBytes())] + [
+        int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size())
+    ]
+    if max(sizes) >= conf.defaultSizeInBytes():
         return None
-    total = 0
-    for uri in uris:
-        u = urlparse(uri)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(unquote(u.path))
-        except OSError:
-            return None
-    cost = _conf_bytes(spark.conf.get("spark.sql.files.openCostInBytes"))
-    return max(1, -(-total // max(cost, 1)))
+    return max(1, -(-sizes[0] // max(conf.filesOpenCostInBytes(), 1)))
 
 
 _AQE_EMPTY_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
@@ -1484,18 +1473,20 @@ class LocalSnapshotSink(SnapshotSink):
         transient: bool = True,
     ) -> list[str]:
         """Write rows as flat files under a snapshot-unique dir (no
-        clustering); return the file list.  The frame's partitions decide
-        the file count, coalesced to Spark's open cost when it scans
-        small local files.  ``transient=True`` (delta files, folded away
-        at the next compaction) uses the delta writer; ``transient=False``
-        keeps the session writer for files that live as long as their
-        snapshot (CoW change sidecars)."""
+        clustering); return the file list.  The frame is coalesced to
+        :func:`open_cost_partitions` of its plan's size estimate, so a
+        small batch writes one file whatever its partitioning; a frame
+        whose size the plan does not know keeps its partitions and
+        writes one file per partition.  ``transient=True`` (delta files,
+        folded away at the next compaction) uses the delta writer;
+        ``transient=False`` keeps the session writer for files that live
+        as long as their snapshot (CoW change sidecars)."""
         snap_dir = self._snap_payload_dir(sid)
         rows = self._align(df, schema).select(*[f.name for f in schema.fields])
-        # a batch of many small input files would otherwise write one
-        # small file per input file (one scan task each); coalesce never
-        # adds partitions, so large inputs keep Spark's split plan
-        n = open_cost_partitions(df.sparkSession, df.inputFiles())
+        # a small batch would otherwise write one small file per input
+        # file or per core; coalesce never adds partitions, so large
+        # inputs keep Spark's split plan
+        n = open_cost_partitions(df)
         if n is not None:
             rows = rows.coalesce(n)
         writer = self._delta_writer(rows) if transient else _data_writer(rows)
@@ -4073,6 +4064,7 @@ class LocalSnapshotSink(SnapshotSink):
             else:
                 written = self._write_flat(rows, sid, new_schema)
                 written_bytes[_FLAT] = sum(os.path.getsize(f) for f in written)
+            metrics["files_written"] = len(written)
         else:
             # 3b. copy-on-write: rewrite the buckets the batch touches.
             # Touched set comes from a cheap distinct over <= num_buckets
@@ -4137,6 +4129,9 @@ class LocalSnapshotSink(SnapshotSink):
                 unioned, sid, len(touched), new_schema
             )
             metrics["touched_buckets"] = len(touched)
+            metrics["files_written"] = len(change_files) + sum(
+                len(fs) for fs in written_map.values()
+            )
 
         # harvest metrics BEFORE the manifest commit so the high-watermark
         # advances atomically with the data it describes.  Observe mode

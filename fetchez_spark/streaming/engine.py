@@ -294,7 +294,6 @@ def make_batch_fn(
     token_prefix: str = "",
     watch_schema: tuple[str, Any, str] | None = None,
     bad_records: tuple[str, str] | None = None,
-    checkpoint_dir: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The foreachBatch function: transform chain -> MERGE -> lineage.
 
@@ -326,14 +325,12 @@ def make_batch_fn(
     token-idempotent).  Corrupt rows NEVER advance the table: the
     ``_corrupt_record`` column is stripped before the merge either way.
 
-    ``checkpoint_dir`` (a file-source query's checkpoint) sizes each
-    batch by its own input files: the frame is coalesced to
-    ``ceil(input bytes / spark.sql.files.openCostInBytes)`` partitions
-    before the merge, so a batch of many small files writes few delta
-    files instead of one per input file.  The frame ``foreachBatch``
-    hands over lists no input files of its own, so the sink cannot size
-    it.  Batches whose files are missing or not local keep their
-    partitions."""
+    Before the merge the batch is coalesced to
+    :func:`~fetchez_spark.sinks.local_snapshot.open_cost_partitions` of
+    its plan's size estimate (the ``foreachBatch`` frame keeps its
+    source's), so a batch of many small files writes few delta files
+    instead of one per input file.  A batch whose size the plan does not
+    know keeps its partitions, one file per partition."""
 
     def _token(batch_id: int) -> str:
         return f"{token_prefix}-{batch_id}" if token_prefix else str(batch_id)
@@ -348,10 +345,6 @@ def make_batch_fn(
             if on_batch:
                 on_batch(batch_id, {"skipped": True})
             return
-        n = open_cost_partitions(
-            batch.sparkSession,
-            _batch_source_files(checkpoint_dir, batch_id) if checkpoint_dir else [],
-        )
         if watch_schema is not None:
             ckpt_dir, stream_schema, fmt = watch_schema
             files = _batch_source_files(ckpt_dir, batch_id)
@@ -431,6 +424,7 @@ def make_batch_fn(
                 )
             batch = batch.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
         batch = _apply_transforms(batch, transforms)
+        n = open_cost_partitions(batch)
         if n is not None:
             # coalesce never adds partitions: a batch above the open cost
             # per scan partition keeps Spark's split plan
@@ -679,7 +673,6 @@ def run_stream(
                     (checkpoint_dir, schema, log_format) if watch_schema else None
                 ),
                 bad_records=batch_bad_records,
-                checkpoint_dir=checkpoint_dir,
             )
         )
         .option("checkpointLocation", checkpoint_dir)

@@ -3,10 +3,11 @@ most one file-list blob.
 
 A commit packs every bucket list it changed into one content-addressed
 blob (``ref:list-<sha1>.json#<bucket>``), table data dirs carry no
-``_SUCCESS`` markers, and a flat delta built from many small input files
-is written as few files as Spark's per-file open cost allows.  Tables
-written in the older per-bucket-blob and inline encodings keep reading,
-passing fsck, expiring and cloning.
+``_SUCCESS`` markers, and a flat write is sized from its plan's byte
+estimate: a small batch -- many small input files or a small in-memory
+frame -- is written as few files as Spark's per-file open cost allows.
+Tables written in the older per-bucket-blob and inline encodings keep
+reading, passing fsck, expiring and cloning.
 """
 
 from __future__ import annotations
@@ -16,10 +17,11 @@ import importlib.util
 import json
 import os
 
+import pandas as pd
 import pytest
 
 from fetchez_spark.changegen import ChangeLogSpec, write_change_log
-from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink
+from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink, open_cost_partitions
 from fetchez_spark.streaming.engine import replay_batches
 
 UTC = dt.timezone.utc
@@ -37,12 +39,21 @@ def _census(path: str) -> dict[str, int]:
     return {k: v["files"] for k, v in _census_tool().census(path).items()}
 
 
+_DDL = (
+    "op string, conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp, seq long"
+)
+
+
 def _batch(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "op string, conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp, seq long",
-    )
+    return spark.createDataFrame(rows, _DDL)
+
+
+def _pandas_batch(spark, rows):
+    """A pandas-created frame: a local relation whose size the plan knows,
+    split over the session's default parallelism."""
+    cols = [c.split()[0] for c in _DDL.split(", ")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), _DDL)
 
 
 def _rows(n: int, start: int = 0, convs: int = 64):
@@ -92,6 +103,28 @@ def test_replay_file_census(replayed):
         "manifest": 6,
         "list blob": 5,
         "other": 2,  # VERSION and COMMIT.lock
+    }
+
+
+def test_small_commit_file_census(spark, tmp_path):
+    # a 500-row in-memory merge into a compacted flat table adds one data
+    # file (not one per core), its .crc, its claim, one manifest and one
+    # list blob
+    assert spark.sparkContext.defaultParallelism >= 2
+    sink = _flat_sink(tmp_path, "t")
+    sink.merge(_pandas_batch(spark, _rows(500)), "b1")
+    sink.compact(spark)
+    before = _census(sink.table_dir)
+    sink.merge(_pandas_batch(spark, _rows(500, start=500)), "b2")
+    after = _census(sink.table_dir)
+    assert {k: after[k] - before[k] for k in after} == {
+        "parquet": 1,
+        "crc": 1,
+        "_SUCCESS": 0,
+        "CLAIM.json": 1,
+        "manifest": 1,
+        "list blob": 1,
+        "other": 0,
     }
 
 
@@ -232,6 +265,46 @@ def test_small_file_scan_batch_writes_one_flat_file(spark, tmp_path):
     sink = _flat_sink(tmp_path, "t")
     replay_batches(spark, [files], sink)
     assert len(_flat_files(sink)) == 1
+
+
+def test_small_pandas_batch_writes_one_flat_delta(spark, tmp_path):
+    batch = _pandas_batch(spark, _rows(500))
+    assert batch.rdd.getNumPartitions() >= 2, "one partition per core"
+    sink = _flat_sink(tmp_path, "t")
+    metrics = sink.merge(batch, "b1")
+    assert len(_flat_files(sink)) == 1
+    assert metrics["files_written"] == 1
+
+
+def test_small_cow_merge_writes_one_change_sidecar(spark, tmp_path):
+    sink = LocalSnapshotSink(
+        str(tmp_path / "t"), num_buckets=4, mode="cow", track_changes=True
+    )
+    metrics = sink.merge(_pandas_batch(spark, _rows(500)), "b1")
+    sidecars = sink._resolve_list(sink.manifest()["change_files"])
+    assert len(sidecars) == 1
+    assert metrics["files_written"] == 1 + len(sink.files())
+
+
+def test_open_cost_partitions_unknown_for_python_rows(spark):
+    batch = _batch(spark, _rows(60))
+    assert open_cost_partitions(batch) is None
+    # a projection scales the unknown estimate below the default size;
+    # the plan's leaf still does not know its size
+    assert open_cost_partitions(batch.select("conv_id")) is None
+
+
+def test_open_cost_partitions_of_a_scan_is_its_file_bytes(spark, replayed):
+    files = sorted(r["path"] for r in replayed.files())
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        n = open_cost_partitions(spark.read.parquet(*files))
+    finally:
+        spark.conf.set(key, old)
+    total = sum(os.path.getsize(f) for f in files)
+    assert n == -(-total // (16 * 1024)) > 1
 
 
 def test_created_batch_keeps_its_partitions(spark, tmp_path):

@@ -23,6 +23,7 @@ from fetchez_spark.changegen import (
 )
 from fetchez_spark.operators.export_view import ParquetExportView
 from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink
+from fetchez_spark.streaming import engine
 from fetchez_spark.streaming.engine import replay_batches, run_stream
 
 UTC = dt.timezone.utc
@@ -165,6 +166,16 @@ def test_stream_batch_of_small_files_writes_one_flat_delta(spark, tmp_path):
             ChangeLogSpec(num_events=2000, num_convs=100, seed=3)
         ))
     )
+
+
+def test_stream_batch_sizing_reads_no_checkpoint_log(spark, tmp_path, monkeypatch):
+    # the tail sizes each batch from its plan, not from the checkpoint's
+    # source log (read only by the watch_schema guard)
+    def _unread(*args):
+        raise AssertionError("checkpoint source log read")
+
+    monkeypatch.setattr(engine, "_batch_source_files", _unread)
+    test_stream_batch_of_small_files_writes_one_flat_delta(spark, tmp_path)
 
 
 def test_export_version_dir_has_no_success_marker(spark, tmp_path):
