@@ -54,9 +54,17 @@ Scale design:
   this is what keeps point reads O(table/buckets) at 10^10 events).
   ``cluster_deltas=False`` restores the round-1 zero-shuffle flat-delta
   ingest, at the cost of every read between compactions scanning all
-  flat deltas.  ``compact()`` folds deltas into base files;
-  ``compact(minor=True)`` only consolidates each bucket's delta files
-  (O(deltas), keeps read amplification bounded without rewriting bases).
+  flat deltas.  Every flat delta file (and every CoW change sidecar)
+  is written in last-writer-wins order -- the key columns, then ``ts``,
+  then ``_seq`` -- so each is one sorted run of the keys its batch
+  changed: a key's versions sit together (its dictionary ids and run
+  lengths compress them together), the next fold reads pre-ordered
+  runs, and the layout can be checked from the table directory alone
+  (``tools/file_census.py --runs``).  Clustered deltas keep the
+  arrival order within each bucket file.  ``compact()`` folds deltas into
+  base files; ``compact(minor=True)`` only consolidates each bucket's
+  delta files (O(deltas), keeps read amplification bounded without
+  rewriting bases).
 * **copy-on-write (``mode='cow'``)**: each batch rewrites touched buckets
   (read base+deltas, merge, write new base).  Reads stay reduction-free;
   ingest pays O(touched table) per batch.  Right when batches are rare and
@@ -107,6 +115,9 @@ from fetchez_spark.schema import (
 from fetchez_spark.sinks.base import SnapshotSink
 
 _BUCKET = "_bucket"
+# last-writer-wins version order within a key: the newest ``ts`` wins,
+# ``_seq`` (arrival order) breaks ties
+_VERSION_ORDER = ["ts", INTERNAL_SEQ]
 # manifest "deltas" key for unclustered (flat) delta files
 _FLAT = "*"
 # read(include_provenance=True) metadata columns (the Iceberg `_file`
@@ -1090,7 +1101,7 @@ class LocalSnapshotSink(SnapshotSink):
         in any grouping)."""
         if self.merge_mode == "partial":
             return fold_partial_states(df, key=self.key, salt=salt)
-        return dedup_latest(df, key=self.key, order=["ts", INTERNAL_SEQ], salt=salt)
+        return dedup_latest(df, key=self.key, order=_VERSION_ORDER, salt=salt)
 
     def _align(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Null-backfill columns of ``schema`` the batch lacks (a source
@@ -1227,7 +1238,7 @@ class LocalSnapshotSink(SnapshotSink):
         than the raw table, with no hot-key reducer.
         """
         aligned = self._align(df, schema)
-        order = ["ts", INTERNAL_SEQ]
+        order = _VERSION_ORDER
         others = [f.name for f in schema.fields if f.name not in order]
         big = F.struct(*[F.col(c) for c in order], *[F.col(c) for c in others])
         if self.merge_mode == "partial":
@@ -1477,10 +1488,14 @@ class LocalSnapshotSink(SnapshotSink):
         :func:`open_cost_partitions` of its plan's size estimate, so a
         small batch writes one file whatever its partitioning; a frame
         whose size the plan does not know keeps its partitions and
-        writes one file per partition.  ``transient=True`` (delta files,
-        folded away at the next compaction) uses the delta writer;
-        ``transient=False`` keeps the session writer for files that live
-        as long as their snapshot (CoW change sidecars)."""
+        writes one file per partition.  Each file is then sorted by
+        ``(*key, ts, _seq)``: one sorted run in last-writer-wins order,
+        so a key's versions sit next to each other and its dictionary
+        and run-length encodings compress them together.
+        ``transient=True`` (delta files, folded away at the next
+        compaction) uses the delta writer; ``transient=False`` keeps the
+        session writer for files that live as long as their snapshot
+        (CoW change sidecars)."""
         snap_dir = self._snap_payload_dir(sid)
         rows = self._align(df, schema).select(*[f.name for f in schema.fields])
         # a small batch would otherwise write one small file per input
@@ -1489,6 +1504,7 @@ class LocalSnapshotSink(SnapshotSink):
         n = open_cost_partitions(df)
         if n is not None:
             rows = rows.coalesce(n)
+        rows = rows.sortWithinPartitions(*self.key, *_VERSION_ORDER)
         writer = self._delta_writer(rows) if transient else _data_writer(rows)
         writer.parquet(snap_dir)
         return [

@@ -18,6 +18,7 @@ import json
 import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from fetchez_spark.changegen import ChangeLogSpec, write_change_log
@@ -355,3 +356,118 @@ def test_column_census_reports_bytes_and_dictionary_chunks(tmp_path, capsys):
     out = capsys.readouterr().out.split("\n")
     assert out[2].split() == ["role", str(cols["role"]["bytes"]), "2", "2"]
     assert out[3].split() == ["text", str(cols["text"]["bytes"]), "2", "0"]
+
+
+_LWW = ["conv_id", "turn_idx", "ts", "_seq"]
+
+
+def _runs(path: str) -> int:
+    return _census_tool().sorted_runs(path, _LWW)[1]
+
+
+def _merge_files(sink) -> list[str]:
+    """The data files the table's merges wrote: every parquet file outside
+    a fold's ``_bucket=`` directories."""
+    root = os.path.join(sink.table_dir, "data")
+    return sorted(
+        os.path.join(d, f)
+        for d, _, names in os.walk(root)
+        for f in names
+        if f.endswith(".parquet") and "_bucket=" not in d
+    )
+
+
+def _reversed_batch(spark, n: int = 600):
+    """Three versions of each key (an insert, an update, a delete of
+    every fifth key) arriving in descending key order, newest first."""
+    t0 = dt.datetime(2025, 1, 1, tzinfo=UTC)
+    rows = [
+        (op, f"c{k % 12:02d}", k // 12, "user", f"t{k}-{v}", None,
+         t0 + dt.timedelta(seconds=v), 3 * k + v)
+        for k in range(n // 3)
+        for v, op in enumerate(["I", "U", "D" if k % 5 == 0 else "U"])
+    ]
+    rows.sort(key=lambda r: (r[1], r[2], r[6]), reverse=True)
+    return _pandas_batch(spark, rows), rows
+
+
+def _lww_oracle(rows) -> set[tuple]:
+    last: dict[tuple, tuple] = {}
+    for r in rows:
+        k = (r[1], r[2])
+        if k not in last or (r[6], r[7]) > (last[k][6], last[k][7]):
+            last[k] = r
+    return {(r[1], r[2], r[4]) for r in last.values() if r[0] != "D"}
+
+
+def test_every_flat_delta_file_is_one_sorted_run(spark, replayed, tmp_path):
+    # flat deltas: the replay's three merges
+    flat = _merge_files(replayed)
+    assert len(flat) == 3
+    # CoW change sidecar
+    cow = LocalSnapshotSink(str(tmp_path / "cow"), num_buckets=4, mode="cow", track_changes=True)
+    cow.merge(_reversed_batch(spark)[0], "b1")
+    sidecars = cow._resolve_list(cow.manifest()["change_files"])
+    assert len(sidecars) == 1
+    for f in flat + sidecars:
+        assert _runs(f) == 1, f
+
+
+def test_reverse_order_batch_writes_sorted_delta(spark, tmp_path):
+    batch, rows = _reversed_batch(spark)
+    sink = LocalSnapshotSink(
+        str(tmp_path / "t"), num_buckets=4, cluster_deltas=False, compact_every=10**9
+    )
+    sink.merge(batch, "b1")
+    deltas = [f for fs in sink.delta_lists().values() for f in fs]
+    assert len(deltas) == 1 and _runs(deltas[0]) == 1
+    assert sum(pq.read_metadata(f).num_rows for f in deltas) == len(rows)
+    assert _state(sink, spark) == _lww_oracle(rows)
+    sink.compact(spark)
+    assert _state(sink, spark) == _lww_oracle(rows)
+
+
+def test_replay_deltas_are_smaller_than_arrival_order(spark, replayed, tmp_path):
+    # the same rows, through the same delta writer, in the order the
+    # merge reads them from the log
+    from fetchez_spark.operators.merge import batch_to_target_rows
+
+    log = os.path.join(os.path.dirname(replayed.table_dir), "log")
+    files = [os.path.join(log, f) for f in sorted(os.listdir(log))]
+    schema = [f.name for f in replayed.schema(include_internal=True).fields]
+    arrival = 0
+    for i in range(3):
+        rows = batch_to_target_rows(spark.read.parquet(*files[2 * i : 2 * i + 2]))
+        out = str(tmp_path / str(i))
+        replayed._delta_writer(rows.select(*schema).coalesce(1)).parquet(out)
+        arrival += sum(
+            os.path.getsize(os.path.join(out, n)) for n in os.listdir(out) if n.endswith(".parquet")
+        )
+    assert max(_runs(os.path.join(tmp_path / "0", n)) for n in os.listdir(tmp_path / "0")
+               if n.endswith(".parquet")) > 1, "arrival order is not already sorted"
+    sorted_bytes = sum(os.path.getsize(f) for f in _merge_files(replayed))
+    assert sorted_bytes < arrival, (sorted_bytes, arrival)
+
+
+def test_sorted_runs_counts_descents(tmp_path, capsys):
+    import pyarrow as pa
+
+    table = pa.table({
+        "k": ["a", "a", "b", "a", None, "c"],
+        "v": [1, 1, 0, 2, 9, 0],
+    })
+    pq.write_table(table, str(tmp_path / "part-0.parquet"))
+    pq.write_table(table.slice(0, 3), str(tmp_path / "part-1.parquet"))
+    pq.write_table(table.slice(0, 0), str(tmp_path / "part-2.parquet"))
+    tool = _census_tool()
+    # ties continue a run; b->a and a->null (nulls first) start new ones
+    assert tool.sorted_runs(str(tmp_path / "part-0.parquet"), ["k", "v"]) == (6, 3)
+    assert tool.sorted_runs(str(tmp_path / "part-0.parquet"), ["v"]) == (6, 3)
+    assert tool.sorted_runs(str(tmp_path / "part-1.parquet"), ["k", "v"]) == (3, 1)
+    assert tool.sorted_runs(str(tmp_path / "part-2.parquet"), ["k"]) == (0, 0)
+    assert tool.main(["--runs", "k,v", str(tmp_path)]) == 0
+    out = capsys.readouterr().out.split("\n")
+    assert [ln.split() for ln in out[2:5]] == [
+        ["part-0.parquet", "6", "3"], ["part-1.parquet", "3", "1"], ["part-2.parquet", "0", "0"],
+    ]
+    assert tool.main(["--runs", "k"]) == 2

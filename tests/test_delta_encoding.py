@@ -197,3 +197,34 @@ def test_export_version_dir_has_no_success_marker(spark, tmp_path):
     want = sink.read(spark).select(*cols)
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def _binary_encoding(spark, props) -> str:
+    """Encoding a BINARY values writer made from parquet ``props`` ends on
+    after ~100 KB of distinct values: over the 64 KiB delta dictionary
+    cap, under parquet's 1 MiB default."""
+    jvm = spark._jvm
+    path = spark.sparkContext._gateway.new_array(jvm.java.lang.String, 1)
+    path[0] = "c"
+    binary = jvm.org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY
+    desc = jvm.org.apache.parquet.column.ColumnDescriptor(path, binary, 0, 1)
+    writer = props.newValuesWriter(desc)
+    for i in range(100):
+        writer.writeBytes(jvm.org.apache.parquet.io.api.Binary.fromString(f"{i:04d}" * 256))
+    return str(writer.getEncoding())
+
+
+def test_parquet_writers_share_one_values_writer_factory(spark):
+    """Why a delta written while a background fold writes its bases can
+    lose the dictionary cap: parquet-mr's ``ParquetProperties.build()``
+    re-initializes a JVM-wide values-writer factory, so column writers
+    made from one writer's properties take the settings of whichever
+    writer built its properties last.  No writer option or conf key
+    selects a per-writer factory.  When this starts failing, parquet
+    keeps each writer's own settings and the delta cap holds under a
+    concurrent fold."""
+    builder = spark._jvm.org.apache.parquet.column.ParquetProperties.builder
+    capped = builder().withDictionaryPageSize(LocalSnapshotSink.DELTA_DICT_PAGE_BYTES).build()
+    assert _binary_encoding(spark, capped) == "PLAIN"
+    builder().build()  # another writer opens with the default 1 MiB page
+    assert _binary_encoding(spark, capped) == "PLAIN_DICTIONARY"

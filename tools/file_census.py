@@ -8,12 +8,17 @@ catalog blobs, logs, ...).  Only the given directories are read.
 
     python tools/file_census.py <dir> [<dir> ...]
     python tools/file_census.py --columns <dir> [<dir> ...]
+    python tools/file_census.py --runs COL[,COL...] <dir> [<dir> ...]
 
 Prints one block per directory (files and bytes per kind), plus a total
 block when more than one directory is given.  ``--columns`` instead
 prints, per directory, each parquet column's compressed bytes, its
 column-chunk count, and how many of those chunks are dictionary-encoded
-(carry a dictionary page).  It reads parquet footers only.
+(carry a dictionary page).  It reads parquet footers only.  ``--runs``
+prints, for each parquet file, its row count and the number of sorted
+runs of its rows in the order of the given columns (ascending, nulls
+first, as Spark sorts): 1 means the file is fully ordered, 0 that it
+is empty.  It reads only those columns.
 """
 
 from __future__ import annotations
@@ -86,6 +91,32 @@ def column_census(root: str) -> dict[str, dict[str, int]]:
     return out
 
 
+def sorted_runs(path: str, cols: list[str]) -> tuple[int, int]:
+    """(rows, sorted runs) of the parquet file ``path`` in the order of
+    ``cols``: a new run starts at every row that sorts before its
+    predecessor.  Nulls sort first and ties continue a run."""
+    table = pq.read_table(path, columns=cols)
+    rows = zip(*(table.column(c).to_pylist() for c in cols))
+    runs, prev = 0, None
+    for row in rows:
+        cur = tuple((v is not None, v) for v in row)
+        if prev is None or cur < prev:
+            runs += 1
+        prev = cur
+    return table.num_rows, runs
+
+
+def _print_runs(root: str, cols: list[str]) -> None:
+    print(root)
+    print(f"  {'file':<60}{'rows':>10}{'runs':>8}")
+    for dirpath, _, names in sorted(os.walk(root)):
+        for name in sorted(names):
+            if name.endswith(".parquet"):
+                path = os.path.join(dirpath, name)
+                rows, runs = sorted_runs(path, cols)
+                print(f"  {os.path.relpath(path, root):<60}{rows:>10}{runs:>8}")
+
+
 def _print_columns(title: str, c: dict) -> None:
     print(title)
     print(f"  {'column':<16}{'bytes':>14}{'chunks':>8}{'dict':>8}")
@@ -114,9 +145,16 @@ def main(dirs: list[str]) -> int:
     columns = dirs[:1] == ["--columns"]
     if columns:
         dirs = dirs[1:]
+    runs = None
+    if dirs[:1] == ["--runs"]:
+        runs, dirs = dirs[1:2] and dirs[1].split(","), dirs[2:]
     if not dirs:
         print(__doc__.strip(), file=sys.stderr)
         return 2
+    if runs:
+        for d in dirs:
+            _print_runs(d, runs)
+        return 0
     if columns:
         for d in dirs:
             _print_columns(d, column_census(d))
