@@ -176,9 +176,10 @@ def main(argv: list[str] | None = None) -> int:
                         "record per-file key-range stats (file-skipping point "
                         "lookups; the Iceberg sort-order analog)")
     p.add_argument("--bloom", action="store_true",
-                   help="record per-file key blooms for this compaction's "
-                        "output (point-lookup file skipping on files sorting "
-                        "never covers: consolidated deltas, hash-mode bases)")
+                   help="write a footer bloom of the leading key into the "
+                        "output files: lookups skip row groups it excludes "
+                        "(dictionary-encoded chunks get none; their dictionary "
+                        "prunes)")
     p.add_argument("--cluster-by", default=None, metavar="COL[,COL...]",
                    help="Z-ORDER compacted buckets on these numeric/timestamp "
                         "columns and record per-file min/max stats (multi-"

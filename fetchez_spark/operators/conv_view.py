@@ -318,8 +318,8 @@ class ConversationView(IncrementalView):
         )
 
     def lookup(self, spark: SparkSession, conv_id) -> DataFrame:
-        """One conversation: manifest-level bucket pruning + key-stats /
-        bloom file pruning on the store."""
+        """One conversation: bucket and key-stats file pruning on the
+        store; footer blooms and dictionaries skip row groups."""
         return self.store.lookup(spark, conv_id).select(
             self.conv_col, "n_turns", "transcript", "convo_fp"
         )

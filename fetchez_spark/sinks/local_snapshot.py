@@ -363,7 +363,6 @@ class LocalSnapshotSink(SnapshotSink):
         num_buckets: int = 32,
         key: list[str] | None = None,
         base_schema: T.StructType | None = None,
-        dedup_salt: int = 0,
         collect_metrics: bool = True,
         mode: str = "mor",
         compact_every: int = 16,
@@ -371,7 +370,6 @@ class LocalSnapshotSink(SnapshotSink):
         dedup_on_write: bool | None = None,
         cluster_deltas: bool = True,
         max_committed_tokens: int = 1024,
-        write_fanout: int = 1,
         track_changes: bool = True,
         monotonic_tokens: bool = True,
         auto_compact_bytes: int | None = None,
@@ -418,7 +416,6 @@ class LocalSnapshotSink(SnapshotSink):
         self.branch = branch
         self.table_dir = table_dir
         self.key = key or KEY_COLUMNS
-        self.dedup_salt = dedup_salt
         self.collect_metrics = collect_metrics
         self.mode = mode
         self.compact_every = compact_every
@@ -458,9 +455,6 @@ class LocalSnapshotSink(SnapshotSink):
         # tail batches, not arbitrary history), so a generous window is
         # lossless in practice; the trim is insertion-ordered (oldest out).
         self.max_committed_tokens = max_committed_tokens
-        # skew valve for the delta-write shuffle: split each bucket's
-        # write across this many tasks (see _write_bucketed)
-        self.write_fanout = write_fanout
         # SIZE-AWARE compaction policy (the knob a 100 TB table actually
         # operates by -- commit cadence alone compacts hot and cold
         # buckets alike, shuffling the whole table each time):
@@ -1093,15 +1087,15 @@ class LocalSnapshotSink(SnapshotSink):
             fcntl.flock(fd, fcntl.LOCK_UN)
             os.close(fd)
 
-    def _reduce(self, df: DataFrame, salt: int = 0) -> DataFrame:
+    def _reduce(self, df: DataFrame) -> DataFrame:
         """The table's per-key consolidation: full-row LWW max-(ts,_seq)
         by default, the per-column partial-update fold when the table
         records ``merge_mode='partial'`` (both associative, so read-time
         MoR reduction, compaction folds, and CoW rewrites may apply them
         in any grouping)."""
         if self.merge_mode == "partial":
-            return fold_partial_states(df, key=self.key, salt=salt)
-        return dedup_latest(df, key=self.key, order=_VERSION_ORDER, salt=salt)
+            return fold_partial_states(df, key=self.key)
+        return dedup_latest(df, key=self.key, order=_VERSION_ORDER)
 
     def _align(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Null-backfill columns of ``schema`` the batch lacks (a source
@@ -1130,26 +1124,16 @@ class LocalSnapshotSink(SnapshotSink):
         sid: str,
         n_partitions: int,
         schema: T.StructType,
-        fanout: int = 1,
     ) -> dict[str, list[str]]:
         """Write rows partitioned by bucket under a snapshot-unique dir;
-        return {bucket: [files]}.
-
-        ``fanout > 1`` splits each bucket's write across ``fanout`` tasks
-        (shuffle key = (bucket, hash(_seq) % fanout)): the skew valve for
-        a Zipf-hot conversation whose bucket would otherwise serialize on
-        one write task.  Costs up to ``fanout`` delta files per bucket per
-        batch; compaction restores one file per bucket."""
+        return {bucket: [files]}."""
         snap_dir = self._snap_payload_dir(sid)
         out_cols = [f.name for f in schema.fields] + [_BUCKET]
-        shuffle_keys = [F.col(_BUCKET)]
-        if fanout > 1:
-            shuffle_keys.append(F.pmod(F.xxhash64(F.col(INTERNAL_SEQ)), F.lit(fanout)))
         with _observed_write_conf(df.sparkSession):
             self._delta_writer(
                 self._align(df, schema)
                 .select(*out_cols)
-                .repartition(max(n_partitions, 1) * max(fanout, 1), *shuffle_keys)
+                .repartition(max(n_partitions, 1), F.col(_BUCKET))
             ).partitionBy(_BUCKET).parquet(snap_dir)
         return self._scan_partitioned_output(snap_dir)
 
@@ -1166,9 +1150,11 @@ class LocalSnapshotSink(SnapshotSink):
         cluster_expr=None,
         combine_first: bool = False,
         num_buckets: int | None = None,
+        bloom: bool = False,
     ) -> dict[str, list[str]]:
         """Dedup + bucket-clustered write (the compaction/CoW hot path).
-        ``df`` carries ``_bucket``.
+        ``df`` carries ``_bucket``.  ``bloom=True`` writes a parquet
+        footer bloom of the leading key (see ``BLOOM_MAX_BYTES``).
 
         ``combine_first=True`` (large folds -- see ``_fold_combine_first``)
         runs the LWW reduction as a plain ``groupBy(_bucket, key...)``
@@ -1352,8 +1338,21 @@ class LocalSnapshotSink(SnapshotSink):
                 max(n_partitions, 1), F.col(_BUCKET), cluster_expr
             ).sortWithinPartitions(F.col(_BUCKET), cluster_expr)
         snap_dir = self._snap_payload_dir(sid)
+        writer = _data_writer(rows)
+        if bloom:
+            # the adaptive switch and the size cap are file-wide options,
+            # read only for columns with a bloom
+            writer = writer.options(
+                **{
+                    f"parquet.bloom.filter.enabled#{self.key[0]}": "true",
+                    f"parquet.bloom.filter.candidates.number#{self.key[0]}":
+                        str(self.BLOOM_CANDIDATES),
+                    "parquet.bloom.filter.adaptive.enabled": "true",
+                    "parquet.bloom.filter.max.bytes": str(self.BLOOM_MAX_BYTES),
+                }
+            )
         with _observed_write_conf(df.sparkSession):
-            _data_writer(rows).partitionBy(_BUCKET).parquet(snap_dir)
+            writer.partitionBy(_BUCKET).parquet(snap_dir)
         return self._scan_partitioned_output(snap_dir)
 
     # Fold-shape gate (see _dedup_write_bucketed's combine_first): above
@@ -1388,6 +1387,17 @@ class LocalSnapshotSink(SnapshotSink):
     # Fold bases, CoW change sidecars and exports keep the session
     # default.
     DELTA_DICT_PAGE_BYTES = 64 * 1024
+
+    # Footer bloom of the leading key (compact(bloom=True)).  Unsized,
+    # parquet-mr writes a 1 MiB bloom per row group.  The adaptive writer
+    # keeps BLOOM_CANDIDATES blooms halving from BLOOM_MAX_BYTES
+    # (1 MiB .. 512 B) and writes the smallest that holds the chunk's keys
+    # at 1% false positives.  Measured (local[4]): a 131-file fold of a
+    # 200k-event, 100k-conversation log grew 1,187,821 -> 1,328,977 B
+    # (unsized: 138.6 MB); on one 300k-distinct-key file a 64 KiB cap
+    # still scanned 95% of absent keys, this cap 0.7%.
+    BLOOM_MAX_BYTES = 1024 * 1024
+    BLOOM_CANDIDATES = 12
 
     def _fold_combine_first(self, files: list[str]) -> bool:
         """Should a fold over ``files`` pre-combine map-side?  True for
@@ -1753,105 +1763,6 @@ class LocalSnapshotSink(SnapshotSink):
                 return False
         return True
 
-    # ------------------------------------------------- key bloom sidecars
-    # {file: {"m": bits, "k": probes, "b64": bitmap}} built by
-    # compact(bloom=True) for its output files.  Key ranges (key_stats)
-    # need SORTED files; blooms give point-lookup file skipping on the
-    # files sorting never touches -- consolidated MoR deltas and
-    # hash-mode bases.  No false negatives by construction (a pruned
-    # file provably holds no row of the key, so the per-key LWW
-    # reduction is unaffected); false positives only cost a read.
-    # Hashing is Spark's own xxhash64 on BOTH sides (build: a column
-    # expression over the file's rows; probe: the same expression over a
-    # one-row frame), so build/probe consistency is by construction, not
-    # by reimplementation.
-    def key_blooms(self, manifest: dict | None = None) -> dict[str, dict]:
-        m = manifest or self.manifest()
-        val = m.get("key_blooms")
-        if not val:
-            return {}
-        return val if isinstance(val, dict) else self._resolve_blob(val)
-
-    _BLOOM_K = 7
-    _BLOOM_BITS_PER_KEY = 16  # fp ~= 0.1% at k=7
-    _BLOOM_MAX_ROWS = 65536  # bigger files: bitmap cost beats the skip
-
-    def _collect_key_blooms(
-        self, spark: SparkSession, files: list[str]
-    ) -> dict[str, dict]:
-        """One column-pruned pass over just-written files: per-file bloom
-        of the leading key.  Bit positions are computed JVM-side
-        (``pmod``-free raw ``xxhash64(key, i)`` longs); the bitmap OR is
-        a vectorized numpy fold in ``mapInPandas`` (bounded: the files
-        are O(commit) and each is capped at ``_BLOOM_MAX_ROWS`` rows via
-        its footer row count, read driver-side for free)."""
-        import base64
-
-        import numpy as np
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        k = self._BLOOM_K
-        msizes: dict[str, int] = {}
-        for f in files:
-            try:
-                n = pq.ParquetFile(f).metadata.num_rows
-            except Exception:
-                continue
-            if 0 < n <= self._BLOOM_MAX_ROWS:
-                msizes[f] = 1 << max(10, (self._BLOOM_BITS_PER_KEY * n - 1).bit_length())
-        if not msizes:
-            return {}
-        k0 = self.key[0]
-        df = spark.read.parquet(*sorted(msizes)).select(
-            F.input_file_name().alias("_f"),
-            *[F.xxhash64(F.col(k0), F.lit(i)).alias(f"_h{i}") for i in range(k)],
-        )
-        from urllib.parse import unquote, urlparse
-
-        def build(batches):
-            for pdf in batches:
-                for fname, grp in pdf.groupby("_f"):
-                    p = fname
-                    if "://" in p:
-                        p = unquote(urlparse(p).path)
-                    m_bits = msizes.get(p)
-                    if m_bits is None:
-                        continue
-                    bm = np.zeros(m_bits // 8, dtype=np.uint8)
-                    for i in range(k):
-                        pos = grp[f"_h{i}"].to_numpy(dtype=np.int64) % m_bits
-                        np.bitwise_or.at(
-                            bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8)
-                        )
-                    yield pd.DataFrame({"f": [p], "bits": [bm.tobytes()]})
-
-        agg: dict[str, Any] = {}
-        for r in df.mapInPandas(build, schema="f string, bits binary").collect():
-            cur = np.frombuffer(r["bits"], dtype=np.uint8)
-            prev = agg.get(r["f"])
-            agg[r["f"]] = cur if prev is None else (prev | cur)
-        return {
-            f: {
-                "m": msizes[f],
-                "k": k,
-                "b64": base64.b64encode(bm.tobytes()).decode(),
-            }
-            for f, bm in agg.items()
-        }
-
-    def _bloom_hashes(self, spark: SparkSession, value, k: int) -> list[int]:
-        """The probe side of the bloom: the SAME xxhash64 expressions the
-        build ran, over a one-row frame of the lookup value (a tiny
-        driver-local job, guaranteed bit-identical to the build)."""
-        k0 = self.key[0]
-        field = next(f for f in self.schema(include_internal=True).fields if f.name == k0)
-        one = spark.createDataFrame([(value,)], T.StructType([field]))
-        row = one.select(
-            *[F.xxhash64(F.col(k0), F.lit(i)).alias(f"h{i}") for i in range(k)]
-        ).collect()[0]
-        return [row[f"h{i}"] for i in range(k)]
-
     # ------------------------------------------------ metadata row counts
     # manifest["bucket_rows"] = {bucket: {"rows", "dead", "sig"}} recorded
     # by major compaction for the buckets it folds.  "sig" fingerprints
@@ -2086,38 +1997,6 @@ class LocalSnapshotSink(SnapshotSink):
                 hi = smx if hi is None else max(hi, smx)
         return lo, hi
 
-    def _prune_by_blooms(
-        self, spark: SparkSession, m: dict, files: list[str], value
-    ) -> list[str]:
-        """Drop files whose bloom provably excludes ``value``.  Files
-        without a bloom are always kept."""
-        import base64
-
-        blooms = self.key_blooms(m)
-        if not blooms or not any(f in blooms for f in files):
-            return files
-        hcache: dict[int, list[int]] = {}
-        keep = []
-        for f in files:
-            e = blooms.get(f)
-            if not e:
-                keep.append(f)
-                continue
-            try:
-                k, m_bits = int(e["k"]), int(e["m"])
-                if k not in hcache:
-                    hcache[k] = self._bloom_hashes(spark, value, k)
-                bits = base64.b64decode(e["b64"])
-                hit = all(
-                    bits[(h % m_bits) >> 3] & (1 << ((h % m_bits) & 7))
-                    for h in hcache[k]
-                )
-            except Exception:
-                hit = True  # malformed entry: keep the file
-            if hit:
-                keep.append(f)
-        return keep
-
     # -------------------------------------------------------------- reading
     def read(
         self,
@@ -2136,8 +2015,9 @@ class LocalSnapshotSink(SnapshotSink):
         """``key_eq``: leading-key point-read hint.  Base files whose
         recorded key range (see :meth:`key_stats`) excludes the value are
         skipped BEFORE the scan -- file-level pruning on top of bucket
-        pruning -- and the equality filter is applied to the result.
-        Safe on any table: files without stats are always read.
+        pruning -- and the equality filter is pushed into the scan, where
+        footer blooms (``compact(bloom=True)``) and dictionaries skip row
+        groups.  Safe on any table: files without stats are always read.
 
         ``range_hints``: {col: (lo, hi)} slab predicate over PAYLOAD
         columns (inclusive bounds, None = open end; timestamp bounds as
@@ -2226,10 +2106,6 @@ class LocalSnapshotSink(SnapshotSink):
             # holds no row of this key
             base = self._prune_by_key_stats(m, base, key_eq)
             deltas = self._prune_by_key_stats(m, deltas, key_eq)
-            # bloom sidecars cover what sorting does not: consolidated
-            # deltas and hash-mode bases (compact(bloom=True))
-            base = self._prune_by_blooms(spark, m, base, key_eq)
-            deltas = self._prune_by_blooms(spark, m, deltas, key_eq)
         df = self._read_files(
             spark, base + deltas, schema, imported=self._imported_set(m)
         )
@@ -3981,7 +3857,7 @@ class LocalSnapshotSink(SnapshotSink):
             if ren:
                 batch = batch.withColumnsRenamed(ren)
         # key-type normalization BEFORE anything hashes a key value:
-        # bucket clustering, file key-range stats, and blooms all record
+        # bucket clustering and file key-range stats both record
         # the key under its table type, and Murmur3 of int(5) (4 bytes)
         # != long(5) (8 bytes) -- a batch key under another width would
         # cluster rows into buckets lookups never probe (silent empty
@@ -4022,12 +3898,10 @@ class LocalSnapshotSink(SnapshotSink):
                 )
             rows = events_to_partial_state(batch_to_target_rows(batch), self.key)
             if self.dedup_on_write or self.mode == "cow":
-                rows = fold_partial_states(rows, key=self.key, salt=self.dedup_salt)
+                rows = fold_partial_states(rows, key=self.key)
         else:
             if self.dedup_on_write or self.mode == "cow":
-                batch = dedup_latest(
-                    batch, key=self.key, order=["ts", "seq"], salt=self.dedup_salt
-                )
+                batch = dedup_latest(batch, key=self.key, order=["ts", "seq"])
             rows = batch_to_target_rows(batch)
         if use_observe:
             obs_out = Observation(f"out-{uuid.uuid4().hex[:8]}")
@@ -4071,9 +3945,7 @@ class LocalSnapshotSink(SnapshotSink):
             # amplification until compaction.
             if self.cluster_deltas:
                 rows_b = rows.withColumn(_BUCKET, self._bucket_expr(nb))
-                written_map = self._write_bucketed(
-                    rows_b, sid, nb, new_schema, fanout=self.write_fanout
-                )
+                written_map = self._write_bucketed(rows_b, sid, nb, new_schema)
                 for b, fs in written_map.items():
                     written_bytes[b] = sum(os.path.getsize(f) for f in fs)
                 written = [f for fs in written_map.values() for f in fs]
@@ -5065,14 +4937,14 @@ class LocalSnapshotSink(SnapshotSink):
         request is refused.  Use for update-heavy tables where most base
         bytes are still live; measure with tools/compact_dv_ab.py.
 
-        ``bloom=True`` records a per-file bloom of the leading key for
-        this fold's output files (see :meth:`key_blooms`): point lookups
-        (``read(key_eq=...)`` / :meth:`lookup`) then skip files the key
-        provably is not in -- covering the files key-range stats cannot
-        (minor-consolidated deltas and unsorted hash-mode bases).  Cost:
-        one extra column-pruned pass over the output + a bitmap blob per
-        file (~2 bytes/key); files above 65536 rows are skipped (their
-        bitmap cost outweighs the skip -- sort them instead).
+        ``bloom=True`` (minor and major) writes a parquet footer bloom of
+        the leading key into this fold's output files, sized to each row
+        group's keys (see ``BLOOM_MAX_BYTES``).  Point lookups
+        (``read(key_eq=...)`` / :meth:`lookup`) push ``key[0] = value``
+        into the scan, which skips the row groups whose bloom excludes it
+        -- inside the files key-range stats cannot prune (consolidated
+        deltas, hash-mode bases).  A chunk that stayed dictionary-encoded
+        gets no bloom: its dictionary prunes it instead.
 
         ``cluster_by`` ([numeric/timestamp/date payload columns]):
         Z-ORDER the fold output -- each column is quantile-bucketed into
@@ -5155,13 +5027,7 @@ class LocalSnapshotSink(SnapshotSink):
                     schema,
                     combine_first=self._fold_combine_first(delta_files),
                     num_buckets=int(cur["num_buckets"]),
-                )
-                new_blooms = (
-                    self._collect_key_blooms(
-                        spark, [f for fs in written.values() for f in fs]
-                    )
-                    if bloom
-                    else {}
+                    bloom=bloom,
                 )
             # commit via consumed-file subtraction against the LATEST
             # manifest: delta files appended by concurrent streams during
@@ -5193,17 +5059,6 @@ class LocalSnapshotSink(SnapshotSink):
                     deltas=self._pack_maps(deltas_)[0],
                     delta_bytes=self._sizes_by_bucket(self._resolve_map(deltas_)),
                 )
-                # blooms: trim the consumed files' entries, add this
-                # consolidation's outputs (files are immutable, surviving
-                # entries stay valid verbatim)
-                bl = dict(self.key_blooms(latest))
-                if bl or new_blooms:
-                    bl = {f: v for f, v in bl.items() if f not in consumed}
-                    bl.update(new_blooms)
-                if bl:
-                    manifest["key_blooms"] = self._pack_blob(bl)
-                else:
-                    manifest.pop("key_blooms", None)
                 self._commit(manifest)
             return {"snapshot_id": sid, "compacted_buckets": len(written), "minor": True}
         if cluster_by:
@@ -5338,6 +5193,11 @@ class LocalSnapshotSink(SnapshotSink):
                     for b in todo
                 }
             )
+            if has_flat:
+                # flat deltas spread over every bucket: an equal share each
+                nb = int(cur["num_buckets"])
+                share = self._sizes_by_bucket({_FLAT: delta_map[_FLAT]})[_FLAT] // nb
+                bsizes = {str(b): bsizes.get(str(b), 0) + share for b in range(nb)}
             fanout_map = {
                 int(b): max(1, -(-int(n) // int(target))) for b, n in bsizes.items()
             }
@@ -5370,6 +5230,7 @@ class LocalSnapshotSink(SnapshotSink):
                 cluster_expr=cluster_expr,
                 combine_first=combine,
                 num_buckets=int(cur["num_buckets"]),
+                bloom=bloom,
             )
         # per-file key ranges for the files this fold produced (one
         # column-pruned O(written) job); entries for the files this fold
@@ -5391,13 +5252,6 @@ class LocalSnapshotSink(SnapshotSink):
                     [f for fs in written.values() for f in fs], list(cluster_by)
                 )
                 if cluster_by
-                else {}
-            )
-            new_blooms = (
-                self._collect_key_blooms(
-                    spark, [f for fs in written.values() for f in fs]
-                )
-                if bloom
                 else {}
             )
             # per-bucket row/tombstone counts for metadata-only count():
@@ -5474,10 +5328,6 @@ class LocalSnapshotSink(SnapshotSink):
             if cs or new_col_stats:
                 cs = {f: v for f, v in cs.items() if f not in replaced}
                 cs.update(new_col_stats)
-            bl = dict(self.key_blooms(latest))
-            if bl or new_blooms:
-                bl = {f: v for f, v in bl.items() if f not in replaced}
-                bl.update(new_blooms)
             mv = {str(x) for x in latest.get("mv_buckets", [])}
             for b in todo:
                 if b in mv_new:
@@ -5512,7 +5362,6 @@ class LocalSnapshotSink(SnapshotSink):
             for k, v in (
                 ("key_stats", ks and self._pack_key_stats(ks)),
                 ("col_stats", cs and self._pack_key_stats(cs)),
-                ("key_blooms", bl and self._pack_blob(bl)),
                 ("bucket_rows", brm),
                 ("mv_buckets", sorted(mv)),
             ):
@@ -5650,7 +5499,6 @@ class LocalSnapshotSink(SnapshotSink):
             else:
                 manifest.pop("key_stats", None)
             manifest.pop("col_stats", None)  # rewrite output is not z-ordered
-            manifest.pop("key_blooms", None)  # every bloom'd file was replaced
             manifest.pop("bucket_rows", None)  # bucket ids renumbered
             manifest.pop("mv_buckets", None)  # full rewrite: single-version
             self._commit(manifest)

@@ -7,7 +7,9 @@ duplicate row, equal-(ts, _seq) ties whose payloads differ only in
 nulls, clustered and flat delta layouts, a schema widened mid-log -- and
 check the folded state against a one-shot last-writer-wins oracle.  They
 also pin the sink's option surface: tables that recorded a since-removed
-property still open, and new knobs need a visible edit here.
+property still open, and new knobs need a visible edit here.  The last
+group covers ``compact(bloom=True)``: parquet footer blooms of the
+leading key, checked through parquet-mr's footer reader.
 """
 
 from __future__ import annotations
@@ -115,6 +117,22 @@ def test_fold_matches_one_shot_oracle(spark, tmp_path, clustered):
     assert sorted(r[0] for r in dead) == sorted(f"c{i}" for i in range(0, 60, 7))
 
 
+def test_target_file_bytes_splits_flat_table_buckets(spark, tmp_path):
+    """Flat deltas count toward each bucket's size: a fresh flat table
+    whose buckets far exceed the target folds to several files a bucket."""
+    sink = LocalSnapshotSink(
+        str(tmp_path / "t"), num_buckets=2, compact_every=10**9,
+        cluster_deltas=False,
+    )
+    want = _lww_oracle(_fill(spark, sink, n=300, batches=2))
+    assert not sink.file_lists()
+    flat_bytes = sum(sink.manifest()["delta_bytes"].values())
+    sink.compact(spark, target_file_bytes=flat_bytes // 8)
+    assert _state(spark, sink) == want
+    files = sink.file_lists()
+    assert len(files) == 2 and all(len(fs) > 1 for fs in files.values()), files
+
+
 def test_fold_after_schema_evolution(spark, tmp_path):
     sink = LocalSnapshotSink(str(tmp_path / "t"), num_buckets=4, compact_every=10**9)
     _fill(spark, sink, n=20, batches=2)
@@ -187,15 +205,241 @@ def test_sink_option_surface_is_pinned():
         "async_compact", "auto_compact_bytes", "base_schema", "branch",
         "cluster_deltas", "collect_metrics", "compact_every",
         "compact_min_bucket_bytes", "compact_min_dead_fraction",
-        "conflict_retries", "dedup_on_write", "dedup_salt", "expectations",
+        "conflict_retries", "dedup_on_write", "expectations",
         "key", "late_tolerance_seconds", "max_committed_tokens", "merge_mode",
         "mode", "monotonic_tokens", "num_buckets", "row_ttl_seconds",
         "snapshot_keep_last", "sort_on_compact", "table_dir",
         "target_file_bytes", "tombstone_retention_seconds", "track_changes",
-        "write_fanout",
     ]
     assert _params(LocalSnapshotSink.compact) == [
         "bloom", "buckets", "cluster_by", "expire_rows_before",
         "min_bucket_bytes", "min_dead_fraction", "minor",
         "purge_tombstones_before", "sort", "target_file_bytes",
     ]
+
+
+# ---------------------------------------------------------- footer key blooms
+# compact(bloom=True) writes a parquet footer bloom of the leading key into
+# its output files; an equality filter on the key (read(key_eq=) and
+# lookup()) then skips the row groups whose bloom excludes the value.
+# parquet-mr writes the bloom only for chunks that fell back from
+# dictionary encoding, so these tables give every key one turn: a file's
+# leading key is unique per row and its chunk is plain-encoded.
+
+
+def _key_rows(lo, hi, h):
+    """Keys c{lo}..c{hi-1}, one turn each, written at hour ``h``."""
+    op = "I" if h == 1 else "U"
+    return [
+        (op, f"c{i:05d}", 0, "user", f"v{h}-{i}", None, _ts(h), h * 10**6 + i, 0)
+        for i in range(lo, hi)
+    ]
+
+
+def _footer_blooms(spark, path) -> set[str]:
+    """Columns of a parquet file that carry a bloom in some row group,
+    read from the footer through parquet-mr (pyarrow does not expose
+    bloom offsets)."""
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(path), spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        out = set()
+        blocks = reader.getFooter().getBlocks()
+        for i in range(blocks.size()):
+            cols = blocks.get(i).getColumns()
+            for j in range(cols.size()):
+                if cols.get(j).getBloomFilterOffset() >= 0:
+                    out.add(cols.get(j).getPath().toDotString())
+        return out
+    finally:
+        reader.close()
+
+
+def _scan_rows(df) -> tuple[list[tuple], int]:
+    """Collect ``df``; return its sorted rows and the rows its parquet
+    scans output (after row-group pruning)."""
+    rows = sorted(tuple(r) for r in df.collect())
+    total = 0
+
+    def walk(node):
+        nonlocal total
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if name == "FileSourceScanExec":
+            total += node.metrics().apply("numOutputRows").value()
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return rows, total
+
+
+def _bloom_table(spark, path, stage, bloom):
+    """Two buckets of salted multi-file bases.  ``major``: the bloom rides
+    the major fold; ``minor``: the bases are unbloomed and the bloom rides
+    the minor fold of a second round of deltas."""
+    sink = LocalSnapshotSink(path, num_buckets=2, compact_every=10**9)
+    sink.merge(_batch(spark, _key_rows(0, 800, 1)), "b-1")
+    sink.compact(
+        spark, sort=False,
+        target_file_bytes=sum(sink.manifest()["delta_bytes"].values()) // 8,
+        bloom=bloom and stage == "major",
+    )
+    if stage == "minor":
+        # every third key updated, 200 new keys
+        rows = _key_rows(0, 800, 2)[::3] + _key_rows(800, 1000, 2)
+        sink.merge(_batch(spark, rows), "b-2")
+        sink.compact(spark, minor=True, bloom=bloom)
+    return sink
+
+
+@pytest.mark.parametrize("stage", ["major", "minor"])
+def test_footer_bloom_lookups_match_unbloomed_copy(spark, tmp_path, stage):
+    bloomed = _bloom_table(spark, str(tmp_path / "b"), stage, bloom=True)
+    plain = _bloom_table(spark, str(tmp_path / "p"), stage, bloom=False)
+    folded = (
+        bloomed.file_lists() if stage == "major" else bloomed.delta_lists()
+    )
+    files = [f for fs in folded.values() for f in fs]
+    assert len(bloomed.file_lists()["0"]) > 1  # salted: several files a bucket
+    assert {c for f in files for c in _footer_blooms(spark, f)} == {"conv_id"}
+    keys = ["c00000", "c00333", "c00601", "c00900", "c99999"]
+    scanned = {"bloomed": 0, "plain": 0}
+    for k in keys:
+        for name, sink in (("bloomed", bloomed), ("plain", plain)):
+            got, n = _scan_rows(sink.read(spark, key_eq=k).select(*_COLS))
+            looked, m = _scan_rows(sink.lookup(spark, k).select(*_COLS))
+            scanned[name] += n + m
+            if name == "bloomed":
+                want = got
+            assert got == looked == want, (k, name)
+        assert len(want) == (int(k[1:]) < (800 if stage == "major" else 1000))
+    assert scanned["bloomed"] < scanned["plain"], scanned
+
+
+def test_footer_bloom_on_long_key(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    payload = T.StructType(
+        [
+            T.StructField("uid", T.LongType(), False),
+            T.StructField("val", T.StringType(), True),
+            T.StructField("ts", T.TimestampType(), False),
+        ]
+    )
+    events = T.StructType(
+        [T.StructField("op", T.StringType(), False), *payload.fields]
+        + [
+            T.StructField("seq", T.LongType(), False),
+            T.StructField("src_partition", T.IntegerType(), False),
+        ]
+    )
+    sink = LocalSnapshotSink(
+        str(tmp_path / "t"), num_buckets=2, key=["uid"], base_schema=payload,
+        compact_every=10**9,
+    )
+    sink.merge(
+        spark.createDataFrame(
+            [("I", i, f"v{i}", _ts(1), i, 0) for i in range(400)], events
+        ),
+        "b-1",
+    )
+    sink.compact(
+        spark, sort=False, bloom=True,
+        target_file_bytes=sum(sink.manifest()["delta_bytes"].values()) // 6,
+    )
+    files = [f for fs in sink.file_lists().values() for f in fs]
+    assert {c for f in files for c in _footer_blooms(spark, f)} == {"uid"}
+    got, scanned = _scan_rows(sink.lookup(spark, 201).select("uid", "val"))
+    assert got == [(201, "v201")]
+    bucket_rows = max(
+        spark.read.parquet(*fs).count() for fs in sink.file_lists().values()
+    )
+    assert scanned < bucket_rows
+    assert sink.read(spark, key_eq=201).count() == 1
+    assert sink.lookup(spark, 9999).count() == 0
+
+
+def test_cli_maintain_bloom(spark, tmp_path, capsys):
+    from fetchez_spark.cli import main
+
+    path = str(tmp_path / "t")
+    sink = LocalSnapshotSink(path, num_buckets=2, compact_every=10**9)
+    sink.merge(_batch(spark, _key_rows(0, 300, 1)), "b-1")
+    sink.merge(_batch(spark, _key_rows(300, 600, 1)), "b-2")
+    assert main(["maintain", path, "--minor", "--bloom", "--cores", "2"]) == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out["minor_compact"]["minor"] is True
+    deltas = [f for fs in sink.delta_lists().values() for f in fs]
+    assert len(deltas) == 2
+    assert all(_footer_blooms(spark, f) == {"conv_id"} for f in deltas)
+    assert sink.lookup(spark, "c00042").count() == 1
+
+
+def test_no_bloom_outside_bloom_folds(spark, tmp_path):
+    """Delta files, CoW change sidecars and ``bloom=False`` fold outputs
+    carry no bloom on any column, merges after a bloom fold included."""
+    sink = LocalSnapshotSink(str(tmp_path / "mor"), num_buckets=2, compact_every=10**9)
+    sink.merge(_batch(spark, _key_rows(0, 300, 1)), "b-1")
+    unbloomed = [f for fs in sink.delta_lists().values() for f in fs]
+    sink.compact(spark, bloom=True)
+    sink.merge(_batch(spark, _key_rows(0, 300, 2)), "b-2")
+    unbloomed += [f for fs in sink.delta_lists().values() for f in fs]
+    sink.compact(spark)
+    unbloomed += [f for fs in sink.file_lists().values() for f in fs]
+    flat = LocalSnapshotSink(
+        str(tmp_path / "flat"), num_buckets=2, compact_every=10**9,
+        cluster_deltas=False,
+    )
+    flat.merge(_batch(spark, _key_rows(0, 300, 1)), "b-1")
+    unbloomed += [f for fs in flat.delta_lists().values() for f in fs]
+    cow = LocalSnapshotSink(
+        str(tmp_path / "cow"), num_buckets=2, compact_every=10**9, mode="cow"
+    )
+    cow.merge(_batch(spark, _key_rows(0, 300, 1)), "b-1")
+    cow.merge(_batch(spark, _key_rows(0, 300, 2)), "b-2")
+    unbloomed += [f for fs in cow.file_lists().values() for f in fs]
+    unbloomed += cow._resolve_list(cow.manifest()["change_files"])
+    assert len(unbloomed) >= 8
+    assert {f: b for f in unbloomed if (b := _footer_blooms(spark, f))} == {}
+
+
+def test_table_recording_removed_key_blooms_still_opens(spark, tmp_path):
+    """Tables whose manifest recorded the removed ``key_blooms`` sidecar
+    still open, look up, stay fsck-clean and expire: the key is carried
+    as an opaque blob ref and nothing reads it."""
+    path = str(tmp_path / "t")
+    sink = LocalSnapshotSink(path, num_buckets=2, compact_every=10**9)
+    sink.merge(_batch(spark, _key_rows(0, 100, 1)), "b-1")
+    sink.compact(spark, minor=True)
+    head = sink._manifest_path(sink.current_snapshot_id)
+    with open(head) as f:
+        m = json.load(f)
+    # a sidecar that claims every delta file excludes every key: a reader
+    # that still honoured it would return nothing
+    files = [f for fs in sink.delta_lists().values() for f in fs]
+    m["key_blooms"] = sink._pack_blob(
+        {f: {"m": 1024, "k": 7, "b64": "A" * 172} for f in files}
+    )
+    with open(head, "w") as f:
+        json.dump(m, f)
+
+    again = LocalSnapshotSink(path)
+    for k in ("c00000", "c00042", "c00099"):
+        assert again.lookup(spark, k).count() == 1
+        assert again.read(spark, key_eq=k).count() == 1
+    again.merge(_batch(spark, _key_rows(0, 100, 2)), "b-2")
+    again.compact(spark, bloom=True)
+    assert again.lookup(spark, "c00042").select("text").first()[0] == "v2-42"
+    again.expire_snapshots(keep_last=1, min_age_seconds=0)
+    assert again.read(spark).count() == 100
+    report = again.fsck(deep=True)
+    assert report["ok"], report

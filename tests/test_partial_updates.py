@@ -6,8 +6,9 @@ event wins; a delete resets the row.  Exactness under arbitrary batching
 comes from persisted per-column (ts, seq) versions, which make the fold
 associative -- these tests drive every consolidation point (merge,
 read-time MoR reduction, minor/major/sorted/bin-packed compaction, CoW
-rewrites, salted two-phase dedup, change feed, mirror replication)
-against one pure-python reference fold of the raw event log.
+rewrites, change feed, mirror replication) against one pure-python
+reference fold of the raw event log; the salted two-phase fold is
+checked against the one-phase fold.
 
 (Reference analog: fetchez entries accept partial metadata updates --
 entry.update(kwargs), /root/reference/src/fetchez/core.py:1128-1137.)
@@ -22,7 +23,10 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fetchez_spark.operators.merge import batch_to_target_rows
 from fetchez_spark.operators.partial import (
+    events_to_partial_state,
+    fold_partial_states,
     fold_partial_updates,
     is_partial_internal,
     pv_seq,
@@ -244,12 +248,21 @@ def test_cow_partial_mode(spark, tmp_path):
     assert _visible(spark, sink) == _norm(_expected(events))
 
 
-def test_salted_two_phase_partial_fold(spark, tmp_path):
+def test_salted_partial_fold_equals_unsalted(spark):
+    """``salt > 1`` folds in two phases (per-event salt, then the key);
+    the fold is associative, so the result equals the one-phase fold."""
+    key = ["conv_id", "turn_idx"]
     events = _gen_events(seed=13)
-    sink = _replay(
-        spark, _mk(spark, tmp_path, dedup_salt=4, dedup_on_write=True), events
-    )
-    assert _visible(spark, sink) == _norm(_expected(events))
+    state = events_to_partial_state(batch_to_target_rows(_df(spark, events)), key)
+
+    def folded(salt):
+        return sorted(
+            tuple(r) for r in fold_partial_states(state, key=key, salt=salt).collect()
+        )
+
+    plain = folded(0)
+    assert len(plain) < len(events)
+    assert folded(4) == plain
 
 
 def test_flat_deltas_partial(spark, tmp_path):

@@ -390,26 +390,6 @@ def test_expire_gcs_list_blobs(spark, tmp_path):
     assert sink.read(spark).count() == 4, "current state intact"
 
 
-def test_write_fanout_splits_hot_bucket(spark, tmp_path):
-    """A Zipf-hot conversation concentrates one bucket; write_fanout
-    splits that bucket's delta write across several files/tasks while the
-    merged state stays identical."""
-    sink = LocalSnapshotSink(
-        str(tmp_path / "t"), num_buckets=4, write_fanout=3, compact_every=10**9
-    )
-    rows = [ev("I", "hot", i % 5, f"v{i}", i, i) for i in range(60)]  # one conv
-    rows += [ev("I", f"c{i}", 0, "x", 100 + i, 100 + i) for i in range(6)]
-    sink.merge(_df(spark, rows), "b1")
-    deltas = sink.delta_lists()
-    hot_bucket_files = max((len(fs) for fs in deltas.values()), default=0)
-    assert hot_bucket_files >= 2, f"hot bucket split across tasks: {deltas}"
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in sink.read(spark).collect()
-    }
-    assert got[("hot", 4)] == "v59" and len(got) == 5 + 6
-
-
 def test_read_changes_incremental_scan(spark, tmp_path):
     """Incremental read between snapshots: exactly the rows merged in the
     range, deletes as tombstones when internal, maintenance snapshots

@@ -1,7 +1,7 @@
 """Key-column type discipline (bucket-hash integrity).
 
-Bucket clustering, file key-range stats, and blooms all hash/record the
-key under its table type, and Spark's Murmur3 of int(5) (4 bytes) !=
+Bucket clustering and file key-range stats both hash/record the key
+under its table type, and Spark's Murmur3 of int(5) (4 bytes) !=
 long(5) (8 bytes).  Pre-fix, a batch whose key column arrived under
 another width silently clustered rows into buckets that lookups never
 probe (found while designing import_files; reproduced: lookup(0)

@@ -66,14 +66,14 @@ def test_search_finds_dedup_transforms():
 
 def test_soak_minor_major_cadence_with_fanout(spark, tmp_path):
     """Leveled-maintenance soak: minor compaction every 4 batches bounds
-    delta-file count, one major at the end folds to bases; hot-bucket
-    write fanout on -- final state still equals the pandas oracle."""
+    delta-file count, one major at the end folds to bases -- final state
+    still equals the pandas oracle."""
     spec = ChangeLogSpec(
         num_events=9_000, num_convs=150, max_turns=8, seed=88, evolve_at=0.5
     )
     chunks = write_change_log(spec, str(tmp_path / "log"), num_chunks=12)
     sink = LocalSnapshotSink(
-        str(tmp_path / "t"), num_buckets=8, compact_every=10**9, write_fanout=2
+        str(tmp_path / "t"), num_buckets=8, compact_every=10**9
     )
     for i, chunk in enumerate(chunks):
         replay_batches(spark, [chunk], sink, token_prefix=f"s{i}")

@@ -25,7 +25,7 @@ can hide from a one-shot bench — and records:
   (ts, seq) struct, tombstones dropped), ``exceptAll`` in both
   directions must be empty;
 * ``fsck(deep=True)`` must report zero errors;
-* point-lookup latency on the full table (bloom/minmax pruned read).
+* point-lookup latency on the full table (bucket-pruned read).
 
 Writes ONE JSON blob to BENCH/endurance_r4.json and prints a summary.
 
