@@ -93,7 +93,7 @@ def profile_replay(events: int | None, cores: int, batches: int) -> dict:
             "_write_bucketed",
             "_dedup_write_bucketed",
             "_commit",
-            "_harvest_ts_stats",
+            "_footer_burst",
             "_collect_bucket_rows",
             "manifest",
         ],

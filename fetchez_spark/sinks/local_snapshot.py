@@ -21,10 +21,11 @@ Manifest (the "snapshot"): schema, parent pointer, per-bucket base-file and
 delta-file lists, committed batch tokens, row stats, plus catalog state
 (properties, expectations, view definitions, ...).  One rule says what a
 new snapshot inherits: every top-level key of its parent except
-``snapshot_id``, ``parent`` and the per-commit keys ``stats``,
-``change_files`` and ``ts_stats_new``; the commit then sets the keys it
-changes.  ``stats.delta_commits`` carries over unless the commit resets
-it, and the parent's ``committed_at`` is the floor of the child's stamp.
+``snapshot_id``, ``parent``, the per-commit keys ``stats``,
+``change_files`` and ``ts_stats_new``, and the retired ``key_blooms``;
+the commit then sets the keys it changes.  ``stats.delta_commits``
+carries over unless the commit resets it, and the parent's
+``committed_at`` is the floor of the child's stamp.
 Every top-level ``ref:`` value is a live payload for expiry, fsck and
 clones.  A commit is:
 
@@ -146,6 +147,11 @@ def _internal_names(columns) -> list[str]:
 # child (see LocalSnapshotSink._child_manifest): the commit's own stats,
 # its CoW change set, and the event-time stats of that change set
 _PER_COMMIT_KEYS = ("stats", "change_files", "ts_stats_new")
+# manifest keys of retired features: tables that recorded them still open,
+# and the first commit on top drops them, so expiry frees their blobs
+# (``key_blooms``: the per-file leading-key bloom sidecar, now parquet
+# footer blooms)
+_RETIRED_KEYS = ("key_blooms",)
 
 
 def _payload_refs(manifest: dict) -> dict[str, str]:
@@ -1528,18 +1534,21 @@ class LocalSnapshotSink(SnapshotSink):
         """The manifest of commit ``sid`` on top of ``parent`` -- the ONE
         inheritance rule every commit goes through.  The child carries
         every top-level key of the parent except ``snapshot_id``,
-        ``parent`` and :data:`_PER_COMMIT_KEYS` (a commit that inherited
-        its parent's ``change_files`` would make read_changes emit that
-        batch twice), including ``committed_at``, which :meth:`_commit`
-        uses as the floor of the child's stamp.  ``stats`` is this
-        commit's tag; ``stats.delta_commits`` (the compaction cadence
-        counter) carries over unless ``stats`` resets it.  ``changes``
-        replace keys wholesale."""
+        ``parent``, :data:`_PER_COMMIT_KEYS` (a commit that inherited its
+        parent's ``change_files`` would make read_changes emit that batch
+        twice) and :data:`_RETIRED_KEYS` (nothing reads them; dropping
+        them lets expiry free their blobs), including ``committed_at``,
+        which :meth:`_commit` uses as the floor of the child's stamp.
+        ``stats`` is this commit's tag; ``stats.delta_commits`` (the
+        compaction cadence counter) carries over unless ``stats`` resets
+        it.  ``changes`` replace keys wholesale."""
         child = {"snapshot_id": sid, "parent": parent["snapshot_id"]}
         child.update(
             (k, v)
             for k, v in parent.items()
-            if k not in child and k not in _PER_COMMIT_KEYS
+            if k not in child
+            and k not in _PER_COMMIT_KEYS
+            and k not in _RETIRED_KEYS
         )
         child["stats"] = {
             "delta_commits": int((parent.get("stats") or {}).get("delta_commits", 0)),
@@ -1586,15 +1595,135 @@ class LocalSnapshotSink(SnapshotSink):
         self._write_manifest(manifest)
         self._set_version(manifest["snapshot_id"])  # <- the atomic commit point
 
-    # ------------------------------------------------- file key-range stats
-    # {file_path: [min_leading_key, max_leading_key]} recorded by sorted
-    # compaction (sort_on_compact / compact(sort=True)).  Files are
-    # immutable, so an entry can never go stale-WRONG: a file that was
-    # rewritten simply stops being referenced and its entry is trimmed at
-    # the next sorted compact.  Entries ride manifests inline when small,
-    # else as a content-addressed blob (same primitive as file lists).
+    # ------------------------------------------------ per-file statistics
+    # Every per-file statistic a manifest records -- key_stats, col_stats,
+    # ts_stats_new, bucket_rows -- and every footer check (ts_range, the
+    # two purges, read_changes on files with no recorded entry) comes from
+    # ONE reader of parquet FOOTER statistics, _footer_stats: driver-side,
+    # no Spark job and no data scan.  Files are immutable, so an entry can
+    # never go stale-WRONG: a rewritten file simply stops being referenced
+    # and its entry is trimmed at the next fold.  A file whose footer lacks
+    # a statistic gets no entry and is read every time.  Entries ride
+    # manifests inline when small, else as a content-addressed blob (same
+    # primitive as file lists).
     _KEY_STATS_INLINE_MAX = 16
+    # leading-key types whose footer ranges are JSON-safe manifest values;
+    # other key types skip key_stats rather than corrupt the manifest
+    _KEY_STATS_TYPES = (
+        T.StringType, T.IntegerType, T.LongType, T.ShortType, T.ByteType,
+        T.DoubleType, T.FloatType,
+    )
 
+    @staticmethod
+    def _footer_stats(path: str, cols=()):
+        """One footer read -> ``(num_rows, may_hold_tombstones, {col:
+        [min, max] or None})``, or None when the footer is unreadable.  A
+        column's range is exact -- the min/max over every row group -- or
+        None when any row group lacks the statistic or a float bound is
+        NaN.  Timestamps come back naive local time, the frame
+        :meth:`_ts_bound` gives user bounds.  A file with no ``_deleted``
+        statistic may hold tombstones."""
+        import math
+
+        import pyarrow.parquet as pq
+
+        try:
+            md = pq.ParquetFile(path).metadata
+        except Exception:
+            return None
+        # keyed by dotted path: a nested leaf named like a top-level
+        # column (``meta.ts``) must not stand in for it
+        names = {md.schema.column(i).path: i for i in range(md.num_columns)}
+
+        def _range(c):
+            if c not in names:
+                return None
+            lo = hi = None
+            try:
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(names[c]).statistics
+                    if st is None or st.min is None or st.max is None:
+                        return None
+                    mn, mx = st.min, st.max
+                    if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
+                        return None
+                    lo = mn if lo is None else min(lo, mn)
+                    hi = mx if hi is None else max(hi, mx)
+            except Exception:
+                return None
+            if lo is None:
+                return None
+            if getattr(lo, "tzinfo", None) is not None:
+                lo = lo.astimezone(tz=None).replace(tzinfo=None)
+                hi = hi.astimezone(tz=None).replace(tzinfo=None)
+            return [lo, hi]
+
+        dead = _range(INTERNAL_DELETED)
+        may_dead = INTERNAL_DELETED not in names or (
+            bool(dead[1]) if dead else md.num_row_groups > 0
+        )
+        return md.num_rows, may_dead, {c: _range(c) for c in cols}
+
+    @classmethod
+    def _footer_burst(cls, files: list[str], cols=()) -> dict[str, Any]:
+        """``{file: _footer_stats(file, cols)}``.  pyarrow releases the GIL
+        for the parse, so past 8 files a thread pool turns O(files) serial
+        driver reads into one short parallel burst."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        def read(f):
+            return cls._footer_stats(f, cols)
+
+        if len(files) > 8:
+            with ThreadPoolExecutor(16) as ex:
+                return dict(zip(files, ex.map(read, files)))
+        return {f: read(f) for f in files}
+
+    @staticmethod
+    def _json_ranges(fstats: dict, cols, files=None) -> dict[str, dict]:
+        """``{file: {col: [min, max]}}`` over ``files`` (default: all of
+        ``fstats``) for the columns each footer bounds, temporal bounds as
+        ISO strings -- the form every manifest statistic records.  A file
+        with no bounded column gets no entry."""
+        from datetime import date
+
+        out: dict[str, dict] = {}
+        for f in fstats if files is None else files:
+            s = fstats.get(f)
+            entry = {
+                c: [str(v) if isinstance(v, date) else v for v in rng]
+                for c in cols
+                if s and (rng := s[2].get(c))
+            }
+            if entry:
+                out[f] = entry
+        return out
+
+    @classmethod
+    def _range_overlaps(cls, rng, lo, hi) -> bool:
+        """Can a file whose recorded or footer range is ``rng`` (``[min,
+        max, ...]``) hold a value in ``[lo, hi]``?  None is an open end; a
+        point lookup passes ``lo == hi``.  ISO-string bounds compare as
+        timestamps against datetime query bounds.  A malformed, null or
+        mismatched entry keeps the file: pruning must be safe by
+        construction."""
+        from datetime import datetime
+
+        try:
+            mn, mx = rng[0], rng[1]
+            if mn is None or mx is None:
+                return True
+            if isinstance(mn, str) and isinstance(hi if lo is None else lo, datetime):
+                mn, mx = cls._ts_bound(mn), cls._ts_bound(mx)
+            return not (
+                (hi is not None and mn > hi) or (lo is not None and mx < lo)
+            )
+        except (TypeError, ValueError, IndexError):
+            return True
+
+    # {file_path: [min_leading_key, max_leading_key]} recorded by sorted
+    # folds (sort_on_compact / compact(sort=True), rebucket(sort=True))
+    # and import_files(collect_stats=True), from footer statistics.
     def _pack_key_stats(self, stats: dict[str, list]) -> dict | str:
         if len(stats) <= self._KEY_STATS_INLINE_MAX:
             return stats
@@ -1609,48 +1738,11 @@ class LocalSnapshotSink(SnapshotSink):
             return {}
         return val if isinstance(val, dict) else self._resolve_blob(val)
 
-    def _collect_key_stats(self, spark: SparkSession, files: list[str]) -> dict[str, list]:
-        """One column-pruned job over just-written files: per-file min/max
-        of the leading key.  O(files) driver memory -- bounded metadata,
-        the same shape as the lineage stats job.  Only JSON-safe key
-        types are recorded (string/integral/floating); others skip stats
-        rather than corrupt the manifest."""
-        if not files:
-            return {}
+    def _stats_key(self, schema: T.StructType) -> list[str]:
+        """``[leading key]`` when ``schema`` gives it a JSON-safe type
+        (:data:`_KEY_STATS_TYPES`), else ``[]``."""
         k0 = self.key[0]
-        df = spark.read.parquet(*files).select(
-            F.input_file_name().alias("_f"), F.col(k0)
-        )
-        dt = df.schema[k0].dataType
-        if not isinstance(
-            dt, (T.StringType, T.IntegerType, T.LongType, T.ShortType,
-                 T.ByteType, T.DoubleType, T.FloatType)
-        ):
-            return {}
-        from urllib.parse import unquote, urlparse
-
-        out: dict[str, list] = {}
-        for r in df.groupBy("_f").agg(
-            F.min(k0).alias("lo"), F.max(k0).alias("hi")
-        ).collect():
-            p = r["_f"]
-            if "://" in p:
-                p = unquote(urlparse(p).path)
-            out[p] = [r["lo"], r["hi"]]
-        return out
-
-    @staticmethod
-    def _range_excludes(rng, value) -> bool:
-        """True iff ``value`` provably lies outside [lo, hi].  Type
-        mismatches (or null bounds) keep the file -- pruning must be
-        safe-by-construction."""
-        try:
-            lo, hi = rng
-            if lo is None or hi is None:
-                return False
-            return bool(value < lo) or bool(value > hi)
-        except TypeError:
-            return False
+        return [k0] if isinstance(schema[k0].dataType, self._KEY_STATS_TYPES) else []
 
     def _prune_by_key_stats(
         self, m: dict, files: list[str], value
@@ -1663,17 +1755,12 @@ class LocalSnapshotSink(SnapshotSink):
             return files
         return [
             f for f in files
-            if f not in stats or not self._range_excludes(stats[f], value)
+            if f not in stats or self._range_overlaps(stats[f], value, value)
         ]
 
-    # ----------------------------------------- multi-column file stats
     # {file: {col: [min, max]}} recorded by z-order clustering
-    # (compact(cluster_by=[...])).  Same lifecycle as key_stats: files
-    # are immutable so entries can never go stale-wrong; entries for
-    # replaced files are trimmed at the next fold.  Values are parquet
-    # FOOTER statistics (exact for numeric/temporal columns -- the only
-    # types cluster_by accepts), harvested driver-side in O(files)
-    # footer reads, no Spark job.
+    # (compact(cluster_by=[...])) from footer statistics -- exact for the
+    # numeric and temporal columns cluster_by accepts.
     def col_stats(self, manifest: dict | None = None) -> dict[str, dict]:
         """Resolved per-file {col: [min, max]} ranges for cluster columns
         (empty when no z-order compaction has run)."""
@@ -1683,83 +1770,19 @@ class LocalSnapshotSink(SnapshotSink):
             return {}
         return val if isinstance(val, dict) else self._resolve_blob(val)
 
-    @classmethod
-    def _harvest_col_stats(
-        cls, files: list[str], cols: list[str]
-    ) -> dict[str, dict]:
-        """Per-file min/max for ``cols`` from parquet footers.  Temporal
-        stats serialize as ISO strings (the ts_stats convention); a column
-        whose statistics are missing in ANY row group gets no entry for
-        that file (readers keep files with unknown stats)."""
-        from datetime import date, datetime
-
-        import pyarrow.parquet as pq
-
-        out: dict[str, dict] = {}
-        for f in files:
-            try:
-                md = pq.ParquetFile(f).metadata
-            except Exception:
-                continue
-            names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            entry: dict[str, list] = {}
-            for c in cols:
-                ci = names.get(c)
-                if ci is None:
-                    continue
-                lo = hi = None
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or st.min is None or st.max is None:
-                        ok = False
-                        break
-                    mn, mx = st.min, st.max
-                    lo = mn if lo is None else min(lo, mn)
-                    hi = mx if hi is None else max(hi, mx)
-                if not ok or lo is None:
-                    continue
-                if isinstance(lo, datetime):
-                    if lo.tzinfo is not None:
-                        lo = lo.astimezone(tz=None).replace(tzinfo=None)
-                        hi = hi.astimezone(tz=None).replace(tzinfo=None)
-                    entry[c] = [lo.isoformat(sep=" "), hi.isoformat(sep=" ")]
-                elif isinstance(lo, date):
-                    entry[c] = [lo.isoformat(), hi.isoformat()]
-                else:
-                    entry[c] = [lo, hi]
-            if entry:
-                out[f] = entry
-        return out
-
-    @classmethod
-    def _col_range_overlaps(cls, rng: list, lo, hi) -> bool:
-        """Can a file whose recorded [min, max] is ``rng`` hold a value in
-        [lo, hi]?  Unknown/mismatched types keep the file (pruning is
-        safe-by-construction).  ISO-string stats compare as timestamps."""
-        try:
-            mn, mx = rng
-            if mn is None or mx is None:
-                return True
-            if isinstance(mn, str):
-                mn, mx = cls._ts_bound(mn), cls._ts_bound(mx)
-                lo, hi = cls._ts_bound(lo), cls._ts_bound(hi)
-            if hi is not None and mn > hi:
-                return False
-            if lo is not None and mx < lo:
-                return False
-            return True
-        except (TypeError, ValueError):
-            return True
-
     def _file_hints_overlap(self, entry: dict | None, hints: dict) -> bool:
         """True unless some hinted column's recorded range provably
-        excludes the whole query slab."""
-        if not entry:
-            return True
+        excludes the whole query slab.  cluster_by admits only numeric
+        and temporal columns, so a string range is an ISO timestamp or
+        date, and its hint bounds compare as timestamps."""
         for c, (lo, hi) in hints.items():
-            rng = entry.get(c)
-            if rng is not None and not self._col_range_overlaps(rng, lo, hi):
+            rng = (entry or {}).get(c)
+            if rng and isinstance(rng[0], str):
+                try:
+                    lo, hi = self._ts_bound(lo), self._ts_bound(hi)
+                except (TypeError, ValueError, AttributeError):
+                    continue
+            if not self._range_overlaps(rng, lo, hi):
                 return False
         return True
 
@@ -1780,59 +1803,25 @@ class LocalSnapshotSink(SnapshotSink):
         return hashlib.sha256(names.encode()).hexdigest()[:16]
 
     def _collect_bucket_rows(
-        self, spark: SparkSession, written: dict[str, list[str]]
+        self, spark: SparkSession, written: dict[str, list[str]], fstats: dict
     ) -> dict[str, dict]:
-        """Per-bucket {rows, dead, sig} for just-written base files.  Row
-        counts come from parquet footers (driver-side, free); tombstone
-        counts need ONE boolean-pruned job, run only over files whose
-        footer says they MAY hold tombstones (usually none)."""
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _probe(f: str):
-            # ONE footer read for both numbers (num_rows + the may-hold-
-            # tombstones flag); pyarrow releases the GIL for the parse,
-            # so a thread pool turns O(files) serial driver reads into a
-            # short parallel burst
-            try:
-                md = pq.ParquetFile(f).metadata
-            except Exception:
-                return f, None, True
-            names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            di = names.get(INTERNAL_DELETED)
-            dead = di is None
-            if di is not None:
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(di).statistics
-                    if st is None or st.max is None or st.max:
-                        dead = True
-                        break
-            return f, md.num_rows, dead
-
-        all_files = [f for fs in written.values() for f in fs]
-        if len(all_files) > 8:
-            with ThreadPoolExecutor(16) as ex:
-                probed = {f: (n, d) for f, n, d in ex.map(_probe, all_files)}
-        else:
-            probed = {f: (n, d) for f, n, d in map(_probe, all_files)}
+        """Per-bucket {rows, dead, sig} for just-written base files, from
+        their footer statistics ``fstats`` (see :meth:`_footer_burst`).  A
+        bucket with an unreadable footer gets no entry.  Tombstone counts
+        need ONE boolean-pruned job, run only over files whose footer
+        statistics say they MAY hold tombstones (usually none)."""
         rows_by_bucket: dict[str, int] = {}
         may_dead: list[str] = []
         file_bucket: dict[str, str] = {}
         for b, fs in written.items():
-            total = 0
+            if any(fstats.get(f) is None for f in fs):
+                continue
+            rows_by_bucket[b] = sum(fstats[f][0] for f in fs)
             for f in fs:
-                n, d = probed[f]
-                if n is None:
-                    total = -1
-                    break
-                total += n
                 file_bucket[f] = b
-                if d:
+                if fstats[f][1]:
                     may_dead.append(f)
-            if total >= 0:
-                rows_by_bucket[b] = total
         dead_by_bucket: dict[str, int] = {}
-        may_dead = [f for f in may_dead if file_bucket[f] in rows_by_bucket]
         if may_dead:
             from urllib.parse import unquote, urlparse
 
@@ -1964,10 +1953,11 @@ class LocalSnapshotSink(SnapshotSink):
             blo = bhi = None
             if ok:
                 for f in bfiles:
-                    fmn, fmx, may_dead = self._footer_ts_dead(f)
-                    if fmn is None or fmx is None or may_dead:
+                    fs = self._footer_stats(f, ["ts"])
+                    if fs is None or fs[1] or fs[2]["ts"] is None:
                         ok = False
                         break
+                    fmn, fmx = fs[2]["ts"]
                     blo = fmn if blo is None else min(blo, fmn)
                     bhi = fmx if bhi is None else max(bhi, fmx)
             if ok:
@@ -2490,10 +2480,11 @@ class LocalSnapshotSink(SnapshotSink):
             # they ride the manifests the chain walk already loaded);
             # footer read only for files with no recorded entry
             def _keep(f: str) -> bool:
-                entry = chain_stats.get(f)
-                if entry is not None:
-                    return self._entry_ts_overlaps(entry, lo, hi)
-                return self._file_ts_overlaps(f, lo, hi)
+                rng = chain_stats.get(f)
+                if rng is None:
+                    fs = self._footer_stats(f, ["ts"])
+                    rng = fs and fs[2]["ts"]
+                return self._range_overlaps(rng, lo, hi)
 
             files = [f for f in files if _keep(f)]
         schema = T.StructType.fromJson(self.manifest(to_snapshot)["schema"])
@@ -3360,13 +3351,58 @@ class LocalSnapshotSink(SnapshotSink):
         file as a candidate (selection must over-approximate, never
         miss)."""
         cur = self.manifest()
-        horizon = self._purge_horizon(cur, before)
+        return self._targeted_purge(
+            spark, cur, self._purge_horizon(cur, before),
+            "purge_candidate_buckets", "purge_tombstones_before",
+        )
+
+    def purge_expired(self, spark: SparkSession, before=None) -> dict[str, Any]:
+        """Targeted physical row-TTL purge: rewrite ONLY the buckets whose
+        files can hold a row older than the horizon (``before`` or the
+        sink's ``row_ttl_seconds`` against the high watermark), selected
+        from PARQUET FOOTER ts statistics -- driver-side, no Spark job and
+        no data scan (the same selection as :meth:`purge_tombstones`, for
+        live rows).  A 100 TB table whose old history is concentrated in
+        a few cold buckets rewrites those, not the table."""
+        cur = self.manifest()
+        return self._targeted_purge(
+            spark, cur, self._ttl_horizon(cur, before),
+            "expire_candidate_buckets", "expire_rows_before",
+        )
+
+    def _targeted_purge(
+        self, spark: SparkSession, cur: dict, horizon, counter: str, fold_arg: str
+    ) -> dict[str, Any]:
+        """The candidate-bucket selection both purges share: fold (with
+        ``compact(**{fold_arg: horizon})``) only the buckets holding a
+        file whose footer statistics admit a row with ts < ``horizon`` --
+        for ``purge_tombstones_before``, a tombstone row.  Any missing or
+        unreadable statistic selects the file; flat deltas that qualify
+        widen the fold to every bucket."""
+        empty = {
+            "snapshot_id": cur["snapshot_id"],
+            "compacted_buckets": 0,
+            counter: 0,
+        }
         if horizon is None:
-            return {
-                "snapshot_id": cur["snapshot_id"],
-                "compacted_buckets": 0,
-                "purge_candidate_buckets": 0,
-            }
+            return empty
+        try:
+            h = self._ts_bound(horizon)
+        except ValueError:
+            h = None
+        tombstones = fold_arg == "purge_tombstones_before"
+
+        def _may_hold(f: str) -> bool:
+            fs = self._footer_stats(f, ["ts"])
+            if fs is None or h is None:
+                return True
+            if tombstones and not fs[1]:
+                return False
+            try:
+                return fs[2]["ts"] is None or fs[2]["ts"][0] < h
+            except TypeError:
+                return True
+
         base_map = self._resolve_map(cur["files"])
         delta_map = self._resolve_map(cur.get("deltas", {}))
         todo = sorted(
@@ -3374,27 +3410,16 @@ class LocalSnapshotSink(SnapshotSink):
                 b
                 for m in (base_map, delta_map)
                 for b, fs in m.items()
-                if b != _FLAT
-                and any(self._file_may_hold_old_tombstone(f, horizon) for f in fs)
+                if b != _FLAT and any(map(_may_hold, fs))
             },
             key=int,
         ) or None
-        if todo is None and delta_map.get(_FLAT):
-            if any(
-                self._file_may_hold_old_tombstone(f, horizon)
-                for f in delta_map[_FLAT]
-            ):
-                todo = []  # full fold below (flat deltas widen it anyway)
+        if todo is None and any(map(_may_hold, delta_map.get(_FLAT, []))):
+            todo = []  # full fold (flat deltas widen it anyway)
         if todo is None:
-            return {
-                "snapshot_id": cur["snapshot_id"],
-                "compacted_buckets": 0,
-                "purge_candidate_buckets": 0,
-            }
-        res = self.compact(
-            spark, buckets=todo or None, purge_tombstones_before=horizon
-        )
-        res["purge_candidate_buckets"] = len(todo) or len(base_map)
+            return empty
+        res = self.compact(spark, buckets=todo or None, **{fold_arg: horizon})
+        res[counter] = len(todo) or len(base_map)
         return res
 
     @staticmethod
@@ -3410,167 +3435,6 @@ class LocalSnapshotSink(SnapshotSink):
         if t.tzinfo is not None:
             t = t.astimezone(tz=None).replace(tzinfo=None)
         return t
-
-    @staticmethod
-    def _footer_ts_dead(path: str):
-        """One footer read -> (ts_min, ts_max, may_have_tombstones) with
-        None meaning unknown.  Timestamps come back naive-local; boolean
-        and timestamp parquet statistics are never truncated, so these
-        bounds are exact when present."""
-        try:
-            import pyarrow.parquet as pq
-
-            md = pq.ParquetFile(path).metadata
-            names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            di, ti = names.get(INTERNAL_DELETED), names.get("ts")
-            ts_min = ts_max = None
-            may_dead = True if di is None else False
-            ts_known = ti is not None
-            for rg in range(md.num_row_groups):
-                if di is not None and not may_dead:
-                    st = md.row_group(rg).column(di).statistics
-                    if st is None or st.max is None or st.max:
-                        may_dead = True
-                if ts_known:
-                    st = md.row_group(rg).column(ti).statistics
-                    if st is None or st.min is None or st.max is None:
-                        ts_known = False
-                    else:
-                        mn, mx = st.min, st.max
-                        if mn.tzinfo is not None:
-                            mn = mn.astimezone(tz=None).replace(tzinfo=None)
-                        if mx.tzinfo is not None:
-                            mx = mx.astimezone(tz=None).replace(tzinfo=None)
-                        ts_min = mn if ts_min is None else min(ts_min, mn)
-                        ts_max = mx if ts_max is None else max(ts_max, mx)
-            if not ts_known:
-                ts_min = ts_max = None
-            return ts_min, ts_max, may_dead
-        except Exception:
-            return None, None, True
-
-    def purge_expired(self, spark: SparkSession, before=None) -> dict[str, Any]:
-        """Targeted physical row-TTL purge: rewrite ONLY the buckets whose
-        files can hold a row older than the horizon (``before`` or the
-        sink's ``row_ttl_seconds`` against the high watermark), selected
-        from PARQUET FOOTER ts statistics -- driver-side, no Spark job and
-        no data scan (the same selection shape as
-        :meth:`purge_tombstones`, for live rows).  A 100 TB table whose
-        old history is concentrated in a few cold buckets rewrites those,
-        not the table."""
-        cur = self.manifest()
-        horizon = self._ttl_horizon(cur, before)
-        empty = {
-            "snapshot_id": cur["snapshot_id"],
-            "compacted_buckets": 0,
-            "expire_candidate_buckets": 0,
-        }
-        if horizon is None:
-            return empty
-        base_map = self._resolve_map(cur["files"])
-        delta_map = self._resolve_map(cur.get("deltas", {}))
-        todo = sorted(
-            {
-                b
-                for m in (base_map, delta_map)
-                for b, fs in m.items()
-                if b != _FLAT
-                and any(self._file_may_hold_expired(f, horizon) for f in fs)
-            },
-            key=int,
-        ) or None
-        if todo is None and delta_map.get(_FLAT):
-            if any(
-                self._file_may_hold_expired(f, horizon) for f in delta_map[_FLAT]
-            ):
-                todo = []  # full fold (flat deltas widen it anyway)
-        if todo is None:
-            return empty
-        res = self.compact(spark, buckets=todo or None, expire_rows_before=horizon)
-        res["expire_candidate_buckets"] = len(todo) or len(base_map)
-        return res
-
-    @classmethod
-    def _file_may_hold_expired(cls, path: str, horizon: str) -> bool:
-        """Footer-stats check: can ``path`` contain ANY row with
-        ts < horizon?  Conservative on missing statistics."""
-        try:
-            h = cls._ts_bound(horizon)
-        except ValueError:
-            return True
-        ts_min, _ts_max, _may_dead = cls._footer_ts_dead(path)
-        if ts_min is None or h is None:
-            return True
-        try:
-            return ts_min < h
-        except TypeError:
-            return True
-
-    @classmethod
-    def _file_may_hold_old_tombstone(cls, path: str, horizon: str) -> bool:
-        """Footer-stats check: can ``path`` contain a row with
-        _deleted=true AND ts < horizon?  Conservative: any missing or
-        unreadable statistic answers yes."""
-        try:
-            h = cls._ts_bound(horizon)
-        except ValueError:
-            return True
-        ts_min, _ts_max, may_dead = cls._footer_ts_dead(path)
-        if not may_dead:
-            return False
-        if ts_min is None or h is None:
-            return True
-        try:
-            return ts_min < h
-        except TypeError:
-            return True
-
-    @classmethod
-    def _entry_ts_overlaps(cls, entry: list, lo, hi) -> bool:
-        """Overlap test against a manifest-recorded [iso_min, iso_max,
-        dead] entry; malformed entries keep the file."""
-        try:
-            ts_min, ts_max = cls._ts_bound(entry[0]), cls._ts_bound(entry[1])
-            if hi is not None and ts_min > hi:
-                return False
-            if lo is not None and ts_max < lo:
-                return False
-            return True
-        except (TypeError, ValueError, IndexError):
-            return True
-
-    @classmethod
-    def _harvest_ts_stats(cls, files: list[str]) -> dict[str, list]:
-        """Per-file [iso_min_ts, iso_max_ts, has_tombstones] from the
-        just-written files' parquet footers -- O(batch files) driver-side
-        footer reads at commit time (at object-store scale these stats
-        come back from the writer, same O(batch) shape as the size
-        bookkeeping).  Files whose footers lack ts statistics simply get
-        no entry (readers fall back to a footer probe, then to keeping
-        the file)."""
-        out: dict[str, list] = {}
-        for f in files:
-            mn, mx, dead = cls._footer_ts_dead(f)
-            if mn is None or mx is None:
-                continue
-            out[f] = [mn.isoformat(sep=" "), mx.isoformat(sep=" "), bool(dead)]
-        return out
-
-    @classmethod
-    def _file_ts_overlaps(cls, path: str, lo, hi) -> bool:
-        """Can ``path`` hold a row with lo <= ts <= hi?  Unknown stats
-        keep the file."""
-        ts_min, ts_max, _ = cls._footer_ts_dead(path)
-        if ts_min is None or ts_max is None:
-            return True
-        try:
-            if hi is not None and ts_min > hi:
-                return False
-            if lo is not None and ts_max < lo:
-                return False
-        except TypeError:
-            return True
-        return True
 
     # -------------------------------------------------------------- merging
     # Concurrency: commits use atomic-mkdir snapshot-id claims plus an
@@ -4081,7 +3945,11 @@ class LocalSnapshotSink(SnapshotSink):
         # HERE (not at commit time) so the fast path below can take the
         # batch watermark from the footers instead of re-aggregating ts
         # in the stats job; they ride into the manifest as ts_stats_new
-        ts_stats_new = self._harvest_ts_stats(change_files or written)
+        fstats = self._footer_burst(change_files or written, ["ts"])
+        ts_stats_new = {
+            f: [*e["ts"], fstats[f][1]]
+            for f, e in self._json_ranges(fstats, ["ts"]).items()
+        }
         if self.mode == "mor" and written and (self.collect_metrics or not use_observe):
             # per-src-partition lineage counts (+ in fast mode: the batch
             # totals, deletes, and watermark).  MoR-only: CoW rewrites mix
@@ -4474,9 +4342,11 @@ class LocalSnapshotSink(SnapshotSink):
         only the new files -- one metadata commit per call, nothing
         when the directory is quiet.
 
-        ``collect_stats=True`` additionally runs one column-pruned job
-        recording each imported file's leading-key [min, max] into the
-        table's ``key_stats`` -- point lookups then PRUNE imported
+        ``collect_stats=True`` additionally records each imported file's
+        leading-key [min, max] from its footer statistics into the
+        table's ``key_stats`` (no Spark job; a file written without key
+        statistics gets no entry and joins every lookup's scan) -- point
+        lookups then PRUNE imported
         files before any compaction localizes them (without it, every
         flat delta joins every lookup's scan until the next fold; with
         a 10 TB adoption that is the difference between a point read
@@ -4620,13 +4490,18 @@ class LocalSnapshotSink(SnapshotSink):
         imported_bytes = sum(os.path.getsize(f) for f in files)
         # per-commit event-time stats (footer reads, outside the lock):
         # windowed incremental reads prune imported files like any others
-        ts_stats_new = self._harvest_ts_stats(files)
-        # optional per-file leading-key ranges: one column-pruned job so
-        # point lookups prune imported files BEFORE compaction localizes
-        # them (entries are keyed by immutable paths -- never stale-wrong)
-        new_key_stats = (
-            self._collect_key_stats(spark, files) if collect_stats else {}
-        )
+        # and, with collect_stats, per-file leading-key ranges from the
+        # same footer statistics, so point lookups prune imported files
+        # BEFORE compaction localizes them
+        kcol = self._stats_key(probe) if collect_stats else []
+        fstats = self._footer_burst(files, ["ts", *kcol])
+        ts_stats_new = {
+            f: [*e["ts"], fstats[f][1]]
+            for f, e in self._json_ranges(fstats, ["ts"]).items()
+        }
+        new_key_stats = {
+            f: e[kcol[0]] for f, e in self._json_ranges(fstats, kcol).items()
+        }
 
         with self._commit_lock():
             latest = self.manifest()
@@ -4952,8 +4827,9 @@ class LocalSnapshotSink(SnapshotSink):
         shuffle), the cells bit-interleave into a Morton key, and each
         bucket's winners are range-clustered + locally sorted on it, so
         output files cover disjoint HYPER-RECTANGLES of the clustered
-        space.  Per-file min/max for the cluster columns (exact parquet
-        footer stats, O(files) driver reads) land in the manifest; slab
+        space.  Per-file min/max for the cluster columns (exact footer
+        statistics, O(files) driver reads, no Spark job) land in the
+        manifest; slab
         reads (``read(range_hints=...)``) then skip files on EVERY
         clustered dimension, not just the leading key.  Costs one extra
         Exchange over plain compaction (the winners-only range pass --
@@ -4992,7 +4868,8 @@ class LocalSnapshotSink(SnapshotSink):
 
         ``sort`` (default: the sink's ``sort_on_compact``) range-clusters
         each compacted bucket's output on the table key and records
-        per-file min/max leading-key stats in the manifest -- point
+        per-file min/max leading-key stats, read from the written files'
+        footer statistics (no Spark job), in the manifest -- point
         lookups then skip files, not just buckets, and row groups carry
         tight min/max.  Sorted mode sizes files via the range sampler
         (the key-hash salt bin-packing applies to hash mode only).
@@ -5232,41 +5109,38 @@ class LocalSnapshotSink(SnapshotSink):
                 num_buckets=int(cur["num_buckets"]),
                 bloom=bloom,
             )
-        # per-file key ranges for the files this fold produced (one
-        # column-pruned O(written) job); entries for the files this fold
-        # REPLACES are trimmed below under the lock.  The whole stats
-        # group stays under the claim guard: a failure here must reclaim
-        # the fold's claim like a failure of the fold itself.
+        # per-file statistics of the files this fold produced, from ONE
+        # footer burst over every file of the buckets it touched (no Spark
+        # job): leading-key ranges (sorted folds), cluster-column ranges
+        # (z-order) and per-bucket row/tombstone counts for metadata-only
+        # count().  Entries for the files this fold REPLACES are trimmed
+        # below under the lock.  The whole stats group stays under the
+        # claim guard: a failure here must reclaim the fold's claim like a
+        # failure of the fold itself.
         with self._claim_guard(sid):
-            new_key_stats = (
-                self._collect_key_stats(
-                    spark, [f for fs in written.values() for f in fs]
-                )
-                if sort_eff
-                else {}
+            bucket_files = (
+                {
+                    b: kept_map.get(b, []) + list(written.get(b, []))
+                    for b in set(written) | set(kept_map)
+                }
+                if kept_map
+                else written
             )
-            # per-file cluster-column ranges from the written files'
-            # footers (driver-side, O(written) footer reads, no job)
-            new_col_stats = (
-                self._harvest_col_stats(
-                    [f for fs in written.values() for f in fs], list(cluster_by)
-                )
-                if cluster_by
-                else {}
+            kcol = self._stats_key(schema) if sort_eff else []
+            cols = list(dict.fromkeys([*kcol, *(cluster_by or [])]))
+            fstats = self._footer_burst(
+                [f for fs in bucket_files.values() for f in fs], cols
             )
-            # per-bucket row/tombstone counts for metadata-only count():
-            # footer rows are free, the tombstone job runs only over files
-            # whose footer admits tombstones
+            out_files = [f for fs in written.values() for f in fs]
+            new_key_stats = {
+                f: e[kcol[0]]
+                for f, e in self._json_ranges(fstats, kcol, out_files).items()
+            }
+            new_col_stats = self._json_ranges(
+                fstats, list(cluster_by or []), out_files
+            )
             new_bucket_rows = self._collect_bucket_rows(
-                spark,
-                (
-                    {
-                        b: kept_map.get(b, []) + list(written.get(b, []))
-                        for b in set(written) | set(kept_map)
-                    }
-                    if kept_map
-                    else written
-                ),
+                spark, bucket_files, fstats
             )
         consumed = set(delta_files)
         with self._conflict_trash(), self._commit_lock():
@@ -5449,13 +5323,16 @@ class LocalSnapshotSink(SnapshotSink):
                     schema,
                     sort_output=sort_eff,
                 )
-            new_key_stats = (
-                self._collect_key_stats(
-                    spark, [f for fs in written.values() for f in fs]
-                )
-                if sort_eff and written
-                else {}
-            )
+            kcol = self._stats_key(schema) if sort_eff else []
+            new_key_stats = {
+                f: e[kcol[0]]
+                for f, e in self._json_ranges(
+                    self._footer_burst(
+                        [f for fs in written.values() for f in fs], kcol
+                    ),
+                    kcol,
+                ).items()
+            }
         consumed = set(all_files)
         with self._conflict_trash(), self._commit_lock():
             latest = self.manifest()

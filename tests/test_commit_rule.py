@@ -1,9 +1,11 @@
 """One commit rule: every snapshot inherits from its parent in one place.
 
 A child manifest carries every top-level key of its parent except
-``snapshot_id``, ``parent`` and the per-commit keys ``stats``,
-``change_files`` and ``ts_stats_new``; every top-level ``ref:`` value is
-a live payload that expiry keeps, fsck resolves and a clone re-packs.
+``snapshot_id``, ``parent``, the per-commit keys ``stats``,
+``change_files`` and ``ts_stats_new``, and the retired ``key_blooms``
+(``_RETIRED_KEYS``, dropped so expiry frees its blob); every top-level
+``ref:`` value is a live payload that expiry keeps, fsck resolves and a
+clone re-packs.
 These tests plant an unregistered key into a head manifest and drive
 each commit shape over it, check that view refreshes commit once and
 keep their definitions through expiry, and stop modules outside the

@@ -17,6 +17,7 @@ from __future__ import annotations
 import datetime as dt
 import inspect
 import json
+import os
 
 import pytest
 
@@ -414,8 +415,9 @@ def test_no_bloom_outside_bloom_folds(spark, tmp_path):
 
 def test_table_recording_removed_key_blooms_still_opens(spark, tmp_path):
     """Tables whose manifest recorded the removed ``key_blooms`` sidecar
-    still open, look up, stay fsck-clean and expire: the key is carried
-    as an opaque blob ref and nothing reads it."""
+    still open, look up, stay fsck-clean and expire: nothing reads the
+    key, the first commit on top drops it, and expiry then deletes its
+    blob."""
     path = str(tmp_path / "t")
     sink = LocalSnapshotSink(path, num_buckets=2, compact_every=10**9)
     sink.merge(_batch(spark, _key_rows(0, 100, 1)), "b-1")
@@ -437,9 +439,13 @@ def test_table_recording_removed_key_blooms_still_opens(spark, tmp_path):
         assert again.lookup(spark, k).count() == 1
         assert again.read(spark, key_eq=k).count() == 1
     again.merge(_batch(spark, _key_rows(0, 100, 2)), "b-2")
+    assert "key_blooms" not in again.manifest()
     again.compact(spark, bloom=True)
     assert again.lookup(spark, "c00042").select("text").first()[0] == "v2-42"
+    blob = os.path.join(again._lists_dir(), m["key_blooms"][len("ref:"):])
+    assert os.path.exists(blob)
     again.expire_snapshots(keep_last=1, min_age_seconds=0)
+    assert not os.path.exists(blob)
     assert again.read(spark).count() == 100
     report = again.fsck(deep=True)
     assert report["ok"], report

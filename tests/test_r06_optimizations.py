@@ -88,7 +88,7 @@ def test_fast_path_watermark_footer_equals_aggregate(spark, tmp_path, monkeypatc
         str(tmp_path / "agg"), num_buckets=4, cluster_deltas=False
     )
     monkeypatch.setattr(
-        LocalSnapshotSink, "_harvest_ts_stats", classmethod(lambda cls, files: {})
+        LocalSnapshotSink, "_footer_stats", staticmethod(lambda path, cols=(): None)
     )
     sink2.merge(_batch(spark), "b1")
     hwm_agg = sink2.manifest()["high_watermark"]

@@ -76,13 +76,16 @@ def test_ts_window_skips_files_before_scan(spark, tmp_path):
 
 def test_ts_window_conservative_without_stats(spark, tmp_path, monkeypatch):
     """Unknown footer stats must keep the file (pruning over-approximates,
-    never drops data)."""
-    sink, base = _seed_days(spark, tmp_path)
+    never drops data).  With every footer unreadable, the commits record
+    no ts stats and the window read's footer fallback learns nothing."""
     monkeypatch.setattr(
-        LocalSnapshotSink, "_footer_ts_dead", staticmethod(lambda path: (None, None, True))
+        LocalSnapshotSink, "_footer_stats", staticmethod(lambda path, cols=(): None)
     )
+    sink, base = _seed_days(spark, tmp_path)
+    assert not any(m.get("ts_stats_new") for m in map(sink.manifest, sink.snapshots()))
     df = sink.read_changes(spark, base, ts_min=_ts(2), ts_max=_ts(2, 23))
     # every file scanned, but the residual filter still yields exact rows
+    assert set(df.inputFiles()) == set(sink.read_changes(spark, base).inputFiles())
     assert {r["conv_id"] for r in df.collect()} == {"c2"}
 
 
@@ -123,10 +126,10 @@ def test_window_pruning_uses_manifest_stats_not_footers(spark, tmp_path, monkeyp
     candidate file on an object store."""
     sink, base = _seed_days(spark, tmp_path)
 
-    def _boom(path):
+    def _boom(path, cols=()):
         raise AssertionError(f"footer opened for {path}")
 
-    monkeypatch.setattr(LocalSnapshotSink, "_footer_ts_dead", staticmethod(_boom))
+    monkeypatch.setattr(LocalSnapshotSink, "_footer_stats", staticmethod(_boom))
     df = sink.read_changes(spark, base, ts_min=_ts(2), ts_max=_ts(2, 23))
     files = df.inputFiles()
     assert {r["conv_id"] for r in df.collect()} == {"c2"}
