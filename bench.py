@@ -179,15 +179,6 @@ def run_bench(cores: int, log_dir: str | None = None, json_out: str | None = Non
             # pairs; per-column conditional aggregates in compaction and
             # the final read) on the same changelog
             merge_mode=os.environ.get("FETCHEZ_MERGE_MODE") or None,
-            # FETCHEZ_DV_FRACTION=<0..1>: live-fraction-aware periodic
-            # folds (compact min_dead_fraction) -- base files still mostly
-            # live are kept verbatim instead of rewritten; the A/B vs the
-            # full fold is tools/compact_dv_ab.py
-            compact_min_dead_fraction=(
-                float(os.environ["FETCHEZ_DV_FRACTION"])
-                if os.environ.get("FETCHEZ_DV_FRACTION")
-                else None
-            ),
         )
         lineage = LineageLog(os.path.join(work, "lineage"))
         from fetchez_spark.plans import ShuffleMetrics
@@ -198,10 +189,7 @@ def run_bench(cores: int, log_dir: str | None = None, json_out: str | None = Non
         replay_batches(spark, chunks, sink, lineage=lineage)
         merge_loop_sec = time.monotonic() - t0  # merges + periodic compacts
         snap1 = sm.snapshot()
-        # no-op when the periodic compact just ran; under the DV config the
-        # closing fold stays live-fraction-aware too (a full fold here
-        # would re-move every kept byte inside the timed window)
-        sink.compact(spark, min_dead_fraction=sink.compact_min_dead_fraction)
+        sink.compact(spark)  # no-op when the periodic compact just ran
         replay_sec = time.monotonic() - t0
         snap2 = sm.snapshot()
         rate = n_events / replay_sec

@@ -148,7 +148,7 @@ def profile_replay(events: int | None, cores: int, batches: int) -> dict:
         batch_metrics = replay_batches(spark, chunks, sink, lineage=lineage)
         merge_loop_sec = time.monotonic() - t0
         t1 = time.monotonic()
-        sink.compact(spark, min_dead_fraction=sink.compact_min_dead_fraction)
+        sink.compact(spark)
         closing_compact_sec = time.monotonic() - t1
         replay_sec = time.monotonic() - t0
         snap1 = sm.snapshot()

@@ -162,13 +162,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--min-bucket-bytes", type=int, default=None,
                    help="size-aware compaction: fold only buckets whose "
                         "delta bytes reach this threshold")
-    p.add_argument("--min-dead-fraction", type=float, default=None,
-                   metavar="0..1",
-                   help="live-fraction-aware fold: keep base files whose "
-                        "estimated dead fraction stays below this threshold "
-                        "verbatim instead of rewriting them (the deletion-"
-                        "vector analog; buckets keeping superseded rows stay "
-                        "multi-version until a full fold)")
     p.add_argument("--target-file-bytes", type=int, default=None,
                    help="bin-pack compacted buckets toward this file size")
     p.add_argument("--sort", action="store_true",
@@ -977,7 +970,6 @@ def main(argv: list[str] | None = None) -> int:
                         args.cluster_by.split(",") if args.cluster_by else None
                     ),
                     bloom=args.bloom,
-                    min_dead_fraction=args.min_dead_fraction,
                 )
             if args.purge_tombstones:
                 out["purge_tombstones"] = sink.purge_tombstones(

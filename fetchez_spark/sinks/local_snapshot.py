@@ -389,7 +389,6 @@ class LocalSnapshotSink(SnapshotSink):
         snapshot_keep_last: int | None = None,
         conflict_retries: int = 0,
         merge_mode: str | None = None,
-        compact_min_dead_fraction: float | None = None,
         async_compact: bool = True,
     ) -> None:
         if mode not in ("mor", "cow"):
@@ -479,8 +478,6 @@ class LocalSnapshotSink(SnapshotSink):
         # compaction, one file per bucket).
         self.auto_compact_bytes = auto_compact_bytes
         self.compact_min_bucket_bytes = compact_min_bucket_bytes
-        # live-fraction-aware auto-compaction (see compact min_dead_fraction)
-        self.compact_min_dead_fraction = compact_min_dead_fraction
         # async_compact: merge-triggered maintenance folds run on a
         # single background thread so the NEXT batches' appends overlap
         # the fold (guide 2.6: independent jobs back-fill the fold's
@@ -648,15 +645,6 @@ class LocalSnapshotSink(SnapshotSink):
                 "bootstrap)"
             )
         self.merge_mode = recorded_mm
-        if self.merge_mode == "partial" and self.compact_min_dead_fraction is not None:
-            # fail at CONSTRUCTION, not at the first auto-compaction N
-            # batches into a stream (compact() would raise the same
-            # incompatibility mid-merge and kill the streaming query)
-            raise ValueError(
-                "compact_min_dead_fraction requires full-row LWW "
-                "(merge_mode='lww'): per-column folds have no per-row "
-                "dead-ness"
-            )
         # adopt recorded table properties for every knob this constructor
         # left at its default -- a fresh-session open (CLI, cron
         # maintenance, a plain reader of a TTL table) sees the table's own
@@ -2072,9 +2060,10 @@ class LocalSnapshotSink(SnapshotSink):
         # post-filter them through the reduction)
         flat_deltas = self._resolve_list(delta_map.get(_FLAT, []))
         cstats = self.col_stats(m) if range_hints else {}
-        # multi-version buckets (compact(min_dead_fraction=...) kept base
-        # files with superseded rows): slab pruning is unsound there --
-        # the winner and a stale in-slab row can live in different files
+        # multi-version buckets (recorded by the retired live-fraction
+        # fold: base files that still hold superseded rows): slab pruning
+        # is unsound there -- the winner and a stale in-slab row can live
+        # in different files
         mvset = {str(x) for x in m.get("mv_buckets", [])}
         base = []
         for b in keys:
@@ -2142,8 +2131,9 @@ class LocalSnapshotSink(SnapshotSink):
             # merge-on-read: the same per-key reduction the writer would
             # have applied at compaction time (full-row LWW, or the
             # per-column partial fold on merge_mode='partial' tables).
-            # Multi-version buckets (compact(min_dead_fraction=...) kept
-            # superseded base rows) need it even with zero pending deltas.
+            # Multi-version buckets (recorded by the retired live-fraction
+            # fold: superseded base rows) need it even with zero pending
+            # deltas.
             df = self._reduce(df)
         if not include_deleted:
             df = df.filter(~F.col(INTERNAL_DELETED))
@@ -2855,12 +2845,14 @@ class LocalSnapshotSink(SnapshotSink):
             (f.dataType for f in schema.fields if f.name == self.key[0]), None
         )
         lit = F.lit(key_value).cast(key_dt) if key_dt is not None else F.lit(key_value)
-        # python-side Murmur3 match is not worth reimplementing; compute the
-        # bucket with a 1-row Spark job (cheap, no scan)
+        # the bucket is a constant expression: Catalyst's constant folding
+        # evaluates Spark's own Murmur3 into a literal of the optimized
+        # plan, so no job runs to learn it
         b = (
             spark.range(1)
-            .select(F.pmod(F.hash(lit), F.lit(m["num_buckets"])).alias("b"))
-            .first()["b"]
+            .select(F.pmod(F.hash(lit), F.lit(m["num_buckets"])))
+            ._jdf.queryExecution().optimizedPlan()
+            .projectList().apply(0).child().value()
         )
         return self.read(spark, buckets=[int(b)], key_eq=key_value)
 
@@ -4271,11 +4263,7 @@ class LocalSnapshotSink(SnapshotSink):
                     metrics["compact_started"] = True
                 else:
                     try:
-                        res = self.compact(
-                            spark,
-                            min_bucket_bytes=min_b,
-                            min_dead_fraction=self.compact_min_dead_fraction,
-                        )
+                        res = self.compact(spark, min_bucket_bytes=min_b)
                         self._note_compact_result(res, size_trigger, total_db, metrics)
                     except ConcurrentWriteConflict:
                         # another writer's fold won the race; the trigger
@@ -4621,74 +4609,6 @@ class LocalSnapshotSink(SnapshotSink):
             out[b] = tot
         return out
 
-    def _partition_live_bases(
-        self,
-        spark: SparkSession,
-        cur: dict,
-        schema: T.StructType,
-        todo: list[str],
-        base_map: dict[str, list[str]],
-        delta_files: list[str],
-        threshold: float,
-    ) -> tuple[dict[str, list[str]], set[str]]:
-        """Live-fraction estimate for ``compact(min_dead_fraction=...)``:
-        per candidate base file, the fraction of rows whose key also
-        appears in the pending delta set -- ONE column-pruned key pass
-        over deltas (distinct keys) plus one over the candidate bases
-        (keys + ``input_file_name``), joined on the key.  Only key bytes
-        move; the decision this feeds is a heuristic file selection, so
-        an over-estimate merely rewrites a file the fold could have kept
-        (correctness never depends on it).  Returns ({bucket: files kept
-        verbatim}, {buckets left multi-version -- kept files with >=1
-        superseded row})."""
-        from urllib.parse import unquote
-
-        candidates = {b: list(base_map.get(b, [])) for b in todo}
-        all_base = [f for fs in candidates.values() for f in fs]
-        if not all_base or not delta_files:
-            return {}, set()
-        imported = self._imported_set(cur)
-        key = list(self.key)
-        dkeys = (
-            self._read_files(spark, delta_files, schema, imported=imported)
-            .select(*key)
-            .dropDuplicates()
-            .withColumn("_hit", F.lit(1))
-        )
-        per_file = (
-            self._read_files(spark, all_base, schema, imported=imported)
-            .select(*key)
-            .withColumn("_f", F.input_file_name())
-            .join(dkeys, on=key, how="left")
-            .groupBy("_f")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("_dead"),
-            )
-            .collect()  # bounded: one row per candidate base file
-        )
-        stats: dict[str, tuple[int, int]] = {}
-        by_abs = {os.path.abspath(f): f for f in all_base}
-        for r in per_file:
-            p = unquote(r["_f"])
-            if p.startswith("file:"):
-                p = p[len("file:"):]
-                while p.startswith("//"):
-                    p = p[1:]
-            f = by_abs.get(os.path.abspath(p))
-            if f is not None:
-                stats[f] = (int(r["_n"]), int(r["_dead"] or 0))
-        kept: dict[str, list[str]] = {}
-        mv: set[str] = set()
-        for b, fs in candidates.items():
-            for f in fs:
-                n, dead = stats.get(f, (0, 1))  # unseen/empty: rewrite
-                if n > 0 and dead / n < threshold:
-                    kept.setdefault(b, []).append(f)
-                    if dead > 0:
-                        mv.add(str(b))
-        return kept, mv
-
     # ---------------------------------------------------- async maintenance
     def _launch_compact(
         self, spark: SparkSession, min_bucket_bytes, size_trigger, total_db=0
@@ -4704,11 +4624,7 @@ class LocalSnapshotSink(SnapshotSink):
             self._compact_tid = threading.get_ident()
 
         def _run() -> dict[str, Any]:
-            return self.compact(
-                spark,
-                min_bucket_bytes=min_bucket_bytes,
-                min_dead_fraction=self.compact_min_dead_fraction,
-            )
+            return self.compact(spark, min_bucket_bytes=min_bucket_bytes)
 
         with self._compact_mu:
             if self._compact_future is not None:
@@ -4791,26 +4707,9 @@ class LocalSnapshotSink(SnapshotSink):
         expire_rows_before=None,
         cluster_by: list[str] | None = None,
         bloom: bool = False,
-        min_dead_fraction: float | None = None,
     ) -> dict[str, Any]:
         """Fold delta files into base files for the given (or all) buckets.
-
-        ``min_dead_fraction`` (0..1): live-fraction-aware major fold --
-        the deletion-vector/anti-join alternative to full-bucket rewrite.
-        Base files whose estimated dead fraction (rows whose key also
-        appears in the pending delta set, one column-pruned key pass)
-        stays BELOW the threshold are kept verbatim: their bytes never
-        enter the fold's shuffle or rewrite.  Correctness is free because
-        every read LWW-folds across base AND delta files -- a kept stale
-        row loses to its folded winner exactly as it lost to the delta
-        row before the fold.  The trade: buckets keeping superseded rows
-        become MULTI-VERSION (recorded as ``mv_buckets``), which disables
-        their metadata-only count and z-order slab file-skipping until a
-        later full fold re-establishes one-row-per-key; tombstone/TTL
-        purging is OFF for the whole call (a purged tombstone's older row
-        could resurrect from a kept file) and an explicit purge/expire
-        request is refused.  Use for update-heavy tables where most base
-        bytes are still live; measure with tools/compact_dv_ab.py.
+        A major fold rewrites every base file of each bucket it folds.
 
         ``bloom=True`` (minor and major) writes a parquet footer bloom of
         the leading key into this fold's output files, sized to each row
@@ -4949,6 +4848,7 @@ class LocalSnapshotSink(SnapshotSink):
 
             check_cluster_types(schema, list(cluster_by))
         has_flat = bool(delta_map.get(_FLAT))
+        mv_pending = {str(x) for x in cur.get("mv_buckets", [])}
         gc_requested = (
             purge_tombstones_before is not None or expire_rows_before is not None
         )
@@ -4977,48 +4877,19 @@ class LocalSnapshotSink(SnapshotSink):
             # delta-bearing buckets
             if not (buckets is not None and gc_requested):
                 todo = [b for b in todo if delta_map.get(b)]
-            # a FULL fold also re-folds multi-version buckets (base files
-            # kept with superseded rows by a prior min_dead_fraction
-            # fold): they have maintenance pending even with zero deltas,
-            # and folding them is what re-establishes one-row-per-key
-            mv_pending = {str(x) for x in cur.get("mv_buckets", [])}
-            if buckets is None and min_dead_fraction is None and mv_pending:
+            # a FULL fold also re-folds multi-version buckets (recorded by
+            # the retired live-fraction fold: base files that still hold
+            # superseded rows): they have maintenance pending even with
+            # zero deltas, and folding them re-establishes one-row-per-key
+            if buckets is None and mv_pending:
                 todo = sorted(
                     set(todo) | {b for b in mv_pending if base_map.get(b)}
                 )
             todo = [b for b in todo if delta_map.get(b) or base_map.get(b)]
             delta_files = [f for b in todo for f in delta_map.get(b, [])]
-        mv_in_todo = {str(x) for x in cur.get("mv_buckets", [])} & set(todo)
-        if not delta_files and not (gc_requested and todo) and not mv_in_todo:
+        if not delta_files and not (gc_requested and todo) and not mv_pending & set(todo):
             return {"snapshot_id": cur["snapshot_id"], "compacted_buckets": 0}
-        kept_map: dict[str, list[str]] = {}
-        mv_new: set[str] = set()
-        if min_dead_fraction is not None:
-            if gc_requested:
-                raise ValueError(
-                    "min_dead_fraction cannot combine with tombstone/TTL "
-                    "purging: a purged winner's older row could resurrect "
-                    "from a kept base file; run a full fold to GC"
-                )
-            if cluster_by:
-                raise ValueError(
-                    "min_dead_fraction cannot combine with cluster_by: kept "
-                    "files break the disjoint-hyper-rectangle invariant the "
-                    "z-order file stats promise"
-                )
-            if self.merge_mode == "partial":
-                raise ValueError(
-                    "min_dead_fraction requires full-row LWW (merge_mode="
-                    "'lww'): per-column folds have no per-row dead-ness"
-                )
-            kept_map, mv_new = self._partition_live_bases(
-                spark, cur, schema, todo, base_map, delta_files,
-                float(min_dead_fraction),
-            )
-        kept_set = {f for fs in kept_map.values() for f in fs}
-        files = [
-            f for b in todo for f in base_map.get(b, []) if f not in kept_set
-        ] + delta_files
+        files = [f for b in todo for f in base_map.get(b, [])] + delta_files
         sort_eff = (self.sort_on_compact if sort is None else sort) and not cluster_by
         cluster_expr = None
         if cluster_by:
@@ -5044,17 +4915,11 @@ class LocalSnapshotSink(SnapshotSink):
         # rebucket racing this fold is aborted by the num_buckets check at
         # commit time before the purged files could be referenced.
         purge = self._purge_horizon(cur, purge_tombstones_before)
-        if min_dead_fraction is not None:
-            # GC is unsound with kept files (resurrection, refused above);
-            # the DEFAULT retention horizon must not sneak it back in
-            purge = None
         # row TTL physical expiry: same major-fold-only validity argument
         # as tombstone GC (the fold covers every file that can hold the
         # bucket's keys, so dropping an expired winner cannot resurrect an
         # older row of the key from an unfolded file)
         expire = self._ttl_horizon(cur, expire_rows_before)
-        if min_dead_fraction is not None:
-            expire = None
         # claim LAST, directly before the first write: the z-order boundary
         # sampler above runs a Spark job, and a claim taken before it would
         # leak (live-pid-shielded) if that job failed
@@ -5064,11 +4929,7 @@ class LocalSnapshotSink(SnapshotSink):
         n_parts = max(len(todo), cur["num_buckets"] if has_flat else 1)
         if target:
             bsizes = self._sizes_by_bucket(
-                {
-                    b: [f for f in base_map.get(b, []) if f not in kept_set]
-                    + delta_map.get(b, [])
-                    for b in todo
-                }
+                {b: base_map.get(b, []) + delta_map.get(b, []) for b in todo}
             )
             if has_flat:
                 # flat deltas spread over every bucket: an equal share each
@@ -5118,20 +4979,10 @@ class LocalSnapshotSink(SnapshotSink):
         # claim guard: a failure here must reclaim the fold's claim like a
         # failure of the fold itself.
         with self._claim_guard(sid):
-            bucket_files = (
-                {
-                    b: kept_map.get(b, []) + list(written.get(b, []))
-                    for b in set(written) | set(kept_map)
-                }
-                if kept_map
-                else written
-            )
             kcol = self._stats_key(schema) if sort_eff else []
             cols = list(dict.fromkeys([*kcol, *(cluster_by or [])]))
-            fstats = self._footer_burst(
-                [f for fs in bucket_files.values() for f in fs], cols
-            )
             out_files = [f for fs in written.values() for f in fs]
+            fstats = self._footer_burst(out_files, cols)
             new_key_stats = {
                 f: e[kcol[0]]
                 for f, e in self._json_ranges(fstats, kcol, out_files).items()
@@ -5139,9 +4990,7 @@ class LocalSnapshotSink(SnapshotSink):
             new_col_stats = self._json_ranges(
                 fstats, list(cluster_by or []), out_files
             )
-            new_bucket_rows = self._collect_bucket_rows(
-                spark, bucket_files, fstats
-            )
+            new_bucket_rows = self._collect_bucket_rows(spark, written, fstats)
         consumed = set(delta_files)
         with self._conflict_trash(), self._commit_lock():
             latest = self.manifest()
@@ -5168,7 +5017,7 @@ class LocalSnapshotSink(SnapshotSink):
             new_files = dict(latest["files"])
             new_deltas = self._unconsumed(latest.get("deltas", {}), consumed)
             for b in todo:
-                new_files[b] = list(kept_map.get(b, []))
+                new_files[b] = []
             for b, fs in written.items():
                 new_files[b] = new_files.get(b, []) + list(fs)
             # delta commits that landed AFTER this fold started are still
@@ -5191,9 +5040,7 @@ class LocalSnapshotSink(SnapshotSink):
             # key-range stats: drop entries for files this fold replaced
             # (immutable files => remaining entries stay valid verbatim),
             # add this fold's sorted outputs
-            replaced = {
-                f for b in todo for f in base_map.get(b, []) if f not in kept_set
-            } | consumed
+            replaced = {f for b in todo for f in base_map.get(b, [])} | consumed
             ks = dict(self.key_stats(latest))
             if ks or new_key_stats:
                 ks = {f: v for f, v in ks.items() if f not in replaced}
@@ -5202,26 +5049,14 @@ class LocalSnapshotSink(SnapshotSink):
             if cs or new_col_stats:
                 cs = {f: v for f, v in cs.items() if f not in replaced}
                 cs.update(new_col_stats)
-            mv = {str(x) for x in latest.get("mv_buckets", [])}
-            for b in todo:
-                if b in mv_new:
-                    mv.add(str(b))
-                elif not kept_map.get(b):
-                    # fully folded: one-row-per-key re-established
-                    mv.discard(str(b))
+            # every folded bucket is one-row-per-key again; multi-version
+            # buckets it did not reach stay recorded, with no bucket_rows
+            # entry (rows-minus-tombstones would double-count a key)
+            mv = {str(x) for x in latest.get("mv_buckets", [])} - set(todo)
             brm = dict(latest.get("bucket_rows") or {})
             for b in todo:
                 brm.pop(b, None)
-            # multi-version buckets (kept superseded rows) get no
-            # metadata count entry: rows-minus-tombstones would double-
-            # count a key.  Filter against the FINAL mv set, not just
-            # this fold's mv_new: a bucket that STAYED multi-version from
-            # an earlier fold (this round's kept file had dead=0 against
-            # the new deltas) would otherwise regain an entry whose sig
-            # matches while its rows still count superseded keys.
-            brm.update(
-                {b: v for b, v in new_bucket_rows.items() if str(b) not in mv}
-            )
+            brm.update(new_bucket_rows)
             packed_files, packed_deltas = self._pack_maps(new_files, new_deltas)
             manifest = self._child_manifest(
                 latest,
@@ -5244,15 +5079,7 @@ class LocalSnapshotSink(SnapshotSink):
                 else:
                     manifest.pop(k, None)
             self._commit(manifest)
-        return {
-            "snapshot_id": sid,
-            "compacted_buckets": len(written),
-            **(
-                {"kept_files": sum(len(v) for v in kept_map.values())}
-                if min_dead_fraction is not None
-                else {}
-            ),
-        }
+        return {"snapshot_id": sid, "compacted_buckets": len(written)}
 
     def rebucket(
         self,
@@ -6607,11 +6434,6 @@ class LocalSnapshotSink(SnapshotSink):
                     min_bucket_bytes=thresh,
                     target_file_bytes=self.target_file_bytes,
                     sort=self.sort_on_compact or None,
-                    # the sink-level DV policy applies to auto_maintain's
-                    # folds too; its purge_tombstones step still runs FULL
-                    # folds (gc path), which is what periodically clears
-                    # mv buckets under the DV policy
-                    min_dead_fraction=self.compact_min_dead_fraction,
                 )
             elif act == "minor_compact":
                 res = self.compact(spark, minor=True)

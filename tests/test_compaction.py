@@ -7,8 +7,10 @@ duplicate row, equal-(ts, _seq) ties whose payloads differ only in
 nulls, clustered and flat delta layouts, a schema widened mid-log -- and
 check the folded state against a one-shot last-writer-wins oracle.  They
 also pin the sink's option surface: tables that recorded a since-removed
-property still open, and new knobs need a visible edit here.  The last
-group covers ``compact(bloom=True)``: parquet footer blooms of the
+property still open, and new knobs need a visible edit here.  Tables
+whose buckets the retired live-fraction fold left multi-version
+(``mv_buckets``) still read, count and fold exactly.  The last group
+covers ``compact(bloom=True)``: parquet footer blooms of the
 leading key, checked through parquet-mr's footer reader.
 """
 
@@ -202,11 +204,14 @@ def test_sink_option_surface_is_pinned():
 
     with pytest.raises(SystemExit, match="unknown arg 'compact_bucket_local'"):
         _parse_kv(["compact_bucket_local=true"], LocalSnapshotSink, check_required=False)
+    with pytest.raises(SystemExit, match="unknown arg 'compact_min_dead_fraction'"):
+        _parse_kv(
+            ["compact_min_dead_fraction=0.5"], LocalSnapshotSink, check_required=False
+        )
     assert _params(LocalSnapshotSink.__init__) == [
         "async_compact", "auto_compact_bytes", "base_schema", "branch",
         "cluster_deltas", "collect_metrics", "compact_every",
-        "compact_min_bucket_bytes", "compact_min_dead_fraction",
-        "conflict_retries", "dedup_on_write", "expectations",
+        "compact_min_bucket_bytes", "conflict_retries", "dedup_on_write", "expectations",
         "key", "late_tolerance_seconds", "max_committed_tokens", "merge_mode",
         "mode", "monotonic_tokens", "num_buckets", "row_ttl_seconds",
         "snapshot_keep_last", "sort_on_compact", "table_dir",
@@ -214,8 +219,7 @@ def test_sink_option_surface_is_pinned():
     ]
     assert _params(LocalSnapshotSink.compact) == [
         "bloom", "buckets", "cluster_by", "expire_rows_before",
-        "min_bucket_bytes", "min_dead_fraction", "minor",
-        "purge_tombstones_before", "sort", "target_file_bytes",
+        "min_bucket_bytes", "minor", "purge_tombstones_before", "sort", "target_file_bytes",
     ]
 
 
@@ -449,3 +453,86 @@ def test_table_recording_removed_key_blooms_still_opens(spark, tmp_path):
     assert again.read(spark).count() == 100
     report = again.fsck(deep=True)
     assert report["ok"], report
+
+
+# ------------------------------------------- recorded multi-version buckets
+# The retired live-fraction fold (compact(min_dead_fraction=t)) kept mostly
+# live base files verbatim beside the fold's output and recorded their
+# buckets in ``mv_buckets``: such a bucket's base files may hold superseded
+# rows.  Tables it wrote must keep reading exactly.
+
+
+def test_table_recording_mv_buckets_reads_counts_and_folds_exactly(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    payload = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("v", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+
+    def merge(rows, token):
+        sink.merge(
+            spark.createDataFrame(
+                [(op, c, tx, v, _ts(1, s % 60), s, 0) for op, c, tx, v, s in rows],
+                "op string, conv_id string, text string, v long, ts timestamp, "
+                "seq long, src_partition int",
+            ),
+            token,
+        )
+
+    sink = LocalSnapshotSink(
+        str(tmp_path / "t"), num_buckets=4, key=["conv_id"], base_schema=payload,
+        compact_every=10**9,
+    )
+    merge([("I", f"c{i}", f"t{i}", i, i) for i in range(100)], "b0")
+    sink.compact(spark, cluster_by=["v"])
+    merge([("U", "c1", "up", 999, 500)], "b1")
+    # the state that fold committed: the bucket's superseded base file
+    # stays beside the file holding its winner, which has its own
+    # col_stats range; the bucket is recorded in mv_buckets and has no
+    # bucket_rows entry
+    cur = sink.manifest()
+    (b, (winner,)), = ((k, v) for k, v in sink.delta_lists().items() if v)
+    files = sink.file_lists()
+    files[b] = files[b] + [winner]
+    cs = {**sink.col_stats(cur), winner: {"v": [999, 999]}}
+    brm = {k: v for k, v in cur["bucket_rows"].items() if k != b}
+    sink._commit(
+        sink._child_manifest(
+            cur, sink._next_sid(cur), {"compacted_buckets": 1, "delta_commits": 0},
+            files=sink._pack_maps(files)[0], deltas={}, delta_bytes={},
+            col_stats=sink._pack_key_stats(cs), bucket_rows=brm, mv_buckets=[b],
+        )
+    )
+    old_files = set(files[b])
+
+    want = {(f"c{i}", f"t{i}", i) for i in range(100)} - {("c1", "t1", 1)}
+    want |= {("c1", "up", 999)}
+
+    def state(**kw):
+        return {
+            tuple(r)
+            for r in sink.read(spark, **kw).select("conv_id", "text", "v").collect()
+        }
+
+    assert state() == want
+    # slab reads: the superseded c1 row (v=1) lies in the slab, its winner
+    # (v=999) in a file whose range excludes the slab
+    assert state(range_hints={"v": (0, 5)}) == {w for w in want if w[2] <= 5}
+    assert state(range_hints={"v": (990, 1000)}) == {("c1", "up", 999)}
+    assert sink.lookup(spark, "c1").select("v").first()[0] == 999
+    assert sink.count_rows(spark) == sink.read(spark).count() == 100
+    with pytest.raises(ValueError, match="not metadata-answerable"):
+        sink.count_rows(None)
+
+    # a plain fold with no pending deltas still folds the recorded bucket
+    out = sink.compact(spark)
+    assert out["compacted_buckets"] >= 1
+    assert not sink.manifest().get("mv_buckets")
+    assert not set(sink.file_lists()[b]) & old_files
+    assert state() == want
+    assert sink.count_rows(None) == 100

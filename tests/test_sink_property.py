@@ -4,6 +4,7 @@ compaction at arbitrary points) matches the oracle for any log + batching."""
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 import pandas as pd
 import pytest
@@ -54,10 +55,9 @@ def _oracle(rows):
     compact_mid=st.booleans(),
     mode=st.sampled_from(["mor", "cow"]),
     clustered=st.booleans(),
-    dv=st.sampled_from([None, 0.5, 0.99]),
 )
 def test_sink_matches_oracle_any_batching_any_mode(
-    spark, tmp_path_factory, events, split, compact_mid, mode, clustered, dv
+    spark, tmp_path_factory, events, split, compact_mid, mode, clustered
 ):
     rows = _rows(events)
     cut = min(split, len(rows))
@@ -75,24 +75,11 @@ def test_sink_matches_oracle_any_batching_any_mode(
     b1 = spark.createDataFrame(rows[:cut], CHANGE_EVENT_SCHEMA)
     sink.merge(b1, "b1")
     if compact_mid:
-        # dv adds the live-fraction-aware fold (kept files + mv
-        # buckets) -- every path must be state-identical under any
-        # batching/mode/layout
-        sink.compact(spark, min_dead_fraction=dv)
+        sink.compact(spark)
     if rows[cut:]:
         sink.merge(spark.createDataFrame(rows[cut:], CHANGE_EVENT_SCHEMA), "b2")
     got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in sink.read(spark).collect()}
     assert got == _oracle(rows)
-    if dv is not None:
-        # a DV fold over the final state, then a full fold (clears mv):
-        # both pure maintenance -- state invariant at every step
-        sink.compact(spark, min_dead_fraction=dv)
-        got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in sink.read(spark).collect()}
-        assert got == _oracle(rows)
-        sink.compact(spark)
-        assert not sink.manifest().get("mv_buckets")
-        got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in sink.read(spark).collect()}
-        assert got == _oracle(rows)
 
 
 def test_lookup_prunes_to_one_bucket(spark, tmp_path):
@@ -116,6 +103,36 @@ def test_lookup_prunes_to_one_bucket(spark, tmp_path):
     # cross-check against a full-scan read
     full = sink.read(spark).filter("conv_id = 'conv_00000000'").collect()
     assert {tuple(r) for r in rows} == {tuple(r) for r in full}
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"sink-property-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_launches_no_job_to_learn_the_bucket(spark, tmp_path):
+    """The bucket of a lookup key is a constant the optimizer folds:
+    building ``lookup()`` launches no more jobs than building the
+    bucket-pruned ``read()`` it delegates to, and returns its rows."""
+    sink = LocalSnapshotSink(str(tmp_path / "t"), num_buckets=16)
+    rows = [("I", f"c{i}", 0, "user", f"v{i}", None, T0, i, 0) for i in range(40)]
+    sink.merge(spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), "b1")
+    sink.compact(spark)
+    key = "c7"
+    b = next(
+        int(b) for b, fs in sink.file_lists().items()
+        if any(r["conv_id"] == key for r in spark.read.parquet(*fs).collect())
+    )
+    n_read = _jobs(spark, lambda: sink.read(spark, buckets=[b], key_eq=key))
+    n_lookup = _jobs(spark, lambda: sink.lookup(spark, key))
+    assert n_lookup <= n_read
+    assert [r["text"] for r in sink.lookup(spark, key).collect()] == ["v7"]
 
 
 @settings(

@@ -159,14 +159,6 @@ def main() -> int:
             compact_min_bucket_bytes=32 * 1024 * 1024,
             target_file_bytes=64 * 1024 * 1024,
             tombstone_retention_seconds=7 * 24 * 3600.0,
-            # FETCHEZ_SOAK_DV=<0..1>: soak under the live-fraction-aware
-            # fold policy (measures DV's file-accumulation caveat + holds
-            # the equality bar across hundreds of DV folds)
-            compact_min_dead_fraction=(
-                float(os.environ["FETCHEZ_SOAK_DV"])
-                if os.environ.get("FETCHEZ_SOAK_DV")
-                else None
-            ),
         )
         lineage = LineageLog(os.path.join(work, "lineage"))
 
