@@ -34,6 +34,17 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# the LocalSnapshotSink methods `profile` times, one phase each; the
+# footer burst includes a fold's driver-side tombstone counts
+SINK_PHASES = [
+    "_write_flat",
+    "_write_bucketed",
+    "_dedup_write_bucketed",
+    "_commit",
+    "_footer_burst",
+    "manifest",
+]
+
 _PHASES: dict[str, float] = {}
 _COUNTS: dict[str, int] = {}
 
@@ -86,18 +97,7 @@ def profile_replay(events: int | None, cores: int, batches: int) -> dict:
             "spark.io.compression.codec": os.environ.get("FETCHEZ_IO_CODEC", "lz4"),
         },
     )
-    _instrument(
-        LocalSnapshotSink,
-        [
-            "_write_flat",
-            "_write_bucketed",
-            "_dedup_write_bucketed",
-            "_commit",
-            "_footer_burst",
-            "_collect_bucket_rows",
-            "manifest",
-        ],
-    )
+    _instrument(LocalSnapshotSink, SINK_PHASES)
     work = tempfile.mkdtemp(prefix="fetchez-profile-", dir=bench._fast_tmp())
     try:
         log_dir = os.path.join(work, "log")

@@ -69,6 +69,7 @@ from fetchez_spark.operators._incview import (
     IncrementalView,
     atomic_write as _atomic_write,
 )
+from fetchez_spark.session import NO_CRC_SIDECARS, VERIFY_PAGE_CRC
 
 _LOG = logging.getLogger("fetchez_spark.export_view")
 
@@ -95,10 +96,11 @@ class ParquetExportView(IncrementalView):
         self.export_dir = os.path.abspath(export_dir)
         self.source = source
         self.keep_versions = max(1, int(keep_versions))
-        # None = session default (snappy); zstd roughly halves the
-        # published bytes at a few % CPU -- the right trade when the
-        # export ships over a network (same finding as the shuffle-codec
-        # ladder in BENCH/BASELINE.md)
+        # None = the session's parquet codec (zstd under get_spark,
+        # snappy in a plain Spark session); zstd roughly halves the
+        # published bytes of snappy at a few % CPU -- the right trade
+        # when the export ships over a network (same finding as the
+        # shuffle-codec ladder in BENCH/BASELINE.md)
         self.parquet_codec = parquet_codec
         # RetentionPinMixin derives the consumer name from store.table_dir
         self.store = SimpleNamespace(table_dir=self.export_dir)
@@ -468,6 +470,9 @@ class ParquetExportView(IncrementalView):
             # no _SUCCESS marker: consumers follow the `current` symlink
             # or manifest-current.txt, and nothing reads the marker
             .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            # no .crc sidecar beside each bucket file: the page CRCs
+            # inside the file guard its bytes
+            .options(**NO_CRC_SIDECARS)
         )
         if self.parquet_codec:
             writer = writer.option("compression", self.parquet_codec)
@@ -566,7 +571,7 @@ class ParquetExportView(IncrementalView):
             if version is not None
             else os.path.join(self.export_dir, "current")
         )
-        df = spark.read.parquet(target)
+        df = spark.read.options(**VERIFY_PAGE_CRC).parquet(target)
         return df.drop(_BUCKET_COL) if drop_bucket else df
 
     def fsck(self) -> dict[str, list[str]]:

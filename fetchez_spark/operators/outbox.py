@@ -63,6 +63,7 @@ from fetchez_spark.operators._incview import (
     IncrementalView,
     atomic_write as _atomic_write,
 )
+from fetchez_spark.session import NO_CRC_SIDECARS
 
 _LOG = logging.getLogger("fetchez_spark.outbox")
 
@@ -238,7 +239,7 @@ class ChangeOutbox(IncrementalView):
             out = out.coalesce(self.files_per_batch)
         tmp = os.path.join(self.outbox_dir, _META, f"tmp-{n_ord:08d}")
         shutil.rmtree(tmp, ignore_errors=True)
-        out.write.mode("overwrite").text(tmp)
+        out.write.mode("overwrite").options(**NO_CRC_SIDECARS).text(tmp)
         parts = sorted(
             f for f in os.listdir(tmp) if f.startswith("part-") and
             os.path.getsize(os.path.join(tmp, f)) > 0
@@ -379,7 +380,7 @@ class ChangeOutbox(IncrementalView):
             )
         tmp = os.path.join(self.outbox_dir, _META, f"tmp-snap-{n_ord:08d}")
         shutil.rmtree(tmp, ignore_errors=True)
-        enc.write.mode("overwrite").text(tmp)
+        enc.write.mode("overwrite").options(**NO_CRC_SIDECARS).text(tmp)
         parts = sorted(
             f for f in os.listdir(tmp) if f.startswith("part-")
             and os.path.getsize(os.path.join(tmp, f)) > 0

@@ -13,6 +13,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Writer options for every file the engine writes and later reads
+# through its own manifests (table data, export versions, outbox
+# batches).  Spark copies writer options into the write job's Hadoop
+# conf, so only these jobs swap the local ``ChecksumFileSystem`` for the
+# raw one and leave no ``.crc`` sidecar beside each file: parquet-mr
+# already writes a CRC32 into every page header.  The cache switch makes
+# the job build its own filesystem instead of reusing the session's
+# cached checksummed one.
+NO_CRC_SIDECARS = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
+# Reader option for engine scans of engine-written parquet: check each
+# page's header CRC, so a flipped byte fails the read in any session.
+# Pages without a CRC (older or foreign writers) are read unchecked.
+VERIFY_PAGE_CRC = {"parquet.page.verify-checksum.enabled": "true"}
+
 
 def get_spark(
     app_name: str = "fetchez-spark",
@@ -59,6 +77,15 @@ def get_spark(
         # only.  Default is 32, which taxed every fold and every serving
         # increment with a listing job.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # streaming checkpoint logs go through FileContext: the raw local
+        # AbstractFileSystem leaves no .crc beside each offset, commit and
+        # metadata file.  fs.file.impl (the FileSystem API) stays the
+        # checksummed default for the session: RocksDB's state store
+        # casts FileSystem.getLocal() to LocalFileSystem.
+        .config(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl",
+            "org.apache.hadoop.fs.local.RawLocalFs",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

@@ -113,6 +113,7 @@ from fetchez_spark.schema import (
     TRANSCRIPT_SCHEMA,
     merge_schemas,
 )
+from fetchez_spark.session import NO_CRC_SIDECARS, VERIFY_PAGE_CRC
 from fetchez_spark.sinks.base import SnapshotSink
 
 _BUCKET = "_bucket"
@@ -298,10 +299,14 @@ def _blob_entry(body, ref: str):
 
 def _data_writer(rows: DataFrame):
     """The writer every table data write starts from: overwrite into a
-    snapshot-unique dir, and no ``_SUCCESS`` marker -- the commit point
-    is the VERSION swap, and nothing reads the marker."""
-    return rows.write.mode("overwrite").option(
-        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    snapshot-unique dir, no ``_SUCCESS`` marker -- the commit point is
+    the VERSION swap, and nothing reads the marker -- and no ``.crc``
+    sidecars (:data:`NO_CRC_SIDECARS`): the sink's scans check the page
+    CRCs inside each file instead."""
+    return (
+        rows.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .options(**NO_CRC_SIDECARS)
     )
 
 
@@ -876,7 +881,7 @@ class LocalSnapshotSink(SnapshotSink):
     ) -> DataFrame:
         if not files:
             return spark.createDataFrame([], schema)
-        df = spark.read.schema(schema).parquet(*files)
+        df = spark.read.options(**VERIFY_PAGE_CRC).schema(schema).parquet(*files)
         if imported and any(f in imported for f in files):
             # zero-copy imported files never carried the engine-internal
             # columns; name-based projection reads them as null.  Normalize
@@ -1588,7 +1593,9 @@ class LocalSnapshotSink(SnapshotSink):
     # ts_stats_new, bucket_rows -- and every footer check (ts_range, the
     # two purges, read_changes on files with no recorded entry) comes from
     # ONE reader of parquet FOOTER statistics, _footer_stats: driver-side,
-    # no Spark job and no data scan.  Files are immutable, so an entry can
+    # no Spark job and no data scan (a fold's tombstone counts read one
+    # boolean column, and only of files whose footer admits a tombstone;
+    # see _footer_burst).  Files are immutable, so an entry can
     # never go stale-WRONG: a rewritten file simply stops being referenced
     # and its entry is trimmed at the next fold.  A file whose footer lacks
     # a statistic gets no entry and is read every time.  Entries ride
@@ -1653,14 +1660,34 @@ class LocalSnapshotSink(SnapshotSink):
         return md.num_rows, may_dead, {c: _range(c) for c in cols}
 
     @classmethod
-    def _footer_burst(cls, files: list[str], cols=()) -> dict[str, Any]:
-        """``{file: _footer_stats(file, cols)}``.  pyarrow releases the GIL
-        for the parse, so past 8 files a thread pool turns O(files) serial
-        driver reads into one short parallel burst."""
+    def _footer_burst(
+        cls, files: list[str], cols=(), count_dead: bool = False
+    ) -> dict[str, Any]:
+        """``{file: _footer_stats(file, cols)}``.  With ``count_dead`` the
+        second field is the file's exact tombstone count instead: the
+        ``_deleted`` column is read, driver-side, from files whose footer
+        says they may hold tombstones (usually none), and a file whose
+        column cannot be read gets None like an unreadable footer.
+        pyarrow releases the GIL for the parse, so past 8 files a thread
+        pool turns O(files) serial driver reads into one short parallel
+        burst."""
         from concurrent.futures import ThreadPoolExecutor
 
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         def read(f):
-            return cls._footer_stats(f, cols)
+            st = cls._footer_stats(f, cols)
+            if not count_dead or st is None:
+                return st
+            if not st[1]:
+                return st[0], 0, st[2]
+            try:
+                dead = pq.read_table(f, columns=[INTERNAL_DELETED]).column(0)
+            except (OSError, pa.ArrowException):
+                return None
+            return st[0], int(pc.sum(dead).as_py() or 0), st[2]
 
         if len(files) > 8:
             with ThreadPoolExecutor(16) as ex:
@@ -1791,49 +1818,20 @@ class LocalSnapshotSink(SnapshotSink):
         return hashlib.sha256(names.encode()).hexdigest()[:16]
 
     def _collect_bucket_rows(
-        self, spark: SparkSession, written: dict[str, list[str]], fstats: dict
+        self, written: dict[str, list[str]], fstats: dict
     ) -> dict[str, dict]:
         """Per-bucket {rows, dead, sig} for just-written base files, from
-        their footer statistics ``fstats`` (see :meth:`_footer_burst`).  A
-        bucket with an unreadable footer gets no entry.  Tombstone counts
-        need ONE boolean-pruned job, run only over files whose footer
-        statistics say they MAY hold tombstones (usually none)."""
-        rows_by_bucket: dict[str, int] = {}
-        may_dead: list[str] = []
-        file_bucket: dict[str, str] = {}
-        for b, fs in written.items():
-            if any(fstats.get(f) is None for f in fs):
-                continue
-            rows_by_bucket[b] = sum(fstats[f][0] for f in fs)
-            for f in fs:
-                file_bucket[f] = b
-                if fstats[f][1]:
-                    may_dead.append(f)
-        dead_by_bucket: dict[str, int] = {}
-        if may_dead:
-            from urllib.parse import unquote, urlparse
-
-            counts = (
-                spark.read.parquet(*may_dead)
-                .filter(F.col(INTERNAL_DELETED))
-                .groupBy(F.input_file_name().alias("_f"))
-                .count()
-                .collect()
-            )
-            for r in counts:
-                p = r["_f"]
-                if "://" in p:
-                    p = unquote(urlparse(p).path)
-                b = file_bucket.get(p)
-                if b is not None:
-                    dead_by_bucket[b] = dead_by_bucket.get(b, 0) + int(r["count"])
+        a ``count_dead`` footer burst ``fstats`` (see
+        :meth:`_footer_burst`).  A bucket with an unreadable file gets no
+        entry."""
         return {
             b: {
-                "rows": n,
-                "dead": dead_by_bucket.get(b, 0),
-                "sig": self._bucket_sig(written.get(b, [])),
+                "rows": sum(fstats[f][0] for f in fs),
+                "dead": sum(fstats[f][1] for f in fs),
+                "sig": self._bucket_sig(fs),
             }
-            for b, n in rows_by_bucket.items()
+            for b, fs in written.items()
+            if all(fstats.get(f) is not None for f in fs)
         }
 
     def count_rows(
@@ -2364,7 +2362,11 @@ class LocalSnapshotSink(SnapshotSink):
                     ]
                 ),
             )
-        return spark.read.option("mergeSchema", "true").parquet(*subdirs)
+        return (
+            spark.read.options(**VERIFY_PAGE_CRC)
+            .option("mergeSchema", "true")
+            .parquet(*subdirs)
+        )
 
     def requeue_quarantine(self, spark: SparkSession, transform=None) -> dict:
         """Dead-letter replay: re-submit quarantined rows through the
@@ -2399,7 +2401,11 @@ class LocalSnapshotSink(SnapshotSink):
             # sids can commit out of numeric order under multi-writer, so
             # a sequence watermark could silently skip an older requeue)
             token = f"requeue-{sid}-q"
-            rows = spark.read.parquet(qdir).drop("_violations", "_batch_token")
+            rows = (
+                spark.read.options(**VERIFY_PAGE_CRC)
+                .parquet(qdir)
+                .drop("_violations", "_batch_token")
+            )
             if transform is not None:
                 rows = transform(rows)
             if self.is_committed(token):
@@ -3985,7 +3991,8 @@ class LocalSnapshotSink(SnapshotSink):
                     F.collect_set(self._bucket_expr(nb)).alias("bk")
                 )
             per_part = (
-                spark.read.schema(T.StructType(stats_fields))
+                spark.read.options(**VERIFY_PAGE_CRC)
+                .schema(T.StructType(stats_fields))
                 .parquet(*written)
                 .groupBy(INTERNAL_SRC)
                 .agg(*stats_aggs)
@@ -4982,7 +4989,7 @@ class LocalSnapshotSink(SnapshotSink):
             kcol = self._stats_key(schema) if sort_eff else []
             cols = list(dict.fromkeys([*kcol, *(cluster_by or [])]))
             out_files = [f for fs in written.values() for f in fs]
-            fstats = self._footer_burst(out_files, cols)
+            fstats = self._footer_burst(out_files, cols, count_dead=True)
             new_key_stats = {
                 f: e[kcol[0]]
                 for f, e in self._json_ranges(fstats, kcol, out_files).items()
@@ -4990,7 +4997,7 @@ class LocalSnapshotSink(SnapshotSink):
             new_col_stats = self._json_ranges(
                 fstats, list(cluster_by or []), out_files
             )
-            new_bucket_rows = self._collect_bucket_rows(spark, written, fstats)
+            new_bucket_rows = self._collect_bucket_rows(written, fstats)
         consumed = set(delta_files)
         with self._conflict_trash(), self._commit_lock():
             latest = self.manifest()
@@ -6147,9 +6154,11 @@ class LocalSnapshotSink(SnapshotSink):
         parses with a valid schema/key/bucket layout, every list and
         catalog blob it references resolves, and every data file it names
         exists with nonzero size.  ``deep=True`` additionally opens the
-        HEAD snapshot's parquet footers (file magic + metadata — the
-        "bytes are intact" check a size-stat can't give) and verifies each
-        file's columns against the table schema.
+        HEAD snapshot's parquet files (file magic + metadata), verifies
+        each file's columns against the table schema, and reads every
+        page, one row group at a time, checking its header CRC — the
+        "bytes are intact" check a size-stat can't give.  A page that
+        fails its CRC or no longer decodes is an error naming the file.
 
         Returns ``{"ok", "errors", "warnings", "checked"}``.  ``errors``
         are integrity violations (unreadable state / lost data);
@@ -6363,7 +6372,7 @@ class LocalSnapshotSink(SnapshotSink):
                         pass  # already reported above
             for path in sorted(head_files):
                 try:
-                    meta = pq.ParquetFile(path)
+                    meta = pq.ParquetFile(path, page_checksum_verification=True)
                 except Exception as e:
                     errors.append(f"head data file footer unreadable: {path}: {e}")
                     continue
@@ -6377,6 +6386,13 @@ class LocalSnapshotSink(SnapshotSink):
                         f"head data file {path} carries column(s) {extra} "
                         "absent from the table schema"
                     )
+                try:
+                    for rg in range(meta.num_row_groups):
+                        meta.read_row_group(rg)
+                except Exception as e:
+                    errors.append(f"head data file pages unreadable: {path}: {e}")
+                finally:
+                    meta.close()
         return {
             "ok": not errors,
             "errors": errors,

@@ -35,3 +35,16 @@ def test_bench_emits_contract_json(tmp_path):
     assert d["unit"] == "events/sec" and d["value"] > 0
     assert d["events"] == 100000 and d["cores"] == 4
     assert "cdc_replay" in d["queries"] and d["final_rows"] > 0
+
+
+def test_bench_extra_profiles_only_existing_sink_methods():
+    import importlib.util
+
+    from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_extra", os.path.join(REPO, "bench_extra.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert [n for n in mod.SINK_PHASES if n not in LocalSnapshotSink.__dict__] == []

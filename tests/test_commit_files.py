@@ -8,6 +8,11 @@ estimate: a small batch -- many small input files or a small in-memory
 frame -- is written as few files as Spark's per-file open cost allows.
 Tables written in the older per-bucket-blob and inline encodings keep
 reading, passing fsck, expiring and cloning.
+
+No engine write -- table data, export versions, outbox batches,
+streaming checkpoints -- leaves a Hadoop ``.crc`` sidecar: the page CRCs
+inside each parquet file guard its bytes.  Tables whose data dirs still
+hold sidecars from older writes keep working.
 """
 
 from __future__ import annotations
@@ -94,11 +99,11 @@ def replayed(spark, tmp_path_factory):
 
 def test_replay_file_census(replayed):
     # 3 merges of one flat file each, a 16-bucket fold, a 16-bucket
-    # closing compact: 35 data files, each with its .crc; one manifest
+    # closing compact: 35 data files and no .crc sidecars; one manifest
     # and one list blob per commit (root + 5); one claim per data dir
     assert _census(replayed.table_dir) == {
         "parquet": 35,
-        "crc": 35,
+        "crc": 0,
         "_SUCCESS": 0,
         "CLAIM.json": 5,
         "manifest": 6,
@@ -109,7 +114,7 @@ def test_replay_file_census(replayed):
 
 def test_small_commit_file_census(spark, tmp_path):
     # a 500-row in-memory merge into a compacted flat table adds one data
-    # file (not one per core), its .crc, its claim, one manifest and one
+    # file (not one per core, no .crc), its claim, one manifest and one
     # list blob
     assert spark.sparkContext.defaultParallelism >= 2
     sink = _flat_sink(tmp_path, "t")
@@ -120,13 +125,98 @@ def test_small_commit_file_census(spark, tmp_path):
     after = _census(sink.table_dir)
     assert {k: after[k] - before[k] for k in after} == {
         "parquet": 1,
-        "crc": 1,
+        "crc": 0,
         "_SUCCESS": 0,
         "CLAIM.json": 1,
         "manifest": 1,
         "list blob": 1,
         "other": 0,
     }
+
+
+def _crc_files(*roots: str) -> list[str]:
+    return sorted(
+        os.path.join(d, f)
+        for root in roots
+        for d, _, names in os.walk(root)
+        for f in names
+        if f.endswith(".crc")
+    )
+
+
+def test_engine_writes_leave_no_crc_sidecars(spark, tmp_path):
+    from fetchez_spark.operators.export_view import ParquetExportView
+    from fetchez_spark.operators.outbox import ChangeOutbox
+    from fetchez_spark.streaming.engine import run_stream
+
+    log = str(tmp_path / "log")
+    files = write_change_log(
+        ChangeLogSpec(num_events=1200, num_convs=60, seed=7), log, num_chunks=4
+    )
+    sink = _flat_sink(tmp_path, "t")
+    replay_batches(spark, [files[0:1], files[1:2]], sink)
+    sink.compact(spark)
+    export = ParquetExportView(str(tmp_path / "exp"), sink)
+    box = ChangeOutbox(str(tmp_path / "box"), sink)
+    export.refresh(spark)
+    box.refresh(spark)
+    ckpt = str(tmp_path / "ckpt")
+    run_stream(spark, log, sink, ckpt, max_files_per_trigger=2).awaitTermination(300)
+    export.refresh(spark)
+    box.refresh(spark)
+    cow = LocalSnapshotSink(str(tmp_path / "cow"), num_buckets=4, mode="cow", track_changes=True)
+    cow.merge(_pandas_batch(spark, _rows(200)), "b1")
+
+    assert os.listdir(os.path.join(ckpt, "offsets"))
+    assert export.read(spark).count() == sink.read(spark).count()
+    assert len(os.listdir(box.data_dir())) >= 2
+    assert _crc_files(
+        sink.table_dir, cow.table_dir, export.export_dir, box.outbox_dir, ckpt
+    ) == []
+
+
+def test_table_with_crc_sidecars_keeps_working(spark, tmp_path, monkeypatch):
+    """Data dirs written with the checksummed local filesystem -- a
+    ``.crc`` beside every data file -- still read, merge, fold, expire,
+    vacuum and pass deep fsck."""
+    import fetchez_spark.sinks.local_snapshot as ls
+
+    sink = _flat_sink(tmp_path, "t")
+    with monkeypatch.context() as m:
+        m.setattr(ls, "NO_CRC_SIDECARS", {})
+        sink.merge(_batch(spark, _rows(300)), "b1")
+        sink.compact(spark)
+        sink.merge(_batch(spark, _rows(300, start=200)), "b2")
+        orphan = os.path.join(sink.table_dir, "data", "snap-0000000000000000001")
+        ls._data_writer(_batch(spark, _rows(10))).parquet(orphan)
+    crcs = set(_crc_files(sink.table_dir))
+    head_files = sink.files()
+    head = [r["path"] for r in head_files]
+    assert {r["kind"] for r in head_files} == {"base", "flat"}
+    assert all(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc") in crcs
+               for f in head)
+    assert _crc_files(orphan)
+    want = {(r[1], r[2], r[4]) for r in _rows(500)}
+    assert _state(sink, spark) == want
+
+    sink.merge(_batch(spark, _rows(100, start=500)), "b3")
+    want |= {(r[1], r[2], r[4]) for r in _rows(100, start=500)}
+    assert _state(sink, spark) == want
+    report = sink.fsck(deep=True)
+    assert report["ok"], report["errors"]
+    sink.compact(spark)
+    assert _state(sink, spark) == want
+    assert sink.expire_snapshots(keep_last=1, min_age_seconds=0) > 0
+    old = 0.0
+    for d, dirs, names in os.walk(orphan):
+        for n in dirs + names:
+            os.utime(os.path.join(d, n), (old, old))
+    os.utime(orphan, (old, old))
+    assert sink.vacuum_orphans(min_age_seconds=0) == 1
+    assert _crc_files(sink.table_dir) == []
+    assert _state(sink, spark) == want
+    report = sink.fsck(deep=True)
+    assert report["ok"], report["errors"]
 
 
 def test_no_success_markers_in_data_dirs(replayed):

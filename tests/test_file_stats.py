@@ -45,14 +45,15 @@ def _batch(spark, rows):
     )
 
 
-def _log(spark, sink, n=200, batches=3) -> None:
+def _log(spark, sink, n=200, batches=3, deletes=True) -> None:
     """``batches`` merges over ``n`` keys: inserts, then updates, with
-    every 7th key deleted in the last batch; ts spreads per key."""
+    every 7th key deleted in the last batch (updated instead without
+    ``deletes``); ts spreads per key."""
     for b in range(batches):
         last = b == batches - 1
         rows = [
             (
-                "D" if last and i % 7 == 0 else ("U" if b else "I"),
+                "D" if deletes and last and i % 7 == 0 else ("U" if b else "I"),
                 f"c{i:04d}", i % 5, "user", f"v{b}-{i}", None,
                 _ts(3600 * b + 7 * i), b * 10_000 + i, 0,
             )
@@ -270,6 +271,26 @@ def test_sorted_fold_launches_no_stats_job(spark, tmp_path):
     n_sorted = _jobs(spark, lambda: sorted_.compact(spark, sort=True))
     assert sorted_.key_stats() and not plain.key_stats()
     assert 0 < n_sorted <= n_plain + 1
+
+
+def test_fold_counts_tombstones_without_a_spark_job(spark, tmp_path):
+    """A fold reads the tombstone counts of the files it wrote from their
+    ``_deleted`` column on the driver: folding a log with deletes
+    launches as many jobs as folding the same log without them (a Spark
+    count over the written files added three)."""
+    sinks = {}
+    for deletes in (True, False):
+        sink = LocalSnapshotSink(
+            str(tmp_path / str(deletes)), num_buckets=2, compact_every=10**9
+        )
+        _log(spark, sink, deletes=deletes)
+        n = _jobs(spark, lambda: sink.compact(spark))
+        sinks[deletes] = (sink, n)
+    dead = {b: e["dead"] for b, e in sinks[True][0].manifest()["bucket_rows"].items()}
+    live = {b: e["dead"] for b, e in sinks[False][0].manifest()["bucket_rows"].items()}
+    assert dead == {b: d for b, (_, d) in _PINNED_BUCKET_ROWS.items()}
+    assert live == {"0": 0, "1": 0}
+    assert sinks[True][1] == sinks[False][1] > 0
 
 
 # ---------------------------------------- stripped or unreadable stats

@@ -3,8 +3,8 @@
 
 The CHECK TABLE an operator of a 100 TB table runs before trusting (or
 repairing) it: refs resolve, manifests/blobs parse, data files exist;
-``deep=True`` opens head parquet footers.  fsck never mutates — repair
-stays with vacuum_orphans/expire_snapshots.
+``deep=True`` opens head parquet footers and checks every page's CRC.
+fsck never mutates — repair stays with vacuum_orphans/expire_snapshots.
 """
 
 from __future__ import annotations
@@ -12,6 +12,8 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+
+import pytest
 
 from fetchez_spark.sinks.local_snapshot import LocalSnapshotSink
 
@@ -117,6 +119,46 @@ def test_deep_catches_truncated_parquet_that_shallow_misses(spark, tmp_path):
     deep = sink.fsck(deep=True)
     assert not deep["ok"]
     assert any("footer unreadable" in e and victim in e for e in deep["errors"])
+
+
+def _flip_page_byte(path: str, column: str) -> None:
+    """Flip the last byte of ``column``'s first column chunk: the tail of
+    its last data page's payload, covered by that page's header CRC."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    chunk = md.row_group(0).column(names.index(column))
+    start = (
+        chunk.dictionary_page_offset
+        if chunk.has_dictionary_page
+        else chunk.data_page_offset
+    )
+    with open(path, "r+b") as f:
+        f.seek(start + chunk.total_compressed_size - 1)
+        b = f.read(1)
+        f.seek(-1, os.SEEK_CUR)
+        f.write(bytes([b[0] ^ 0xFF]))
+
+
+def test_flipped_page_byte_fails_the_read_and_deep_fsck(spark, tmp_path):
+    sink = LocalSnapshotSink(str(tmp_path / "t"), num_buckets=4, cluster_deltas=False)
+    rows = [
+        (f"c{i % 9}", i, "user", f"text {i} " * 4, None, _ts(1), "I", i)
+        for i in range(300)
+    ]
+    sink.merge(_batch(spark, rows).coalesce(1), "b-0")
+    (victim,) = sink.delta_lists()["*"]
+    assert not os.path.exists(
+        os.path.join(os.path.dirname(victim), f".{os.path.basename(victim)}.crc")
+    ), "no sidecar: the page CRCs are the only guard"
+    _flip_page_byte(victim, "text")
+    with pytest.raises(Exception, match="CRC checksum verification failed"):
+        sink.read(spark).collect()
+    assert sink.fsck()["ok"]  # stat-only
+    deep = sink.fsck(deep=True)
+    assert not deep["ok"]
+    assert any(victim in e and "CRC" in e for e in deep["errors"]), deep["errors"]
 
 
 def test_expired_parent_is_a_warning(spark, tmp_path):

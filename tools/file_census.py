@@ -6,6 +6,11 @@ snapshot ``manifest`` files (``manifests/snap-*.json``), file-list
 blobs (``manifests/lists/list-*.json``), and ``other`` (VERSION, locks,
 catalog blobs, logs, ...).  Only the given directories are read.
 
+New engine writes leave no ``.crc`` sidecars: tables, exports, outboxes
+and streaming checkpoints bypass Hadoop's checksummed local filesystem,
+and parquet's page CRCs guard the data files.  The kind stays for
+directories written before that, which still carry one per file.
+
     python tools/file_census.py <dir> [<dir> ...]
     python tools/file_census.py --columns <dir> [<dir> ...]
     python tools/file_census.py --runs COL[,COL...] <dir> [<dir> ...]
